@@ -95,8 +95,9 @@ final case class LsdDb(spark: SparkSession, root: String) {
     graft.sources.SpatialWriter.spatialMeta(spark, s"$root/$name.parquet")
 
   /** Footprint-bounded read of a SpatialWriter cell-partitioned
-    * table: only the `cells` directories are scanned (the isin on the
-    * partition column becomes directory-level PartitionFilters —
+    * table: only the `cells` directories are listed and scanned
+    * ([[graft.sources.SpatialWriter.readCells]]; the isin on the
+    * partition column still shows as directory-level PartitionFilters —
     * LSD's bounds∩quadtree pruning), margin replicas are excluded,
     * and the result gets the same layout-column strip + ts
     * normalization as [[table]]. Advisory like the zone-map prunes:
@@ -108,8 +109,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
       s"table '$name' is not a SpatialWriter layout (no _SPATIAL " +
         "sidecar); footprint-bounded reads need the cell directories")
     // postProcess supplies the !is_margin filter and the layout strip
-    postProcess(spark.read.parquet(path)
-      .filter(org.apache.spark.sql.functions.col("cell").isin(cells: _*)))
+    postProcess(graft.sources.SpatialWriter.readCells(spark, path, cells))
   }
 
   /** (marginDeg, level) when `name` is a SpatialWriter layout written

@@ -556,8 +556,8 @@ object Joins {
     polygonOracleSql(polyVerts)) { (s, dir) =>
     val (path, level) = ensureSkyPartitionedCustomer(s, dir)
     val cells = graft.spatial.Footprint.polygonCells(polyVerts, level)
-    graft.sources.SpatialWriter.readPrimary(s, path)
-      .filter(col("cell").isin(cells: _*))
+    graft.sources.SpatialWriter.readCells(s, path, cells)
+      .filter(!col("is_margin"))
       .filter(graft.spatial.Footprint.polygon(col("lon"), col("lat"),
         polyVerts))
       .select("id", "lon", "lat")
@@ -593,8 +593,8 @@ object Joins {
     val (path, level) = ensureSkyPartitionedCustomer(s, dir)
     val cells = graft.spatial.Footprint.coneCells(coneLon, coneLat, coneR,
       level)
-    graft.sources.SpatialWriter.readPrimary(s, path)
-      .filter(col("cell").isin(cells: _*))
+    graft.sources.SpatialWriter.readCells(s, path, cells)
+      .filter(!col("is_margin"))
       .withColumn("dist_deg", Det.d6(graft.spatial.CrossMatch.distDeg(
         col("lon"), col("lat"), lit(coneLon), lit(coneLat))))
       .filter(col("dist_deg") <= coneR)

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * (see graft.streaming.StreamOps for the streaming wiring + tests).
   */
 object TimeWindows {
+  private val log =
+    org.slf4j.LoggerFactory.getLogger("graft.operators.TimeWindows")
 
   /** S1 — tumbling 1-hour window. Spark's window origin is the epoch;
     * 1-hour tumbling ≡ date_trunc('hour') in the oracle. */
@@ -143,10 +145,13 @@ object TimeWindows {
     // them on the RAM-backed /dev/shm when present — same files, same
     // semantics, no durability loss for a throwaway checkpoint.
     // Production streams pass a real (durable, fast) checkpoint via
-    // StreamOps and are unaffected.
+    // StreamOps and are unaffected. Local mode only: on a cluster the
+    // executors write state under the checkpoint path, and a path on
+    // the DRIVER's RAM disk is not shared storage.
     val shm = java.nio.file.Paths.get("/dev/shm")
     val ckpt =
-      if (java.nio.file.Files.isDirectory(shm) &&
+      if (s.sparkContext.isLocal &&
+          java.nio.file.Files.isDirectory(shm) &&
           java.nio.file.Files.isWritable(shm))
         Some(s"/dev/shm/graft_ckpt_$name")
       else None
@@ -170,7 +175,10 @@ object TimeWindows {
           java.nio.file.Files.deleteIfExists(p)
         }
         try rm(java.nio.file.Paths.get(c))
-        catch { case _: Throwable => () }
+        catch {
+          case scala.util.control.NonFatal(e) => log.warn(
+            s"replay checkpoint $c not removed, it stays on disk: $e")
+        }
       }
     }
     // the analyzed DataFrame pins the sink's plan; dropping the temp

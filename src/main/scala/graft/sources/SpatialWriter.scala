@@ -222,6 +222,17 @@ object SpatialWriter {
     }
   }
 
+  /** Task count of a directory-layout write: the session's shuffle
+    * partitions, passed EXPLICITLY. A bare `repartition(key)` is an
+    * AQE-coalescable exchange, and a layout's bytes are small next to
+    * its file count — AQE folded the 128-cell sky layout into ONE task
+    * that wrote every `cell=` file serially. The explicit count pins
+    * the exchange (REPARTITION_BY_NUM, as in [[graft.LsdDb.spread]]),
+    * and hash partitioning still sends each key to one task, so each
+    * directory still gets exactly one file. */
+  private[sources] def writeTasks(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** Write `df` DIRECTORY-partitioned by SkyPix cell of (lonCol,
     * latCol) — one directory per cell, for footprint queries that
     * prune cells at the file-index level (`PartitionFilters`). Use a
@@ -242,9 +253,13 @@ object SpatialWriter {
             mode: SaveMode = SaveMode.Overwrite): Unit = {
     requireAppendCompatible(df.sparkSession, path, lonCol, latCol, level,
       mode, margin)
+    // the sort LEADS with the partition key: a planned write needs
+    // its input ordered by `cell`, and when the child's order does not
+    // start with it Spark inserts Sort(cell) on top and drops a bare
+    // (lat, lon) sort below as redundant — files came out unsorted
     withCellColumns(df, lonCol, latCol, level, margin)
-      .repartition(col("cell"))
-      .sortWithinPartitions(latCol, lonCol)
+      .repartition(writeTasks(df), col("cell"))
+      .sortWithinPartitions(col("cell"), col(latCol), col(lonCol))
       .write.mode(mode)
       .partitionBy("cell")
       .parquet(path)
@@ -253,27 +268,57 @@ object SpatialWriter {
   }
 
   /** Write `df` as PLAIN parquet clustered by cell (`cell` stays a
-    * data column): `numFiles` range partitions sorted by cell, so each
-    * cell's rows are contiguous in one file and row-group min/max
-    * stats still skip by cell — without the directory-per-cell layout
-    * whose listing/open overhead at fine levels (thousands of ~KB
-    * files) costs more than it saves. This is the right layout when
+    * data column): range partitions sorted by cell, their count sized
+    * from the data by AQE (a few hundred rows make one file, not a
+    * fixed count of nearly empty ones), so each cell's rows are
+    * contiguous in one file and row-group min/max stats still skip by
+    * cell — without the directory-per-cell layout whose listing/open
+    * overhead at fine levels (thousands of ~KB files) costs more than
+    * it saves. This is the right layout when
     * `cell` is consumed as an equi-JOIN key (margin-cache cross-match,
     * IVF buckets): the join hashes on the column and never needs
     * directories. */
   def writeClustered(df: DataFrame, lonCol: String, latCol: String,
                      level: Int, path: String,
-                     margin: Option[Double] = None, numFiles: Int = 32,
+                     margin: Option[Double] = None,
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
     requireAppendCompatible(df.sparkSession, path, lonCol, latCol, level,
       mode, margin)
     withCellColumns(df, lonCol, latCol, level, margin)
-      .repartitionByRange(numFiles, col("cell"))
+      .repartitionByRange(col("cell"))
       .sortWithinPartitions(col("cell"), col(latCol), col(lonCol))
       .write.mode(mode)
       .parquet(path)
     writeSpatialMeta(df.sparkSession, path, lonCol, latCol, level)
     margin.foreach(m => writeMarginMeta(df.sparkSession, path, m, level))
+  }
+
+  /** Footprint read of a [[write]] layout: only the `cell=`
+    * directories of `cells`, margin replicas included. The layout root
+    * is listed ONCE on the driver and only the requested directories
+    * that exist are handed to the reader (`basePath` keeps `cell` a
+    * partition column). A read of the root would list EVERY cell
+    * directory first — past Spark's parallel-discovery threshold (32
+    * paths) as a job with one task per directory — and report every
+    * file in `inputFiles`, just to keep the few the bound touches.
+    * The `cell IN (…)` filter stays, so the plan still shows
+    * `PartitionFilters`, and an empty selection reads one existing
+    * directory through it for the schema. */
+  def readCells(spark: org.apache.spark.sql.SparkSession, path: String,
+                cells: Seq[Long]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(root).toSeq.filter(st =>
+      st.isDirectory && st.getPath.getName.startsWith("cell="))
+      .map(_.getPath)
+    val wanted = cells.map(c => s"cell=$c").toSet
+    val picked = dirs.filter(d => wanted(d.getName))
+    val scan =
+      if (dirs.isEmpty) spark.read.parquet(path)
+      else spark.read.option("basePath", path)
+        .parquet((if (picked.isEmpty) dirs.take(1) else picked)
+          .map(_.toString): _*)
+    scan.filter(col("cell").isin(cells: _*))
   }
 
   /** Read back a cell-partitioned catalog, excluding margin replicas

@@ -54,10 +54,13 @@ object TimeWriter {
         s"appending to $path with temporal layout ($tsCol, $granularity)" +
           s" but it was written with ($t, $g) — mixed bucket keys would" +
           " make bounded reads silently drop rows; rewrite the layout") }
+    // explicit task count and a key-first sort: the SpatialWriter.write
+    // rules (an AQE-coalesced one-task write; a planned write that
+    // drops a sort not led by the partition key)
     df.withColumn("t_bucket",
         date_trunc(granularity, col(tsCol)).cast("date"))
-      .repartition(col("t_bucket"))
-      .sortWithinPartitions(tsCol)
+      .repartition(SpatialWriter.writeTasks(df), col("t_bucket"))
+      .sortWithinPartitions(col("t_bucket"), col(tsCol))
       .write.mode(mode)
       .partitionBy("t_bucket")
       .parquet(path)

@@ -70,7 +70,7 @@ object ScaleSmoke {
       dets.write.mode("overwrite").parquet(s"$qlRootMargin/dets.parquet")
       graft.sources.SpatialWriter.writeClustered(objsNamed, "olon", "olat",
         qlLevel, s"$qlRootMargin/objects_sky.parquet",
-        margin = Some(qlNeed), numFiles = 64)
+        margin = Some(qlNeed))
       graft.ql.JoinRegistry.declareSpatial(spark, qlRootPlain, qlRel)
       graft.ql.JoinRegistry.declareSpatial(spark, qlRootMargin, qlRel)
       s"level=$qlLevel margin=$qlNeed"
@@ -134,7 +134,7 @@ object ScaleSmoke {
         .parquet(s"$qlRootPlain/objects5_sky.parquet")
       graft.sources.SpatialWriter.writeClustered(objs5, "olon", "olat",
         qlLevel, s"$qlRootMargin/objects5_sky.parquet",
-        margin = Some(qlNeed), numFiles = 64)
+        margin = Some(qlNeed))
       val text5 = "SELECT det_id, obj_id, _DIST FROM dets5, objects5_sky"
       // at level 11 (0.176° cells) the 0.2° field is ~4 cells of ~25k
       // driving rows each; threshold 10k makes exactly those cells hot

@@ -30,6 +30,21 @@ class SpatialWriterSpec extends SpecBase {
     assert(dirs.nonEmpty && dirs.length <= 64)
   }
 
+  test("partitioned write: one file per cell, rows sorted by (lat, lon)") {
+    val path = Files.createTempDirectory("graft_swo").toString + "/cat"
+    SpatialWriter.write(cat, "lon", "lat", level = 3, path = path,
+      margin = Some(0.5))
+    val dirs = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("cell="))
+    assert(dirs.length > 4)
+    dirs.foreach(d => assert(
+      d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+      s"${d.getName} must hold exactly one data file"))
+    val bad = SortedFiles.unsorted(spark, path, col("lat"), col("lon"))
+    assert(bad.isEmpty, s"${bad.length} of ${dirs.length} cell files " +
+      s"not sorted by (lat, lon):\n${bad.take(5).mkString("\n")}")
+  }
+
   test("margin replication: primaries unique, margins flagged, probe view complete") {
     val path = Files.createTempDirectory("graft_swm").toString + "/cat"
     SpatialWriter.write(cat, "lon", "lat", level = 3, path = path,
@@ -143,13 +158,14 @@ class SpatialWriterSpec extends SpecBase {
   test("clustered write: plain parquet, no cell dirs, bounded file count") {
     val path = Files.createTempDirectory("graft_swc").toString + "/cat"
     SpatialWriter.writeClustered(cat, "lon", "lat", level = 6, path = path,
-      margin = Some(0.2), numFiles = 8)
+      margin = Some(0.2))
     // no directory-per-cell: the layout is flat files
     val entries = new java.io.File(path).listFiles()
     assert(!entries.exists(f => f.isDirectory && f.getName.startsWith("cell=")),
       "clustered layout must not produce cell= directories")
     val parts = entries.count(_.getName.endsWith(".parquet"))
-    assert(parts <= 8, s"expected <= 8 data files, got $parts")
+    val bound = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts <= bound, s"expected <= $bound data files, got $parts")
     // cell survives as a data column, primaries round-trip completely
     val back = SpatialWriter.readPrimary(spark, path)
     assert(back.columns.contains("cell"))
@@ -157,5 +173,25 @@ class SpatialWriterSpec extends SpecBase {
     val misplaced = back.filter(
       SkyPix.cell(col("lon"), col("lat"), 6) =!= col("cell")).count()
     assert(misplaced == 0)
+  }
+}
+
+/** Data files of a parquet layout whose rows, in file order, are not
+  * ascending in `keys` (each key must evaluate to a double). */
+object SortedFiles {
+  def unsorted(spark: org.apache.spark.sql.SparkSession, path: String,
+               keys: org.apache.spark.sql.Column*): Seq[String] = {
+    val rows = spark.read.parquet(path)
+      .select(col("_metadata.file_path") +: col("_metadata.row_index") +:
+        keys.map(_.cast("double")): _*)
+      .collect()
+    def le(a: org.apache.spark.sql.Row,
+           b: org.apache.spark.sql.Row): Boolean =
+      (2 until a.length).map(i => a.getDouble(i).compare(b.getDouble(i)))
+        .find(_ != 0).forall(_ < 0)
+    rows.groupBy(_.getString(0)).toSeq.collect {
+      case (file, rs) if !rs.sortBy(_.getLong(1)).sliding(2)
+        .forall(p => p.length < 2 || le(p(0), p(1))) => file
+    }.sorted
   }
 }

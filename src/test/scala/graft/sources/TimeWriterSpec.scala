@@ -27,6 +27,27 @@ class TimeWriterSpec extends SpecBase {
     assert(plan.contains("PartitionFilters") && plan.contains("t_bucket"))
   }
 
+  test("day-partitioned write: one file per bucket, rows sorted by ts") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_tws").toString + "/events"
+    // ts drawn in random order over ten days, so only the write's own
+    // sort can leave a bucket's file in ts order
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val rnd = new scala.util.Random(7)
+    val events = (0L until 2000L).map(i => (i, new java.sql.Timestamp(
+      t0 + (rnd.nextDouble() * 10 * 86400000L).toLong))).toDF("id", "ts")
+    TimeWriter.write(events, "ts", "day", path)
+    val dirs = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("t_bucket="))
+    assert(dirs.length >= 10)
+    dirs.foreach(d => assert(
+      d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+      s"${d.getName} must hold exactly one data file"))
+    val bad = SortedFiles.unsorted(spark, path, unix_micros(col("ts")))
+    assert(bad.isEmpty, s"${bad.length} of ${dirs.length} bucket files " +
+      s"not sorted by ts:\n${bad.take(5).mkString("\n")}")
+  }
+
   test("bucket boundary rows are not lost (lower bound = bucket of from)") {
     val path = Files.createTempDirectory("graft_tw2").toString + "/events"
     val events = LsdDb.table(spark, sfDir, "events")
