@@ -19,4 +19,33 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     specs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Every write-once layout builder, by name. Bench pre-builds them
+    * in this order before it times anything. */
+  def layouts: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+      Any)] = Seq(
+    "xmatch_margin_cache" -> Joins.ensureXmatchMarginCache,
+    "events_daily" -> Core.ensureTimePartitionedEvents,
+    "sky_customer" -> Joins.ensureSkyPartitionedCustomer,
+    "zorder_lineitem" -> Core.ensureZOrderLineitem,
+    "fits" -> Core.ensureFitsExport,
+    "fits_scaled" -> Core.ensureFitsScaledExport,
+    "fits_vla" -> Core.ensureFitsVlaExport,
+    "orc" -> Core.ensureOrcExport,
+    "json" -> Core.ensureJsonExport,
+    "schema_evolve" -> Core.ensureEvolvedExport,
+    "snapshot_events" -> Core.ensureSnapshotEvents,
+    "agg_state" -> Core.ensureAggState,
+    "ranged_snapshots" -> Core.ensureRangedSnapshotEvents,
+    "merged_snapshots" -> Core.ensureMergedSnapshotOrders,
+    "keyed_snapshots" -> Core.ensureKeyedSnapshotEvents,
+    "bucketed_tables" -> Joins.ensureBucketedTables,
+    "ann_index" -> VectorOps.ensureAnnLayout,
+    "bpe_artifact" -> PipelineOps.ensureBpeArtifact,
+    "ql_xmatch_db" -> Joins.ensureQlXmatchDb,
+    "ql_detections_db" -> Joins.ensureQlDetectionsDb,
+    "ql_survey_db" -> Joins.ensureQlSurveyDb,
+    "ql_margin_db" -> Joins.ensureQlMarginDb,
+    "ql_survey_margin_db" -> Joins.ensureQlSurveyMarginDb,
+    "ql_snap_margin_db" -> Joins.ensureQlSnapMarginDb)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.Det.{sql => D}
+import graft.sources.CacheKeys
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
@@ -49,21 +50,16 @@ object Core {
     * day buckets as directory partitions). Deterministic content, so
     * one materialization serves every Verify/Bench run in a JVM. */
   def ensureTimePartitionedEvents(s: org.apache.spark.sql.SparkSession,
-                                  dir: String): String = synchronized {
+                                  dir: String): String = {
     // leaf named `<root>/events_daily.parquet` — the db-root/table
     // shape LsdDb resolves, so time-BOUNDED QL queries share this one
     // write-once layout (the ensureQlBoundsDb pattern)
-    val root = graft.sources.CacheKeys.path(
-      "graft_events_daily", s"$dir/events.parquet")
-    val path = s"$root/events_daily.parquet"
-    // sidecar check too: _TEMPORAL lands AFTER Spark's _SUCCESS, and a
-    // crash in that window would otherwise leave a permanently
-    // "complete" layout every time-bounded read rejects (review r18)
-    if (!graft.sources.CacheKeys.isComplete(path) ||
-        graft.sources.TimeWriter.temporalMeta(s, path).isEmpty)
+    val root = CacheKeys.writeOnce("graft_events_daily",
+        s"$dir/events.parquet") { root =>
       graft.sources.TimeWriter.write(LsdDb.table(s, dir, "events"), "ts",
-        "day", path)
-    path
+        "day", s"$root/events_daily.parquet")
+    }
+    s"$root/events_daily.parquet"
   }
 
   /** SC2b — DIRECTORY-level partition pruning (not just row-group
@@ -116,17 +112,14 @@ object Core {
   }
 
   /** Write-once Z-order clustered lineitem layout on (l_orderkey,
-    * l_partkey) — completion keyed on the MANIFEST's _SUCCESS (it is
-    * written last, so a killed partial layout is redone). */
+    * l_partkey). */
   def ensureZOrderLineitem(s: org.apache.spark.sql.SparkSession,
-                           dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_zorder_lineitem", s"$dir/lineitem.parquet")
-    if (!graft.sources.CacheKeys.isComplete(s"$path/_zmanifest"))
+                           dir: String): String =
+    CacheKeys.writeOnce("graft_zorder_lineitem",
+        s"$dir/lineitem.parquet") { path =>
       graft.sources.ZOrderLayout.write(LsdDb.table(s, dir, "lineitem"),
         "l_orderkey", "l_partkey", path, files = 24)
-    path
-  }
+    }
 
   /** SC2c — MULTI-dimensional file skipping via a Z-order clustered
     * layout (sources/ZOrderLayout.scala): a box predicate on BOTH
@@ -192,24 +185,17 @@ object Core {
     * the reference's native catalog exchange format). Unlike the CSV
     * round-trip, FITS carries big-endian IEEE doubles, so the DOUBLE
     * columns round-trip bit-exactly and join the oracle check. */
-  /** Write-once FITS export of the lineitem subset (completion marker
-    * written AFTER the export so a killed partial write is redone, the
-    * same discipline as Spark's _SUCCESS). */
+  /** Write-once FITS export of the lineitem subset. */
   def ensureFitsExport(s: org.apache.spark.sql.SparkSession,
-                       dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_fits_roundtrip", s"$dir/lineitem.parquet")
-    val marker = new java.io.File(s"$tmp/_FITS_OK")
-    if (!marker.exists()) {
+                       dir: String): String =
+    CacheKeys.writeOnce("graft_fits_roundtrip",
+        s"$dir/lineitem.parquet") { tmp =>
       graft.sources.Fits.write(
         LsdDb.table(s, dir, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_quantity",
             "l_extendedprice", "l_returnflag", "l_linestatus"),
         tmp)
-      marker.createNewFile()
     }
-    tmp
-  }
 
   val qImportFits: QuerySpec = QuerySpec(
     "q_import_fits",
@@ -220,18 +206,15 @@ object Core {
       .orderBy("l_orderkey", "l_linenumber")
   }
 
-  /** Write-once scaled multi-HDU FITS export (same marker discipline
-    * as [[ensureFitsExport]]): a leading IMAGE extension plus a
-    * BINTABLE whose integer columns carry TSCALn/TZEROn — the
-    * heterogeneous external-catalog shape (offset int16, quantized
-    * int32, offset int64; all binary-exact so the round trip is
-    * lossless by construction). */
+  /** Write-once scaled multi-HDU FITS export: a leading IMAGE
+    * extension plus a BINTABLE whose integer columns carry
+    * TSCALn/TZEROn — the heterogeneous external-catalog shape (offset
+    * int16, quantized int32, offset int64; all binary-exact so the
+    * round trip is lossless by construction). */
   def ensureFitsScaledExport(s: org.apache.spark.sql.SparkSession,
-                             dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_fits_scaled", s"$dir/lineitem.parquet")
-    val marker = new java.io.File(s"$tmp/_FITS_OK")
-    if (!marker.exists()) {
+                             dir: String): String =
+    CacheKeys.writeOnce("graft_fits_scaled",
+        s"$dir/lineitem.parquet") { tmp =>
       graft.sources.Fits.writeScaled(
         LsdDb.table(s, dir, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_partkey",
@@ -244,10 +227,7 @@ object Core {
           "l_partkey" -> graft.sources.Fits.Scaled("K", 1.0, 2147483648.0),
           // quantized quarter-units: 2^-2 scale is binary-exact
           "l_quantity" -> graft.sources.Fits.Scaled("J", 0.25, 0.0)))
-      marker.createNewFile()
     }
-    tmp
-  }
 
   /** SC3e — FITS import, survey-catalog shape: multi-HDU file (image
     * extension skipped by data-size arithmetic) with TSCAL/TZERO
@@ -268,23 +248,18 @@ object Core {
       .orderBy("l_orderkey", "l_linenumber")
   }
 
-  /** Write-once VLA FITS export of the embeddings table (same marker
-    * discipline): `embedding` rides the FITS variable-length-array
+  /** Write-once VLA FITS export of the embeddings table:
+    * `embedding` rides the FITS variable-length-array
     * heap ('PE' descriptors — the format survey lightcurves and
     * per-object detection lists actually ship in). */
   def ensureFitsVlaExport(s: org.apache.spark.sql.SparkSession,
-                          dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_fits_vla", s"$dir/embeddings.parquet")
-    val marker = new java.io.File(s"$tmp/_FITS_OK")
-    if (!marker.exists()) {
+                          dir: String): String =
+    CacheKeys.writeOnce("graft_fits_vla",
+        s"$dir/embeddings.parquet") { tmp =>
       graft.sources.Fits.write(
         LsdDb.table(s, dir, "embeddings").select("vec_id", "embedding"),
         tmp)
-      marker.createNewFile()
     }
-    tmp
-  }
 
   /** SC3f — FITS import, variable-length arrays: the embeddings
     * round-trip through the BINTABLE heap ('PE(max)' descriptors,
@@ -309,22 +284,14 @@ object Core {
     * the Snapshots MVCC-lite layout — so snapshot 2 is a genuine
     * historical version containing exactly the first two batches. */
   def ensureSnapshotEvents(s: org.apache.spark.sql.SparkSession,
-                           dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_snapshots", s"$dir/events.parquet")
-    if (graft.sources.Snapshots.committed(s, path).size < 3) {
-      // wipe torn prior state (no commit log → readers never saw it)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+                           dir: String): String =
+    CacheKeys.writeOnce("graft_snapshots", s"$dir/events.parquet") { path =>
       val ev = LsdDb.table(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       for (r <- 0L to 2L)
         graft.sources.Snapshots.append(
           ev.filter(col("event_id") % 3 === r), path)
     }
-    path
-  }
 
   /** SC4b / §1.1 snapshots — TIME TRAVEL read: the table as of
     * snapshot 2 of 3. The oracle is the semantic content of the first
@@ -366,22 +333,16 @@ object Core {
     * incremental pipeline persists instead of re-reading history.
     * Partials stay DECIMAL so the later merge is exact. */
   def ensureAggState(s: org.apache.spark.sql.SparkSession,
-                     dir: String): String = synchronized {
-    val events = ensureSnapshotEvents(s, dir)
-    val path = graft.sources.CacheKeys.path(
-      "graft_agg_state", s"$dir/events.parquet")
-    val marker = new java.io.File(s"$path/_STATE_OK")
-    if (!marker.exists()) {
-      graft.sources.Snapshots.read(s, events, asOf = Some(2L))
+                     dir: String): String =
+    CacheKeys.writeOnce("graft_agg_state", s"$dir/events.parquet") { path =>
+      graft.sources.Snapshots
+        .read(s, ensureSnapshotEvents(s, dir), asOf = Some(2L))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(graft.functions.Det.M)).as("tot"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/state")
-      marker.createNewFile()
     }
-    path
-  }
 
   /** SC4e / §1.1 — INCREMENTAL AGGREGATE MAINTENANCE: the full
     * per-type totals computed as merge(materialized agg state as of
@@ -419,13 +380,9 @@ object Core {
     * snap 1 upserts every order (key, price), snap 2 re-upserts the
     * %7 keys at doubled price, snap 3 tombstones the %11 keys. */
   def ensureMergedSnapshotOrders(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_snapshots_merge", s"$dir/orders.parquet")
-    if (graft.sources.Snapshots.committed(s, path).size < 3) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+                                 dir: String): String =
+    CacheKeys.writeOnce("graft_snapshots_merge",
+        s"$dir/orders.parquet") { path =>
       val o = LsdDb.table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice").as("price"))
       graft.sources.Snapshots.upsert(o, path)
@@ -435,8 +392,6 @@ object Core {
       graft.sources.Snapshots.delete(
         o.filter(col("o_orderkey") % 11 === 0).select("o_orderkey"), path)
     }
-    path
-  }
 
   /** SC4d / §1.1 snapshots — MERGE-ON-READ upserts: the table state
     * after an upsert batch (price correction on the %7 keys) and a
@@ -464,13 +419,9 @@ object Core {
     * natural shape of survey ingest, where appends arrive per
     * epoch/run and their key ranges barely overlap. */
   def ensureRangedSnapshotEvents(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_snapshots_ranged", s"$dir/events.parquet")
-    if (graft.sources.Snapshots.committed(s, path).size < 4) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+                                 dir: String): String =
+    CacheKeys.writeOnce("graft_snapshots_ranged",
+        s"$dir/events.parquet") { path =>
       val ev = LsdDb.table(s, dir, "events")
         .select("event_id", "event_type", "value")
       val m = ev.agg(max("event_id")).head.getLong(0)
@@ -483,8 +434,6 @@ object Core {
           statsCols = Seq("event_id"))
       }
     }
-    path
-  }
 
   /** SC4e / §1.1 snapshots — ZONE-MAP-PRUNED range read: the top-half
     * event_id range over the 4-append ranged table. The max id and
@@ -520,13 +469,9 @@ object Core {
     * each append's bounded key SET can, via the commit-log Bloom
     * filters. The natural shape of per-source/per-shard ingest. */
   def ensureKeyedSnapshotEvents(s: org.apache.spark.sql.SparkSession,
-                                dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_snapshots_keyed", s"$dir/events.parquet")
-    if (graft.sources.Snapshots.committed(s, path).size < 4) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+                                dir: String): String =
+    CacheKeys.writeOnce("graft_snapshots_keyed",
+        s"$dir/events.parquet") { path =>
       val ev = LsdDb.table(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       for (i <- 0L until 4L)
@@ -534,8 +479,6 @@ object Core {
           ev.filter(col("user_id") % 4 === i), path,
           statsCols = Seq("user_id"), bloomCols = Seq("user_id"))
     }
-    path
-  }
 
   /** SC4f / §1.1 snapshots — BLOOM-PRUNED point lookup: one object's
     * full event history over the 4-append keyed table. The probed key
@@ -569,16 +512,14 @@ object Core {
     * losslessly, so the double columns join the oracle check. */
   /** Write-once ORC export of the lineitem subset. */
   def ensureOrcExport(s: org.apache.spark.sql.SparkSession,
-                      dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_orc_roundtrip", s"$dir/lineitem.parquet")
-    if (!graft.sources.CacheKeys.isComplete(tmp))
+                      dir: String): String =
+    CacheKeys.writeOnce("graft_orc_roundtrip",
+        s"$dir/lineitem.parquet") { tmp =>
       LsdDb.table(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice", "l_returnflag", "l_linestatus")
         .write.mode("overwrite").orc(tmp)
-    tmp
-  }
+    }
 
   val qImportOrc: QuerySpec = QuerySpec(
     "q_import_orc",
@@ -819,16 +760,14 @@ object Core {
     * columns only — JSON text round-trips those exactly; doubles go
     * through the FITS/ORC paths, which carry IEEE bits). */
   def ensureJsonExport(s: org.apache.spark.sql.SparkSession,
-                       dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_json_roundtrip", s"$dir/lineitem.parquet")
-    if (!graft.sources.CacheKeys.isComplete(tmp))
+                       dir: String): String =
+    CacheKeys.writeOnce("graft_json_roundtrip",
+        s"$dir/lineitem.parquet") { tmp =>
       LsdDb.table(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_returnflag",
           "l_linestatus")
         .write.mode("overwrite").json(tmp)
-    tmp
-  }
+    }
 
   /** SC3d — bulk import via JSON lines (the third text interchange
     * format next to CSV and FITS/ORC: the shape crawl dumps and API
@@ -851,10 +790,9 @@ object Core {
     * column (odd keys) — the schema-widening every long-lived table
     * undergoes. */
   def ensureEvolvedExport(s: org.apache.spark.sql.SparkSession,
-                          dir: String): String = synchronized {
-    val tmp = graft.sources.CacheKeys.path(
-      "graft_schema_evolve", s"$dir/lineitem.parquet")
-    if (!graft.sources.CacheKeys.isComplete(tmp)) {
+                          dir: String): String =
+    CacheKeys.writeOnce("graft_schema_evolve",
+        s"$dir/lineitem.parquet") { tmp =>
       val li = LsdDb.table(s, dir, "lineitem")
       li.filter(col("l_orderkey") % 2 === 0)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
@@ -864,8 +802,6 @@ object Core {
           "l_discount")
         .write.mode("overwrite").parquet(s"$tmp/gen=2")
     }
-    tmp
-  }
 
   /** SC3e — schema-evolution read: mergeSchema unions the two
     * generations' physical schemas, so generation-1 rows surface the

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.Det.{sql => D}
+import graft.sources.CacheKeys
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -399,14 +400,10 @@ object Joins {
     * directories whose listing overhead made the cached path slower
     * than the query-time explode it exists to beat. */
   def ensureXmatchMarginCache(s: org.apache.spark.sql.SparkSession,
-                              dir: String): (String, Int) = synchronized {
+                              dir: String): (String, Int) = {
     val level = graft.spatial.CrossMatch.levelFor(1.0, xmatchCapLat)
-    val path = graft.sources.CacheKeys.path(
-      s"graft_margin_cache_l$level", s"$dir/supplier.parquet")
-    // rebuild if absent OR written before the _MARGIN sidecar existed
-    // (requireMargin below rejects un-annotated layouts)
-    if (!graft.sources.CacheKeys.isComplete(path) ||
-        graft.sources.SpatialWriter.marginMeta(s, path).isEmpty) {
+    val path = CacheKeys.writeOnce(s"graft_margin_cache_l$level",
+        s"$dir/supplier.parquet") { path =>
       val b = skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
         "b_id", "b_lon", "b_lat")
       graft.sources.SpatialWriter.writeClustered(b, "b_lon", "b_lat", level,
@@ -519,27 +516,21 @@ object Joins {
     * substrate for footprint-pruned scans. Content-fingerprint keyed
     * like the other write-once layouts. */
   def ensureSkyPartitionedCustomer(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): (String, Int) = synchronized {
+                                   dir: String): (String, Int) = {
     // the layout lives at `<cache-root>/customer_sky.parquet` — the
     // `<dbRoot>/<table>.parquet` shape LsdDb resolves — so ONE
     // write-once layout serves both the DataFrame footprint queries
     // (path consumers) and the bounded-QL db root (ensureQlBoundsDb
     // returns the parent); review r18 removed the byte-identical
     // second copy the QL path used to build.
-    val root = graft.sources.CacheKeys.path(
-      s"graft_customer_sky_l$skyLayoutLevel", s"$dir/customer.parquet")
-    val path = s"$root/customer_sky.parquet"
-    // sidecar check too: _SPATIAL lands AFTER Spark's _SUCCESS (an
-    // Overwrite write deletes the dir, so the sidecar can't go first),
-    // and a crash in that window would otherwise leave a permanently
-    // "complete" layout every bounded read rejects (review r18)
-    if (!graft.sources.CacheKeys.isComplete(path) ||
-        graft.sources.SpatialWriter.spatialMeta(s, path).isEmpty) {
+    val root = CacheKeys.writeOnce(s"graft_customer_sky_l$skyLayoutLevel",
+        s"$dir/customer.parquet") { root =>
       val c = skyFrom(LsdDb.table(s, dir, "customer"), "c_custkey",
         "id", "lon", "lat")
-      graft.sources.SpatialWriter.write(c, "lon", "lat", skyLayoutLevel, path)
+      graft.sources.SpatialWriter.write(c, "lon", "lat", skyLayoutLevel,
+        s"$root/customer_sky.parquet")
     }
-    (path, skyLayoutLevel)
+    (s"$root/customer_sky.parquet", skyLayoutLevel)
   }
 
   /** SC2c — the polygon footprint as a PRUNED scan: the same exact
@@ -721,38 +712,6 @@ object Joins {
       graft.spatial.Bounds.Polygon(qlPolyVerts))
   }
 
-  /** Write-once QL database builder — the ONE shape behind every
-    * ensureQl*Db (4 copies before the r19 verdict asked for the
-    * factoring): a fingerprint-keyed root (CacheKeys — keyed on the
-    * WHOLE sf dir when more than one source table feeds the db, the
-    * ensureQlSurveyDb rule: a single-source key would serve a stale
-    * sibling when the other source regenerates), ONE `synchronized`
-    * build section (bench and verify share the process — correct
-    * under their single-process contract), per-table completeness =
-    * `_SUCCESS` AND the layout sidecar when one is expected (sidecars
-    * land after Spark's commit), and relations re-declared
-    * idempotently on every call (JoinRegistry upserts). */
-  private def ensureDb(tag: String, key: String)
-                      (tables: (String, String => Boolean,
-                        String => Unit)*)
-                      (declare: String => Unit): String = synchronized {
-    val root = graft.sources.CacheKeys.path(tag, key)
-    for ((name, complete, build) <- tables) {
-      val p = s"$root/$name.parquet"
-      if (!complete(p)) build(p)
-    }
-    declare(root)
-    root
-  }
-
-  /** Standard completeness of a parquet dataset under [[ensureDb]]:
-    * Spark's `_SUCCESS` marker AND the expected layout sidecar
-    * (sidecars land after the commit). Snapshot tables use their
-    * commit log instead — the log IS the completion protocol. */
-  private def pq(extra: String => Boolean = _ => true)
-               (p: String): Boolean =
-    graft.sources.CacheKeys.isComplete(p) && extra(p)
-
   /** Events lifted onto the synthetic sky lattice — the detection
     * table every QL survey db stores (optionally keeping `ts` for the
     * time-bound substrates). */
@@ -770,12 +729,10 @@ object Joins {
     * t_bucket)` composition, exercised at the writer level). */
   private[graft] def ensureQlDetectionsDb(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureDb("graft_ql_det_db", s"$dir/events.parquet")(
-      ("detections",
-        pq(p => graft.sources.SpatialWriter.spatialMeta(s, p).isDefined),
-        p => graft.sources.SpatialWriter.write(
-          skyDetections(s, dir, "ts"), "lon", "lat", skyLayoutLevel, p))
-    )(_ => ())
+    CacheKeys.writeOnce("graft_ql_det_db", s"$dir/events.parquet") { root =>
+      graft.sources.SpatialWriter.write(skyDetections(s, dir, "ts"),
+        "lon", "lat", skyLayoutLevel, s"$root/detections.parquet")
+    }
 
   /** SC2f4/QL — the (SPACE, TIME) bounds PAIR on a detection table:
     * the reference's bread-and-butter multi-epoch query ("this patch
@@ -819,15 +776,13 @@ object Joins {
     * tables merely rebuilds a small cache. */
   private[graft] def ensureQlSurveyDb(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureDb("graft_ql_survey_db", dir)(
-      ("detections",
-        pq(p => graft.sources.SpatialWriter.spatialMeta(s, p).isDefined),
-        p => graft.sources.SpatialWriter.write(
-          skyDetections(s, dir, "ts"), "lon", "lat", skyLayoutLevel, p)),
-      ("objects", pq(),
-        p => skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
-          "obj_id", "olon", "olat").write.mode("overwrite").parquet(p))
-    )(_ => ())
+    CacheKeys.writeOnce("graft_ql_survey_db", dir) { root =>
+      graft.sources.SpatialWriter.write(skyDetections(s, dir, "ts"),
+        "lon", "lat", skyLayoutLevel, s"$root/detections.parquet")
+      skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
+        "obj_id", "olon", "olat")
+        .write.mode("overwrite").parquet(s"$root/objects.parquet")
+    }
 
   /** J6/QL(overrides) — PER-QUERY MATCH PARAMETERS: the FROM item's
     * `(nmax=…, dmax=…)` override the declared relation's defaults for
@@ -912,14 +867,14 @@ object Joins {
   private[graft] def ensureQlXmatchDb(
       s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    ensureDb("graft_ql_xmatch_db", dir)(
-      ("orders_sky", pq(),
-        p => skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
-          "oid", "olon", "olat").write.mode("overwrite").parquet(p)),
-      ("supplier_sky", pq(),
-        p => skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
-          "sid", "slon", "slat").write.mode("overwrite").parquet(p))
-    )(_ => ())
+    CacheKeys.writeOnce("graft_ql_xmatch_db", dir) { root =>
+      skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
+        "oid", "olon", "olat")
+        .write.mode("overwrite").parquet(s"$root/orders_sky.parquet")
+      skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
+        "sid", "slon", "slat")
+        .write.mode("overwrite").parquet(s"$root/supplier_sky.parquet")
+    }
 
   /** Shared DuckDB relation for the QL xmatch oracles: every pair's
     * d6-snapped haversine on the oid/sid sky projections. Cut radius
@@ -1015,21 +970,19 @@ object Joins {
     * fingerprint (two source tables — the ensureQlSurveyDb rule). */
   private[graft] def ensureQlSurveyMarginDb(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureDb("graft_ql_survey_mdb", dir)(
-      ("detections",
-        pq(p => graft.sources.SpatialWriter.spatialMeta(s, p).isDefined),
-        p => graft.sources.SpatialWriter.write(
-          skyDetections(s, dir), "lon", "lat", skyLayoutLevel, p)),
-      ("objects",
-        pq(p => graft.sources.SpatialWriter.marginMeta(s, p).isDefined),
-        p => graft.sources.SpatialWriter.writeClustered(
-          skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
-            "obj_id", "olon", "olat"),
-          "olon", "olat", skyLayoutLevel, p, margin = Some(1.0)))
-    )(root => graft.ql.JoinRegistry.declareSpatial(s, root,
-      graft.ql.SpatialJoinDef("detections", "id", "lon", "lat",
-        "objects", "obj_id", "olon", "olat",
-        radiusDeg = 0.2468, nmax = 1, snapD6 = true)))
+    CacheKeys.writeOnce("graft_ql_survey_mdb", dir) { root =>
+      graft.sources.SpatialWriter.write(skyDetections(s, dir),
+        "lon", "lat", skyLayoutLevel, s"$root/detections.parquet")
+      graft.sources.SpatialWriter.writeClustered(
+        skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
+          "obj_id", "olon", "olat"),
+        "olon", "olat", skyLayoutLevel, s"$root/objects.parquet",
+        margin = Some(1.0))
+      graft.ql.JoinRegistry.declareSpatial(s, root,
+        graft.ql.SpatialJoinDef("detections", "id", "lon", "lat",
+          "objects", "obj_id", "olon", "olat",
+          radiusDeg = 0.2468, nmax = 1, snapD6 = true))
+    }
 
   /** J6h/QL — THE FULL LSD UX IN ONE ORACLE-GATED QUERY: a cone-
     * bounded survey aggregation over a STORED database whose
@@ -1089,20 +1042,20 @@ object Joins {
     * overhead for pruning this query never does. */
   private[graft] def ensureQlMarginDb(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureDb("graft_ql_margin_db", dir)(
-      ("orders_sky", pq(),
-        p => skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
-          "oid", "olon", "olat").write.mode("overwrite").parquet(p)),
-      ("supplier_sky",
-        pq(p => graft.sources.SpatialWriter.marginMeta(s, p).isDefined),
-        p => graft.sources.SpatialWriter.writeClustered(
-          skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
-            "sid", "slon", "slat"),
-          "slon", "slat", skyLayoutLevel, p, margin = Some(1.0)))
-    )(root => graft.ql.JoinRegistry.declareSpatial(s, root,
-      graft.ql.SpatialJoinDef("orders_sky", "oid", "olon", "olat",
-        "supplier_sky", "sid", "slon", "slat",
-        radiusDeg = 0.7939, nmax = 2, snapD6 = true)))
+    CacheKeys.writeOnce("graft_ql_margin_db", dir) { root =>
+      skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
+        "oid", "olon", "olat")
+        .write.mode("overwrite").parquet(s"$root/orders_sky.parquet")
+      graft.sources.SpatialWriter.writeClustered(
+        skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
+          "sid", "slon", "slat"),
+        "slon", "slat", skyLayoutLevel, s"$root/supplier_sky.parquet",
+        margin = Some(1.0))
+      graft.ql.JoinRegistry.declareSpatial(s, root,
+        graft.ql.SpatialJoinDef("orders_sky", "oid", "olon", "olat",
+          "supplier_sky", "sid", "slon", "slat",
+          radiusDeg = 0.7939, nmax = 2, snapD6 = true))
+    }
 
   /** J6/QL(margin) — the DECLARED QL xmatch routed through the STORED
     * margin cache: `FROM orders_sky, supplier_sky` where supplier_sky
@@ -1145,42 +1098,24 @@ object Joins {
     * (distinct from every sibling's orders/events driving sets). */
   private[graft] def ensureQlSnapMarginDb(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureDb("graft_ql_snapmdb", dir)(
-      ("dets", pq(),
-        p => skyFrom(LsdDb.table(s, dir, "customer"), "c_custkey",
-          "cid", "clon", "clat").write.mode("overwrite").parquet(p)),
-      ("objects",
-        // a snapshot table's commit log IS its completion protocol
-        // (torn writes are invisible); exactly 2 committed appends
-        p => graft.sources.Snapshots.entries(s, p).length == 2,
-        p => {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(p), s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(p), true)
-          val objs = skyFrom(LsdDb.table(s, dir, "supplier"),
-            "s_suppkey", "obj_id", "olon", "olat")
-          graft.sources.Snapshots.append(
-            objs.filter(col("obj_id") % 3 === 0), p)
-          graft.sources.Snapshots.append(
-            objs.filter(col("obj_id") % 3 =!= 0), p)
-        }),
-      ("_margincache/objects",
-        p => graft.sources.CacheKeys.isComplete(p) &&
-          graft.sources.SpatialWriter.marginSourceSnap(s, p)
-            .contains(2L),
-        // the db root is the path minus the cache suffix — re-deriving
-        // it via CacheKeys.path would re-digest the (mtime-sensitive)
-        // source dir and could diverge from the root whose
-        // completeness was just checked (review r20)
-        p => graft.sources.MarginCache.build(s,
-          p.stripSuffix(s"/${graft.sources.MarginCache.CacheDir}" +
-            "/objects.parquet"),
-          "objects", "olon", "olat", skyLayoutLevel, 1.0,
-          clustered = true, fromSnapshot = Some(None)))
-    )(root => graft.ql.JoinRegistry.declareSpatial(s, root,
-      graft.ql.SpatialJoinDef("dets", "cid", "clon", "clat",
-        "objects", "obj_id", "olon", "olat",
-        radiusDeg = 0.6827, nmax = 1, snapD6 = true)))
+    CacheKeys.writeOnce("graft_ql_snapmdb", dir) { root =>
+      skyFrom(LsdDb.table(s, dir, "customer"), "c_custkey",
+        "cid", "clon", "clat")
+        .write.mode("overwrite").parquet(s"$root/dets.parquet")
+      val objs = skyFrom(LsdDb.table(s, dir, "supplier"),
+        "s_suppkey", "obj_id", "olon", "olat")
+      graft.sources.Snapshots.append(
+        objs.filter(col("obj_id") % 3 === 0), s"$root/objects.parquet")
+      graft.sources.Snapshots.append(
+        objs.filter(col("obj_id") % 3 =!= 0), s"$root/objects.parquet")
+      graft.sources.MarginCache.build(s, root,
+        "objects", "olon", "olat", skyLayoutLevel, 1.0,
+        clustered = true, fromSnapshot = Some(None))
+      graft.ql.JoinRegistry.declareSpatial(s, root,
+        graft.ql.SpatialJoinDef("dets", "cid", "clon", "clat",
+          "objects", "obj_id", "olon", "olat",
+          radiusDeg = 0.6827, nmax = 1, snapD6 = true))
+    }
 
   /** J6s/QL — THE LIVE-CATALOG MARGIN ROUTE, oracle-gated: the object
     * catalog is a SNAPSHOT table (two committed appends), its margin
@@ -1371,9 +1306,9 @@ object Joins {
     * persists and this is write-once, full stop). */
   def ensureBucketedTables(s: org.apache.spark.sql.SparkSession,
                            dir: String): (String, String) = synchronized {
-    val cPath = graft.sources.CacheKeys.path(
+    val cPath = CacheKeys.path(
       "graft_bucket_customer", s"$dir/customer.parquet")
-    val oPath = graft.sources.CacheKeys.path(
+    val oPath = CacheKeys.path(
       "graft_bucket_orders", s"$dir/orders.parquet")
     val suffix = cPath.takeRight(16)
     val (cName, oName) =

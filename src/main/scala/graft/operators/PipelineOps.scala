@@ -1992,23 +1992,18 @@ object PipelineOps {
     * recompute everything from the corpus in DuckDB — keep
     * hash-matching; correctness never trusts the cache
     * (content-fingerprint keyed like every write-once layout). */
-  def ensureBpeArtifact(s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val root = graft.sources.CacheKeys.path(
-        s"graft_bpe_r$bpeRounds", s"$dir/documents.parquet")
-      val rulesPath = s"$root/rules.parquet"
-      val vocabPath = s"$root/vocab.parquet"
-      if (!graft.sources.CacheKeys.isComplete(rulesPath) ||
-          !graft.sources.CacheKeys.isComplete(vocabPath)) {
-        // one bpeChain evaluation feeds both writes (the rules frames
-        // and the vocab chain hang off the same checkpointed w0)
-        val (rules, vocab) = bpeChain(s, dir)
-        rulesFrame(rules)
-          .coalesce(1).write.mode("overwrite").parquet(rulesPath)
-        vocab.coalesce(1).write.mode("overwrite").parquet(vocabPath)
-      }
-      (rulesPath, vocabPath)
+  def ensureBpeArtifact(s: SparkSession, dir: String): (String, String) = {
+    val root = graft.sources.CacheKeys.writeOnce(s"graft_bpe_r$bpeRounds",
+        s"$dir/documents.parquet") { root =>
+      // one bpeChain evaluation feeds both writes (the rules frames
+      // and the vocab chain hang off the same checkpointed w0)
+      val (rules, vocab) = bpeChain(s, dir)
+      rulesFrame(rules)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/rules.parquet")
+      vocab.coalesce(1).write.mode("overwrite").parquet(s"$root/vocab.parquet")
     }
+    (s"$root/rules.parquet", s"$root/vocab.parquet")
+  }
 
   /** The trained rules in training order, driver-side — 8 (lhs, rhs)
     * pairs that the encode-side queries fold as LITERAL replaces

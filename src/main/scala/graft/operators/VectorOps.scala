@@ -669,10 +669,9 @@ object VectorOps {
   /** Write-once materialized IVF layout: the q_ann_ivf assignment
     * (identical tie-breaks) landed via AnnIndex.writeIndex — corpus
     * directory-partitioned by coarse cell, centroids alongside. */
-  def ensureAnnLayout(s: SparkSession, dir: String): String = synchronized {
-    val path = graft.sources.CacheKeys.path(
-      "graft_ann_index", s"$dir/embeddings.parquet")
-    if (!graft.sources.CacheKeys.isComplete(s"$path/vectors")) {
+  def ensureAnnLayout(s: SparkSession, dir: String): String =
+    graft.sources.CacheKeys.writeOnce("graft_ann_index",
+        s"$dir/embeddings.parquet") { path =>
       val emb = withNorm(LsdDb.table(s, dir, "embeddings"))
       val cent = broadcast(emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("v").as("cv"),
@@ -692,8 +691,6 @@ object VectorOps {
         .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
       graft.vector.AnnIndex.writeIndex(path, centroids, assigned)
     }
-    path
-  }
 
   /** X1d — the SAME search as q_ann_ivf, answered from the
     * MATERIALIZED index (AnnIndex.writeIndex layout): probes route

@@ -3,20 +3,30 @@ package graft.sources
 import java.io.File
 import java.security.MessageDigest
 
-/** Stable tmpdir locations for write-once caches (margin cache,
-  * time-partitioned events, sky layouts, IVF indexes), keyed by a
-  * content fingerprint of the SOURCE data.
+/** Write-once derived layouts (cell tablets, margin caches, snapshot
+  * tables, exports, trained artifacts): each is built once per source
+  * fingerprint and reused by every later query.
   *
-  * The previous scheme keyed on `abs(dir.hashCode)` and only checked
-  * `_SUCCESS`: a regenerated source dir (or a hashCode collision
-  * between dirs) silently reused stale cache contents, feeding wrong
-  * rows into oracle-checked queries. Keying the path on a per-file
-  * (path, size, mtime) digest makes any source change produce a fresh
-  * cache path instead — stale reuse becomes structurally impossible,
-  * and the write-once/read-many economics are unchanged for an
-  * unchanged source.
+  * The protocol, for every builder:
+  *   - **Key.** The root is `<tmpdir>/<tag>_<digest>`, where the
+  *     digest covers the SOURCE data's files (see [[path]]). A
+  *     regenerated source gets a fresh root, so stale contents are
+  *     never reused.
+  *   - **Lock.** Builds run under one reentrant JVM lock, so a builder
+  *     may build another layout inside its own build.
+  *   - **Marker written last.** A layout is complete when its root
+  *     holds the [[Marker]] file, created only after `build` returns.
+  *     Sidecars, commit logs and join declarations are written inside
+  *     `build`, so they land before the marker.
+  *   - **Wipe on rebuild.** A root without the marker is deleted
+  *     before `build` runs, so a torn build (crash, exception, killed
+  *     JVM) never leaks partial files into the next one.
   */
 object CacheKeys {
+
+  /** Completion marker at a layout root. The `_` prefix keeps it out
+    * of Spark's and the FITS reader's file listings. */
+  val Marker = "_COMPLETE"
 
   private def walk(f: File): Seq[File] =
     if (f.isDirectory)
@@ -38,8 +48,29 @@ object CacheKeys {
     s"${sys.props("java.io.tmpdir")}/${tag}_$hex"
   }
 
-  /** True when the cache at `path` finished writing (Spark's _SUCCESS
-    * marker — a partial/killed write never has one). */
-  def isComplete(path: String): Boolean =
-    new File(s"$path/_SUCCESS").exists()
+  /** The layout `tag` of source `key`: its root, built by `build(root)`
+    * unless already complete. */
+  def writeOnce(tag: String, key: String)(build: String => Unit): String =
+    writeOnceAt(path(tag, key))(build)
+
+  /** [[writeOnce]] at an explicit root, for layouts without a source
+    * path to key on. */
+  def writeOnceAt(root: String)(build: String => Unit): String = {
+    val marker = new File(root, Marker)
+    if (!marker.exists()) synchronized {
+      if (!marker.exists()) {
+        delete(new File(root))
+        build(root)
+        marker.getParentFile.mkdirs()
+        marker.createNewFile()
+      }
+    }
+    root
+  }
+
+  private def delete(f: File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(delete)
+    f.delete()
+  }
 }

@@ -1453,11 +1453,10 @@ object ScaleSmoke {
         degrees(asin(rand(seed = 32) * 2 - 1)).as("lat"),
         timestamp_seconds(lit(1704067200L) + (col("id") % 2592000L))
           .as("ts")) // one month of seconds
-      if (!graft.sources.CacheKeys.isComplete(s"$qlbDir/dets.parquet") ||
-          graft.sources.SpatialWriter
-            .spatialMeta(spark, s"$qlbDir/dets.parquet").isEmpty)
+      graft.sources.CacheKeys.writeOnceAt(qlbDir) { root =>
         graft.sources.SpatialWriter.write(dets5, "lon", "lat", 4,
-          s"$qlbDir/dets.parquet")
+          s"$root/dets.parquet")
+      }
       val ql = graft.ql.LsdQL(graft.LsdDb(spark, qlbDir), Nil,
         timeKeys = Map("dets" -> "ts"))
       val cone = Bounds.Cone(210.1234, 12.6543, 9.8765)

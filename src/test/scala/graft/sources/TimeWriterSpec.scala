@@ -62,11 +62,15 @@ class TimeWriterSpec extends SpecBase {
   test("ensure-site rebuild heals a layout that lost its sidecar") {
     // review r18: _TEMPORAL lands after Spark's _SUCCESS; a crash in
     // that window must not leave a permanently "complete" cache that
-    // every time-bounded read rejects. The ensure site re-checks the
-    // sidecar, so deleting it (the crash's observable state) heals.
+    // every time-bounded read rejects. The crash also precedes the
+    // layout's completion marker (written after the whole build), so
+    // its observable state is: sidecar gone, marker absent — and the
+    // ensure site heals it by rebuilding.
     val path = graft.operators.Core.ensureTimePartitionedEvents(spark, sfDir)
     assert(TimeWriter.temporalMeta(spark, path).isDefined)
     new java.io.File(path, "_TEMPORAL").delete()
+    new java.io.File(new java.io.File(path).getParent, CacheKeys.Marker)
+      .delete()
     assert(TimeWriter.temporalMeta(spark, path).isEmpty)
     val again = graft.operators.Core.ensureTimePartitionedEvents(spark, sfDir)
     assert(again == path &&
