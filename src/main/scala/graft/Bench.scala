@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 /** Driver-run benchmark: wall-clock per declared query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (driver contract).
   *
@@ -9,48 +10,83 @@ import org.apache.spark.sql.SparkSession
   * queries are then timed in name order for run-to-run comparability.
   */
 object Bench {
+  /** Preflight, then the warmup (touch every table, exercise
+    * scan+shuffle+agg codegen), then every write-once layout of
+    * [[Registry.layouts]], so timed runs measure the QUERY — the
+    * layout's steady-state economics — not the one-time write that
+    * amortizes over every later query against it. A failed warmup or
+    * layout step is reported on stderr and skipped; its queries then
+    * fail by name. A fatal schema drift throws
+    * [[Preflight.SchemaDriftException]] before the warmup. */
+  def prepare(spark: SparkSession, dir: String): Unit = {
+    Preflight.check(spark, dir)
+    val warmup: (SparkSession, String) => Any = { (s, d) =>
+      LsdDb.standardTables.foreach(t => LsdDb.table(s, d, t).count())
+      operators.Aggregates.qAggBasic.fn(s, d).count()
+    }
+    for ((name, build) <- ("warmup" -> warmup) +: Registry.layouts)
+      try build(spark, dir)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] layout $name failed: ${e.getMessage}")
+      }
+  }
+
+  /** Build `fn`'s DataFrame and drain its executed plan; returns the
+    * seconds both took and the drained DataFrame. The drain computes
+    * every output column, not count(): under count() Catalyst prunes
+    * the projection, so map-only queries (q_project, q_string, …)
+    * would time the scan rather than their expressions.
+    * executedPlan.execute() runs the plan as-built — all output
+    * columns computed into UnsafeRows — and the foreach drains every
+    * partition. */
+  def runOnce(spark: SparkSession, dir: String,
+              fn: (SparkSession, String) => DataFrame): (Double, DataFrame) = {
+    val t0 = System.nanoTime()
+    val df = fn(spark, dir)
+    df.queryExecution.toRdd
+      .foreachPartition(it => while (it.hasNext) { it.next(); () })
+    ((System.nanoTime() - t0) / 1e9, df)
+  }
+
+  /** Per-query BEST seconds as a positional 2-decimal array in the
+    * (sorted-name) order of `results`. A name→seconds map of every
+    * query is ~5 KB and did not fit the ~2 KB stdout tail the driver
+    * keeps (PERF_r22.per_query came back empty); the full map is in
+    * bench_queries.json. */
+  def perQueryBestLine(results: Seq[(String, Double, Double)]): String = {
+    val arr = results.map { case (_, _, b) => f"$b%.2f" }
+      .mkString("[", ",", "]")
+    s"""{"metric":"per_query_best","unit":"sec","order":"sorted-name","n":${results.size},"sec":$arr}"""
+  }
+
+  /** The headline, printed LAST (the driver json-parses the final
+    * stdout line): `value` = best-of total (the number BASELINE.md
+    * gates on from r8), `cold_value` = sum of first runs
+    * (methodology-compatible with the single-shot totals of rounds
+    * ≤ 7). */
+  def headline(sfDir: String, results: Seq[(String, Double, Double)],
+               errors: Seq[String]): String = {
+    val errs = errors.sorted.map(e => s""""$e"""").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${results.map(_._3).sum},"cold_value":${results.map(_._2).sum},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"errors":$errs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Preflight schema-contract check: a regenerated testdata table
     // with a fatal drift makes every timing meaningless — fail loud
     // BEFORE the warmup, with the diff on stderr and a parseable
     // headline naming the preflight as the error.
-    try Preflight.check(spark, sfDir)
+    try prepare(spark, sfDir)
     catch { case e: Preflight.SchemaDriftException =>
       System.err.println(s"[bench] PREFLIGHT FAILED\n${e.getMessage}")
       println(s"""{"metric":"total","value":0.0,"unit":"sec","sf":"$sfDir","n_queries":0,"n_errors":1,"errors":["_preflight"]}""")
       spark.stop()
       sys.exit(3)
     }
-    // Warmup (touch every table, exercise scan+shuffle+agg codegen),
-    // then pre-build every write-once layout, so timed runs measure the
-    // QUERY — the layout's steady-state economics — not the one-time
-    // write that amortizes over every later query against it. A failed
-    // step is reported and skipped; its queries then fail by name below.
-    val warmup: (SparkSession, String) => Any = { (s, dir) =>
-      LsdDb.standardTables.foreach(t => LsdDb.table(s, dir, t).count())
-      operators.Aggregates.qAggBasic.fn(s, dir).count()
-    }
-    for ((name, build) <- ("warmup" -> warmup) +: Registry.layouts)
-      try build(spark, sfDir)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] layout $name failed: ${e.getMessage}")
-      }
-    // Time FULL materialization of every output column, not count():
-    // under count() Catalyst prunes the projection, so map-only
-    // queries (q_project, q_string, …) were timing the scan rather
-    // than their expressions. executedPlan.execute() runs the plan
-    // as-built — all output columns computed into UnsafeRows — and
-    // the foreach drains every partition. Failures are NOT folded
-    // into a plausible wall-time: they surface in an "errors" list.
+    // Time FULL materialization of every output column (runOnce).
+    // Failures are NOT folded into a plausible wall-time: they
+    // surface in an "errors" list.
     // Each query is timed TWICE back-to-back: `cold` = first run,
     // `best` = min of the two. Round-7 showed single-shot numbers on
     // a shared sandbox swing ±30% (and 3× on individual queries) with
@@ -59,17 +95,12 @@ object Bench {
     // load) the first run happened to eat, so `best` approximates
     // steady-state cost. BASELINE.md documents which number gates.
     var errors = List.empty[String]
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd
-        .foreachPartition(it => while (it.hasNext) { it.next(); () })
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(fn: (SparkSession, String) => DataFrame): Double =
+      runOnce(spark, sfDir, fn)._1
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
-        val cold = runOnce(fn)
-        val warm = runOnce(fn)
+        val cold = run(fn)
+        val warm = run(fn)
         // Third rep, only when the warm rep failed to beat the cold
         // one (ratio ~1.0): that shape is either true steady state or
         // BOTH runs eating the same transient (GC, sibling load) —
@@ -77,11 +108,12 @@ object Bench {
         // the driver run vs 3.48 s here. One extra rep for just these
         // queries disambiguates at ~zero cost for the rest.
         val best =
-          if (warm >= cold * 0.98) math.min(math.min(cold, warm), runOnce(fn))
+          if (warm >= cold * 0.98) math.min(math.min(cold, warm), run(fn))
           else math.min(cold, warm)
         (name, cold, best)
       } catch {
-        case _: Throwable =>
+        case NonFatal(e) =>
+          System.err.println(s"[bench] query $name failed: ${e.getMessage}")
           errors ::= name
           (name, 0.0, 0.0)
       }
@@ -119,18 +151,19 @@ object Bench {
           if (!over) r
           else {
             val fn = SparkEntry.queries(name)
-            val healedBest = math.min(best,
-              math.min(runOnce(fn), runOnce(fn)))
+            val healedBest = math.min(best, math.min(run(fn), run(fn)))
             rechecked(name) = (best, healedBest)
             (name, cold, healedBest)
           }
         }
       }
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(e) =>
       // floors unreadable / re-rep crash: ship the raw sweep rather
       // than fail the whole bench — and DROP any partial heals, or
       // the artifact's `rechecked` map would claim healed numbers the
       // per-query columns don't contain
+      System.err.println(
+        s"[bench] floor recheck failed, shipping the raw sweep: ${e.getMessage}")
       rechecked.clear()
       sweep
     }
@@ -140,18 +173,13 @@ object Bench {
     //           driver's CORRECTNESS file);
     //   line 2  the 20 slowest queries BY NAME (regression triage);
     //   line 3  recheck map, only when floor-flagged lines re-repped;
-    //   line 4  per-query BEST as a full NAME→SECONDS map — the line
-    //           the driver's PERF per-query comparison parses — placed
-    //           LAST before the headline so the retained stdout tail
-    //           keeps it (r21 printed it first, as a positional array,
-    //           and PERF_r21.per_query came back empty);
+    //   line 4  per-query BEST (perQueryBestLine), LAST before the
+    //           headline so the retained stdout tail keeps it;
     //   line 5  the short always-parseable headline, LAST.
     // The full-precision name:value map + errors also lands in
     // bench_queries.json on disk (repo artifact).
-    val errs = errors.sorted.map(e => s""""$e"""").mkString("[", ",", "]")
-    val coldTotal = results.map(_._2).sum
-    val bestTotal = results.map(_._3).sum
     try {
+      val errs = errors.sorted.map(e => s""""$e"""").mkString("[", ",", "]")
       val qs = results.map { case (k, c, b) =>
         f""""$k":{"cold":$c%.3f,"best":$b%.3f}"""
       }.mkString("{", ",", "}")
@@ -160,8 +188,11 @@ object Bench {
       }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_queries.json"),
-        s"""{"sf":"$sfDir","cold_total":$coldTotal,"best_total":$bestTotal,"queries":$qs,"rechecked":$rq,"errors":$errs}""")
-    } catch { case _: Throwable => () } // read-only cwd: stdout still has it
+        s"""{"sf":"$sfDir","cold_total":${results.map(_._2).sum},"best_total":${results.map(_._3).sum},"queries":$qs,"rechecked":$rq,"errors":$errs}""")
+    } catch { case NonFatal(e) => // read-only cwd: stdout still has it
+      System.err.println(
+        s"[bench] bench_queries.json not written: ${e.getMessage}")
+    }
     val arrCold = results.map { case (_, c, _) => f"$c%.3f" }
       .mkString("[", ",", "]")
     println(s"""{"metric":"per_query_cold","unit":"sec","order":"sorted-name","n":${results.size},"sec":$arrCold}""")
@@ -176,23 +207,8 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"metric":"recheck","n":${rechecked.size},"sec":$rq}""")
     }
-    // Per-query best as a NAME→SECONDS map, the LAST line before the
-    // headline (r21 verdict item 1): the driver's round-over-round
-    // per-query comparison parses a {"metric":"per_query_best",
-    // "sec":{name:sec,…}} line, and r21's positional-array form (plus
-    // its placement before slowest_best/recheck) left PERF_r21's
-    // per_query EMPTY. The map is printed here, immediately above the
-    // total, so whatever stdout tail the driver retains holds the
-    // final-line headline plus as much of this map as fits; the full
-    // map also persists in bench_queries.json.
-    val mapBest = results.map { case (k, _, b) => f""""$k":$b%.3f""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"per_query_best","unit":"sec","n":${results.size},"sec":$mapBest}""")
-    // headline LAST (the driver json-parses the final stdout line):
-    // `value` = best-of-2 total (the number BASELINE.md gates on from
-    // r8), `cold_value` = sum of first runs (methodology-compatible
-    // with the single-shot totals of rounds ≤ 7).
-    println(s"""{"metric":"total","value":$bestTotal,"cold_value":$coldTotal,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"errors":$errs}""")
+    println(perQueryBestLine(results))
+    println(headline(sfDir, results, errors))
     spark.stop()
     // A run with errored queries must not report success: totals are
     // non-comparable (errored queries contribute 0.0s) and tooling

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,14 +23,7 @@ object Verify {
     val only: Option[Set[String]] = args.sliding(2).collectFirst {
       case Array("--only", names) => names.split(",").toSet
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Preflight: fail the WHOLE run loud on testdata schema drift
     // (round-10 postmortem: 7 queries died silently to a regenerated
@@ -74,13 +67,19 @@ object Verify {
               .forEach(p => Files.deleteIfExists(p))
             finally w.close()
           }
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(e2) =>
+          System.err.println(
+            s"[verify] $name: stale dump not deleted: ${e2.getMessage}")
+        }
         try {
           import spark.implicits._
           Seq(String.valueOf(e.getMessage).take(500))
             .toDF("_verify_error").coalesce(1)
             .write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(e2) =>
+          System.err.println(
+            s"[verify] $name: error sentinel not written: ${e2.getMessage}")
+        }
       }
     }
     val json = SparkEntry.oracleSql

@@ -1862,8 +1862,9 @@ object PipelineOps {
     * has a DISJOINT character footprint, so one left-to-right
     * replace() pass merges exactly the greedy non-overlapping
     * occurrence set for every pattern, including self-runs
-    * (a,a,a,a -> aa,aa) — the 1M ScaleSmoke conservation check
-    * exposed the single-sep form. The needle can only match at a true
+    * (a,a,a,a -> aa,aa) — the 1M-word conservation check of
+    * tools/ScaleSmoke (as of commit 1372bdc) exposed the single-sep
+    * form. The needle can only match at a true
     * symbol boundary: its first sep must be the second sep of a
     * boundary pair, since symbols contain no separator char. */
   private val bpeSep2 = bpeSep + bpeSep

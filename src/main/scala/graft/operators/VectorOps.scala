@@ -581,10 +581,7 @@ object VectorOps {
 
   /** 32-bit signature: bit h = sign(vv . plane_h). Each dot is the
     * codegen'd sequential fold, so the sign — and therefore the whole
-    * signature — is bit-for-bit reproducible. Public: ScaleSmoke runs
-    * the same signature pass at 1M vectors with wider bands. */
-  def lshSignature(vv: Column): Column = lshSig(vv)
-
+    * signature — is bit-for-bit reproducible. */
   private def lshSig(vv: Column): Column =
     (0 until lshBits).map { h =>
       when(VectorKernels.dot(vv, typedLit(lshPlanes(h).toSeq)) >= 0.0,
@@ -609,8 +606,9 @@ object VectorOps {
     * verify join touches only proposed pairs. At 100 TB you'd persist
     * the signature table once (it's 8 bytes/row) and raise lshBits;
     * the plan shape is unchanged. Note sign-projection assumes
-    * roughly centered vectors — ScaleSmoke shows the centering step
-    * for an all-positive corpus. Recall is the standard
+    * roughly centered vectors — tools/ScaleSmoke (as of commit
+    * 1372bdc) showed the centering step for an all-positive corpus at
+    * 1M vectors. Recall is the standard
     * 1-(1-p^r)^b curve — approximate by design; the oracle mirrors the
     * same signatures, so the OUTPUT is exact.
     *
@@ -1141,8 +1139,8 @@ object VectorOps {
     * the IVF sweet spot — assignment work is N·k = N^1.5 and in-cell
     * pair work is Σ cell² ≈ N²/k = N^1.5, so neither side ever goes
     * corpus-quadratic as N grows. At sf0.001/0.01 (500 rows) k = 23;
-    * at sf0.1 (2000 rows) k = 45; at the 1M-vector ScaleSmoke
-    * k = 1000. Pure arithmetic on the corpus count, so the DuckDB
+    * at sf0.1 (2000 rows) k = 45; at the 1M vectors of
+    * tools/ScaleSmoke (as of commit 1372bdc) k = 1000. Pure arithmetic on the corpus count, so the DuckDB
     * oracle computes the identical k from its own count(*). */
   private[graft] def semdedupK(n: Long): Int =
     math.max(8L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
@@ -1152,13 +1150,13 @@ object VectorOps {
     * total pair fan-out is provably ≤ k·maxCell²/2 regardless of how
     * skewed the assignment lands — the same cap-as-algebra guard as
     * TextOps minhash maxBucket and PPJoin maxPrefixBucket. Never
-    * binds at bench SFs (max cell ≲ 10² « 4096); the 1M ScaleSmoke
-    * asserts both that cells stay far under it on a uniform corpus
+    * binds at bench SFs (max cell ≲ 10² « 4096); the 1M-vector block
+    * of tools/ScaleSmoke (as of commit 1372bdc) asserted both that cells stay far under it on a uniform corpus
     * and that it bounds the worst case. */
   private[graft] val semdedupMaxCell = 4096
 
-  /** Nearest-centroid assignment shared by q_semdedup and the 1M
-    * ScaleSmoke: broadcast-nested-loop the (small, O(√N)) centroid
+  /** Nearest-centroid assignment of q_semdedup (and of the 1M-vector
+    * block of tools/ScaleSmoke as of commit 1372bdc): broadcast-nested-loop the (small, O(√N)) centroid
     * relation against the corpus and take the per-vector best cell
     * with a PARTIAL-aggregated min(struct(-cos, cell)) — equivalent
     * to the oracle's row_number() ORDER BY cos DESC, cell, but the
@@ -1202,8 +1200,9 @@ object VectorOps {
     * join is Σ cell² ≈ N²/k = N^1.5, never corpus². A [[semdedupMaxCell]]
     * hot-cell cap (in BOTH engines) bounds residual skew:
     * pair fan-out ≤ k·maxCell²/2 by construction. The 1M×64-d
-    * ScaleSmoke block runs this exact assignment at k = 1000 and
-    * asserts the per-cell population bound.
+    * block of tools/ScaleSmoke (as of commit 1372bdc) ran this exact
+    * assignment at k = 1000 and asserted the per-cell population
+    * bound.
     *
     * Dedup rule (deterministic, the keep-lowest-id policy of the
     * exact-dedup family): a vector is a duplicate iff some LOWER-id

@@ -452,8 +452,9 @@ object CrossMatch {
     * is re-attached for the hot rows, so the channel decomposition
     * (and therefore the answer, nmax ranking included) is EXACTLY
     * [[apply]]'s — the A-row partition is disjoint and ranking is
-    * per A row. Asserted against [[apply]] in ScaleSmoke on a 100×
-    * deep field, with the per-bucket work bound checked.
+    * per A row. Asserted against [[apply]] on a 100× deep field, with
+    * the per-bucket work bound checked, by tools/ScaleSmoke as of
+    * commit 1372bdc.
     *
     * When the replicated probe set would itself be large (B dense at
     * the same deep field: probeRows × salts > maxBroadcastRows), the

@@ -1,28 +1,13 @@
 package graft.tools
 
-import graft.LsdDb
+import graft.{GraftSession, LsdDb}
 import graft.ql.LsdQL
 import graft.sources.SpatialWriter
 import graft.spatial.CrossMatch
-import org.apache.spark.sql.SparkSession
 
-/** CLI entry points mirroring the reference's tool surface
-  * (`lsd-query`, `lsd-import`, `lsd-xmatch`; SURVEY.md §0 item 5,
-  * [H]). Thin mains over the library — all logic lives in graft.*.
-  */
-private[tools] object Cli {
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
+// CLI entry points mirroring the reference's tool surface
+// (`lsd-query`, `lsd-import`, `lsd-xmatch`; SURVEY.md §0 item 5, [H]).
+// Thin mains over the library — all logic lives in graft.*.
 
 /** lsd-query analog: run an LsdQL string against a database directory.
   *
@@ -81,7 +66,7 @@ object QueryCli {
     require(unknown.isEmpty,
       s"unknown flag(s): ${unknown.map("--" + _).mkString(", ")} " +
         "(supported: --bounds, --time, --explain)")
-    val spark = Cli.session()
+    val spark = GraftSession.local()
     val ql = LsdQL.forDb(LsdDb(spark, pos(0)))
     val bounds = flags.get("bounds").map(parseBounds)
     val time = flags.get("time").map { t =>
@@ -135,7 +120,7 @@ object ImportCli {
   def main(args: Array[String]): Unit = {
     require(args.length >= 5,
       "usage: ImportCli <csv|fitsDir> <out> <lonCol> <latCol> <level> [marginDeg]")
-    val spark = Cli.session()
+    val spark = GraftSession.local()
     val df =
       if (args(0).endsWith(".fits") ||
         new java.io.File(args(0)).isDirectory &&
@@ -161,7 +146,7 @@ object MakeObjectCatalogCli {
   def main(args: Array[String]): Unit = {
     require(args.length == 5, "usage: MakeObjectCatalogCli <dbRoot> " +
       "<detTable> <idCol,lonCol,latCol> <radiusDeg> <outName>")
-    val spark = Cli.session()
+    val spark = GraftSession.local()
     val db = LsdDb(spark, args(0))
     val Array(id, lon, lat) = args(2).split(",").map(_.trim)
     val (assign, objects) = graft.spatial.ObjectCatalog.build(
@@ -296,7 +281,7 @@ object AdminCli {
           println(f"$name%-40s $kind%-9s $files%6d files $bytes%12d bytes")
         }
       case "snapshots" =>
-        val spark = Cli.session()
+        val spark = GraftSession.local()
         val es = Snapshots.entries(spark, args(1))
         if (es.isEmpty) println(s"${args(1)}: not a snapshot table")
         else es.foreach(e => println(
@@ -313,26 +298,26 @@ object AdminCli {
           println(s"optimistic commits: $retries lock retries, " +
             s"$aborts conflict aborts")
       case "clean-staging" =>
-        val removed = Snapshots.cleanStaging(Cli.session(), args(1))
+        val removed = Snapshots.cleanStaging(GraftSession.local(), args(1))
         println(if (removed.isEmpty) s"${args(1)}: no staging dirs"
           else s"removed ${removed.size} staging dir(s): " +
             removed.mkString(", "))
       case "compact" =>
-        val id = Snapshots.compact(Cli.session(), args(1))
+        val id = Snapshots.compact(GraftSession.local(), args(1))
         println(s"compacted ${args(1)} -> base snap=$id")
       case "vacuum" =>
-        val dropped = Snapshots.vacuum(Cli.session(), args(1))
+        val dropped = Snapshots.vacuum(GraftSession.local(), args(1))
         println(s"vacuumed ${args(1)}: removed " +
           s"${dropped.map(i => s"snap=$i").mkString(", ")}")
       case "compact-merged" =>
-        val id = Snapshots.compactMerged(Cli.session(), args(1), args(2))
+        val id = Snapshots.compactMerged(GraftSession.local(), args(1), args(2))
         println(s"compacted merge-on-read ${args(1)} -> base snap=$id")
       case "declare-join" =>
         // equi relation into the db's _JOINS registry (the spatial
         // form is declared by XmatchCli, the tool that computes it)
         require(args.length == 6, "usage: AdminCli declare-join " +
           "<dbRoot> <left> <leftKey> <right> <rightKey>")
-        graft.ql.JoinRegistry.declare(Cli.session(), args(1),
+        graft.ql.JoinRegistry.declare(GraftSession.local(), args(1),
           graft.ql.JoinDef(args(2), args(3), args(4), args(5)))
         println(s"declared ${args(2)}.${args(3)} = ${args(4)}.${args(5)} " +
           s"in ${args(1)}/_JOINS")
@@ -370,7 +355,7 @@ object AdminCli {
                 "--from-snapshot)")
           }
         }
-        val stamped = graft.sources.MarginCache.build(Cli.session(),
+        val stamped = graft.sources.MarginCache.build(GraftSession.local(),
           args(1), args(2), args(3), args(4), args(5).toInt,
           args(6).toDouble, clustered, fromSnapshot)
         println(s"margin cache built: ${args(2)} (level=${args(5)} " +
@@ -380,7 +365,7 @@ object AdminCli {
           (if (stamped.isDefined)
             " until the table commits past the stamp" else ""))
       case "joins" =>
-        val (js, sjs) = graft.ql.JoinRegistry.load(Cli.session(), args(1))
+        val (js, sjs) = graft.ql.JoinRegistry.load(GraftSession.local(), args(1))
         if (js.isEmpty && sjs.isEmpty) println(s"${args(1)}: no _JOINS")
         js.foreach(j => println(
           s"equi    ${j.left}.${j.leftKey} = ${j.right}.${j.rightKey}"))
@@ -432,7 +417,7 @@ object XmatchCli {
       "usage: XmatchCli <dbRoot> <tableA> " +
       "<aId,aLon,aLat> <tableB> <bId,bLon,bLat> <radiusDeg> <nmax> " +
       "<outName> [hotThreshold [salts]]")
-    val spark = Cli.session()
+    val spark = GraftSession.local()
     val db = LsdDb(spark, args(0))
     val Array(aId, aLon, aLat) = args(2).split(",").map(_.trim)
     val Array(bId, bLon, bLat) = args(4).split(",").map(_.trim)

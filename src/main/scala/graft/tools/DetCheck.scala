@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Registry}
 
 /** Dev tool: determinism stress — every declared query must produce
   * IDENTICAL collected results under different parallelism (shuffle
@@ -14,12 +13,7 @@ import org.apache.spark.sql.SparkSession
 object DetCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     var failed = 0
     for (q <- Registry.specs.sortBy(_.name)) {
       def runWith(parts: Int): Seq[String] = {

@@ -85,4 +85,9 @@ object GraftShims {
       catalyst.InternalRow.empty,
       org.apache.spark.paths.SparkPath.fromPathString(path), 0L, length,
       Array.empty, 0L, length, Map.empty)
+
+  /** Block until every event posted so far has reached the listeners
+    * (the listener bus delivers asynchronously). */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -385,8 +385,9 @@ class CliSpec extends SpecBase {
 
     // deep-field flag: same xmatch through CrossMatch.skewSafe
     // (hotThreshold=1 forces every populated cell hot, salts=4) must
-    // produce the identical pair set — the ScaleSmoke row-identity
-    // equality, reachable from the CLI surface.
+    // produce the identical pair set — the row-identity equality that
+    // tools/ScaleSmoke (as of commit 1372bdc) checked at scale,
+    // reachable from the CLI surface.
     XmatchCli.main(Array(root, "objects", "obj_id,lon,lat",
       "objects", "obj_id,lon,lat", "0.5", "2", "obj_x_obj_skew", "1", "4"))
     val skew = spark.read.parquet(s"$root/obj_x_obj_skew.parquet")

@@ -16,7 +16,8 @@ A line is flagged when its new best exceeds
 with flag_ratio = 1.5 and abs_slack = 0.3 s (sub-second lines jitter
 by scheduling noise; the r13 minhash/ngram A/B measured +/- ~1 s of
 sibling-load variance on ~1-2 s lines inside the full-bench JVM, so
-treat single-line flags as "run a QueryProfile A/B", not "guilty").
+treat single-line flags as "run a graft.tools.Profile A/B", not
+"guilty").
 
 Dev-side only (python, no Spark); not part of the shipped library.
 """
