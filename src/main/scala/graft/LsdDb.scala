@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Snapshots
+import graft.sources.{ParquetRead, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -212,7 +212,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
     * B side of [[graft.spatial.CrossMatch.applyPreMargined]]. */
   def tableMarginedRef(ref: MarginCacheRef): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(ref.path))
+    normalizeTs(ParquetRead(spark, ref.path))
   }
 
   /** The PROBE view of a margin-cache layout: primaries AND margin
@@ -259,7 +259,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
     val to = to_timestamp(lit(toExcl))
     // upper bound INCLUSIVE of toExcl's own bucket (a non-aligned
     // toExcl still has rows in it); the caller's exact filter refines
-    postProcess(spark.read.parquet(path)
+    postProcess(ParquetRead(spark, path)
       .filter(col("t_bucket") >= date_trunc(gran, from).cast("date") &&
         col("t_bucket") <= date_trunc(gran, to).cast("date")))
   }
@@ -282,7 +282,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
       s"table '$name' is not a snapshot table; AS OF / @id requires one")
     val raw =
       if (isSnapshotTable) snapRead(path)
-      else spark.read.parquet(path)
+      else ParquetRead(spark, path)
     postProcess(raw)
   }
 

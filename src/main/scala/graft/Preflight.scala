@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -110,7 +112,7 @@ object Preflight {
     val db = LsdDb(spark, sfDir)
     val (fatals, warns) = LsdDb.standardTables.map { t =>
       try diff(t, db.table(t).schema)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         (Seq(s"$t: unreadable (${e.getClass.getSimpleName}: " +
           s"${String.valueOf(e.getMessage).take(200)})"), Nil)
       }
@@ -135,7 +137,7 @@ object Preflight {
           Seq(s"events.ts: values [$mn, $mx] outside [1990, 2100] — " +
             "timestamp UNIT drift (ns assumption violated)?")
         else Nil
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         Seq("events.ts: value probe failed " +
           s"(${e.getClass.getSimpleName}: " +
           s"${String.valueOf(e.getMessage).take(200)})")

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.Det.{sql => D}
-import graft.sources.CacheKeys
+import graft.sources.{CacheKeys, ParquetRead}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
@@ -362,7 +362,7 @@ object Core {
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
     (s, dir) =>
       val events = ensureSnapshotEvents(s, dir)
-      val state = s.read.parquet(s"${ensureAggState(s, dir)}/state")
+      val state = ParquetRead(s, s"${ensureAggState(s, dir)}/state")
       val delta = graft.sources.Snapshots
         .readDelta(s, events, after = 2L, asOf = 3L)
         .groupBy("event_type")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.{Det => D}
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2011,7 +2012,7 @@ object PipelineOps {
     * (map-only corpus pass, nothing broadcast or re-trained). */
   private def bpeRules(s: SparkSession, dir: String): Seq[(String, String)] = {
     val (rulesPath, _) = ensureBpeArtifact(s, dir)
-    s.read.parquet(rulesPath).orderBy("merge_round")
+    ParquetRead(s, rulesPath).orderBy("merge_round")
       .select("lhs", "rhs").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
   }
@@ -2023,7 +2024,7 @@ object PipelineOps {
         s"FROM m$r").mkString("\n", "\nUNION ALL\n", "") +
       "\nORDER BY merge_round") { (s, dir) =>
     val (rulesPath, _) = ensureBpeArtifact(s, dir)
-    s.read.parquet(rulesPath).orderBy("merge_round")
+    ParquetRead(s, rulesPath).orderBy("merge_round")
   }
 
   /** Ext — BPE ENCODE (q_bpe_encode): apply the trained merge table to
@@ -2156,7 +2157,7 @@ object PipelineOps {
          |ORDER BY freq DESC, sym LIMIT 50""".stripMargin
     }) { (s, dir) =>
     val (_, vocabPath) = ensureBpeArtifact(s, dir)
-    s.read.parquet(vocabPath)
+    ParquetRead(s, vocabPath)
       .select(explode(filter(split(col("w"), bpeSep2),
         x => x =!= "")).as("sym"), col("cnt"))
       .groupBy("sym").agg(sum(col("cnt")).cast(LongType).as("freq"))

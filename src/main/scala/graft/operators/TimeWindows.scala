@@ -104,7 +104,8 @@ object TimeWindows {
     * while matching exactly the single events file. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema =
+      graft.sources.ParquetRead.schema(s, s"$dir/events.parquet")
     val tsCol = batchSchema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         timestamp_micros(expr("ts DIV 1000"))

@@ -736,7 +736,7 @@ object VectorOps {
       .select("probe_id", "pv", "pn", "cent_id")
     val probedCells = pbuckets.select("cent_id").distinct()
       .collect().map(_.getLong(0).toInt).sorted.toIndexedSeq // O(k)
-    val vectors = s.read.parquet(s"$path/vectors")
+    val vectors = graft.sources.ParquetRead(s, s"$path/vectors")
       .filter(col("cell").isin(probedCells: _*))
       .select(col("vec_id"), col("v"), col("nrm"),
         col("cell").cast("long").as("cent_id"))

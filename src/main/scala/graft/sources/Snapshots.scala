@@ -282,7 +282,7 @@ object Snapshots {
     * side). NULL-only columns record no stats (a range predicate on
     * the column excludes NULL rows anyway, so [[readPruned]] may
     * still drop the directory). */
-  private def dirStats(spark: SparkSession, dir: String,
+  private def dirStats(back: DataFrame,
                        statsCols: Seq[String]): Map[String, (Double, Double)] =
     if (statsCols.isEmpty) Map.empty
     else {
@@ -291,7 +291,6 @@ object Snapshots {
       statsCols.foreach(c => require(
         !c.exists(ch => ch.isWhitespace || ch == ':'),
         s"stats column name must be whitespace/colon-free: '$c'"))
-      val back = spark.read.parquet(dir)
       val aggs = statsCols.flatMap { c =>
         val v = col(c).cast(DoubleType)
         Seq(min(v).as(s"__mn_$c"), max(v).as(s"__mx_$c"))
@@ -322,7 +321,7 @@ object Snapshots {
     * DISTINCT on positions bounds the collected set to ≤ m ints
     * regardless of directory size. NULLs set no bits (an equality
     * probe excludes NULL rows anyway). */
-  private def dirBlooms(spark: SparkSession, dir: String,
+  private def dirBlooms(back: DataFrame,
                         bloomCols: Seq[String]): Map[String, Bloom] =
     if (bloomCols.isEmpty) Map.empty
     else {
@@ -332,7 +331,6 @@ object Snapshots {
         !c.exists(ch => ch.isWhitespace || ch == ':'),
         s"bloom column name must be whitespace/colon-free: '$c'"))
       val (m, k) = (BloomBits, BloomHashes)
-      val back = spark.read.parquet(dir)
       bloomCols.map { c =>
         // the canonical a probe must reproduce EXACTLY is Spark's
         // string cast of THIS column type — record which type class
@@ -360,6 +358,18 @@ object Snapshots {
       }.toMap
     }
 
+  /** Zone map ([[dirStats]]) and Bloom filters ([[dirBlooms]]) of the
+    * WRITTEN directory `dir`, both over ONE read of it; no read when
+    * neither is asked for. */
+  private def dirMeta(spark: SparkSession, dir: String,
+                      statsCols: Seq[String], bloomCols: Seq[String])
+      : (Map[String, (Double, Double)], Map[String, Bloom]) =
+    if (statsCols.isEmpty && bloomCols.isEmpty) (Map.empty, Map.empty)
+    else {
+      val back = ParquetRead(spark, dir)
+      (dirStats(back, statsCols), dirBlooms(back, bloomCols))
+    }
+
   /** Append `df` as a new snapshot; returns its id. Stages the data
     * directory completely before the commit-log swap, so readers can
     * never observe a partial snapshot. `statsCols` names columns whose
@@ -376,8 +386,7 @@ object Snapshots {
       val prior = entries(spark, path)
       val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
       df.write.mode("overwrite").parquet(s"$path/snap=$id")
-      val st = dirStats(spark, s"$path/snap=$id", statsCols)
-      val bl = dirBlooms(spark, s"$path/snap=$id", bloomCols)
+      val (st, bl) = dirMeta(spark, s"$path/snap=$id", statsCols, bloomCols)
       commit(spark, path, prior :+
         Entry(id, isBase = false, stats = st, blooms = bl))
       id
@@ -403,8 +412,8 @@ object Snapshots {
         case None =>
           val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
           df.write.mode("overwrite").parquet(s"$path/snap=$id")
-          val st = dirStats(spark, s"$path/snap=$id", statsCols)
-          val bl = dirBlooms(spark, s"$path/snap=$id", bloomCols)
+          val (st, bl) =
+            dirMeta(spark, s"$path/snap=$id", statsCols, bloomCols)
           commit(spark, path, prior :+
             Entry(id, isBase = false, tag = Some(tag), stats = st,
               blooms = bl))
@@ -435,9 +444,8 @@ object Snapshots {
       // blooms over the union of every column any prior entry
       // tracked, so readPruned/readPrunedKey keep pruning across
       // compaction
-      val st = dirStats(spark, s"$path/snap=$id",
-        prior.flatMap(_.stats.keys).distinct)
-      val bl = dirBlooms(spark, s"$path/snap=$id",
+      val (st, bl) = dirMeta(spark, s"$path/snap=$id",
+        prior.flatMap(_.stats.keys).distinct,
         prior.flatMap(_.blooms.keys).distinct)
       commit(spark, path, prior :+
         Entry(id, isBase = true, stats = st, blooms = bl))
@@ -496,7 +504,7 @@ object Snapshots {
   def read(spark: SparkSession, path: String,
            asOf: Option[Long] = None): DataFrame = {
     val visible = visibleEntries(spark, path, asOf)
-    spark.read.parquet(visible.map(e => s"$path/snap=${e.id}"): _*)
+    ParquetRead(spark, visible.map(e => s"$path/snap=${e.id}"): _*)
   }
 
   /** Zone-map-pruned read: like [[read]], but snapshot directories
@@ -528,9 +536,9 @@ object Snapshots {
       }
     }
     if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
+      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
     else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
+      ParquetRead(spark, s"$path/snap=${visible.last.id}")
         .where(org.apache.spark.sql.functions.lit(false))
   }
 
@@ -576,9 +584,9 @@ object Snapshots {
       }
     }
     if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
+      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
     else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
+      ParquetRead(spark, s"$path/snap=${visible.last.id}")
         .where(org.apache.spark.sql.functions.lit(false))
   }
 
@@ -629,9 +637,9 @@ object Snapshots {
     val visible = visibleEntries(spark, path, asOf)
     val kept = visible.filter(e => vs.exists(v => mayHoldEq(e, keyCol, v)))
     if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
+      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
     else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
+      ParquetRead(spark, s"$path/snap=${visible.last.id}")
         .where(org.apache.spark.sql.functions.lit(false))
   }
 
@@ -787,8 +795,8 @@ object Snapshots {
     val stage = s"$path/$Staging/${java.util.UUID.randomUUID()
       .toString.replace("-", "")}"
     df.write.mode("overwrite").parquet(stage) // heavy write: UNLOCKED
-    val st = dirStats(spark, stage, statsCols) // same bytes after rename
-    val bl = dirBlooms(spark, stage, bloomCols)
+    // same bytes after rename
+    val (st, bl) = dirMeta(spark, stage, statsCols, bloomCols)
     val waits = acquireRetrying(f, path, maxRetries, backoffMs)
     try {
       val prior = entries(spark, path)
@@ -866,14 +874,14 @@ object Snapshots {
     // still in the log, which requireHistoryComplete checks below.
     def overlapIn(es: Seq[Entry]): Array[String] = {
       val laterKeys = es.flatMap { e =>
-        val d = spark.read.parquet(s"$path/snap=${e.id}")
+        val d = ParquetRead(spark, s"$path/snap=${e.id}")
         if (d.columns.contains(key))
           Some(d.select(col(key).cast("string").as("__k")))
         else None
       }
       if (laterKeys.isEmpty) Array.empty
       else {
-        val staged = spark.read.parquet(stage)
+        val staged = ParquetRead(spark, stage)
           .select(col(key).cast("string").as("__k")).distinct()
         laterKeys.reduce(_ union _).distinct()
           .join(staged, "__k").limit(5)
@@ -997,7 +1005,7 @@ object Snapshots {
     // batches carry only (key, _tombstone) → union by name with
     // missing columns as NULL
     val parts = visible.map { e =>
-      val d = spark.read.parquet(s"$path/snap=${e.id}")
+      val d = ParquetRead(spark, s"$path/snap=${e.id}")
       val t = if (d.columns.contains(Tombstone)) d
               else d.withColumn(Tombstone, lit(false))
       t.withColumn("_snap", lit(e.id))
@@ -1021,12 +1029,11 @@ object Snapshots {
       val prior = entries(spark, path)
       val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
       current.write.mode("overwrite").parquet(s"$path/snap=$id")
-      val st = dirStats(spark, s"$path/snap=$id",
-        prior.flatMap(_.stats.keys).distinct)
       // blooms recompute like compact() — dropping them made keyed
       // point-lookup pruning degrade permanently after a keyed
       // compaction (review r20)
-      val bl = dirBlooms(spark, s"$path/snap=$id",
+      val (st, bl) = dirMeta(spark, s"$path/snap=$id",
+        prior.flatMap(_.stats.keys).distinct,
         prior.flatMap(_.blooms.keys).distinct)
       commit(spark, path, prior :+
         Entry(id, isBase = true, stats = st, blooms = bl))
@@ -1059,6 +1066,6 @@ object Snapshots {
       s"delta ($after, $asOf] crosses compaction base " +
         s"${range.filter(_.isBase).map(_.id).mkString(",")}: history " +
         "was rewritten; delta-read below the base or diff full reads")
-    spark.read.parquet(range.map(e => s"$path/snap=${e.id}"): _*)
+    ParquetRead(spark, range.map(e => s"$path/snap=${e.id}"): _*)
   }
 }

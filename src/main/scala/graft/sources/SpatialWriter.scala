@@ -314,10 +314,13 @@ object SpatialWriter {
     val wanted = cells.map(c => s"cell=$c").toSet
     val picked = dirs.filter(d => wanted(d.getName))
     val scan =
-      if (dirs.isEmpty) spark.read.parquet(path)
-      else spark.read.option("basePath", path)
-        .parquet((if (picked.isEmpty) dirs.take(1) else picked)
-          .map(_.toString): _*)
+      if (dirs.isEmpty) ParquetRead(spark, path)
+      else {
+        val scanned = (if (picked.isEmpty) dirs.take(1) else picked)
+          .map(_.toString)
+        ParquetRead.reader(spark, scanned).option("basePath", path)
+          .parquet(scanned: _*)
+      }
     scan.filter(col("cell").isin(cells: _*))
   }
 
@@ -325,11 +328,11 @@ object SpatialWriter {
     * (the default reader view). */
   def readPrimary(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame =
-    spark.read.parquet(path).filter(!col("is_margin"))
+    ParquetRead(spark, path).filter(!col("is_margin"))
 
   /** Read including margin replicas — the probe-side view for
     * cell-local spatial joins. */
   def readWithMargins(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
 }

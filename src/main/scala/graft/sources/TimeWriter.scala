@@ -91,7 +91,7 @@ object TimeWriter {
     // non-midnight-aligned toExcl (e.g. '…-15 12:00') still has rows
     // in bucket '…-15'; the exact `ts < to` row filter below makes the
     // wider directory bound safe.
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
       .filter(col("t_bucket") >= date_trunc(granularity, from).cast("date") &&
         col("t_bucket") <= date_trunc(granularity, to).cast("date"))
       .filter(col(tsCol) >= from && col(tsCol) < to)

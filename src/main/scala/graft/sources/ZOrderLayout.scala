@@ -80,7 +80,7 @@ object ZOrderLayout {
       .write.mode("overwrite").parquet(path)
     // per-file boxes: column-pruned scan of just (x, y) grouped by the
     // physical file each row landed in
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
       .select(input_file_name().as("file"),
         col(xCol).cast(DoubleType).as("x"), col(yCol).cast(DoubleType).as("y"))
       .groupBy("file")
@@ -97,7 +97,7 @@ object ZOrderLayout {
   def selectFiles(spark: SparkSession, path: String,
                   xLo: Double, xHi: Double, yLo: Double, yHi: Double)
       : (Seq[String], Int) = {
-    val m = spark.read.parquet(s"$path/_zmanifest").collect()
+    val m = ParquetRead(spark, s"$path/_zmanifest").collect()
     val sel = m.filter { r =>
       def ok(loI: Int, hiI: Int, lo: Double, hi: Double): Boolean =
         r.isNullAt(loI) || r.isNullAt(hiI) ||
@@ -114,7 +114,7 @@ object ZOrderLayout {
   def read(spark: SparkSession, path: String,
            xLo: Double, xHi: Double, yLo: Double, yHi: Double): DataFrame = {
     val (files, _) = selectFiles(spark, path, xLo, xHi, yLo, yHi)
-    if (files.isEmpty) spark.read.parquet(path).limit(0)
-    else spark.read.parquet(files: _*)
+    if (files.isEmpty) ParquetRead(spark, path).limit(0)
+    else ParquetRead(spark, files: _*)
   }
 }

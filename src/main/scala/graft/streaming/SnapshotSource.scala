@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.Snapshots
+import graft.sources.{ParquetRead, Snapshots}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -69,7 +69,7 @@ object SnapshotSource {
     require(es.nonEmpty,
       s"SnapshotSource: no committed snapshots at $path (need >= 1 " +
         "commit to infer the schema)")
-    spark.read.parquet(s"$path/snap=${es.last.id}").schema
+    ParquetRead.schema(spark, s"$path/snap=${es.last.id}")
   }
 
   /** Convenience: the streaming frame for a snapshot table. */

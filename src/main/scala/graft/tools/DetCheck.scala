@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import graft.{GraftSession, Registry}
 
 /** Dev tool: determinism stress — every declared query must produce
@@ -32,7 +34,7 @@ object DetCheck {
               s" (sizes ${a.size} vs ${b.size})"))
         }
       } catch {
-        case e: Throwable => failed += 1
+        case NonFatal(e) => failed += 1
           println(s"FAIL ${q.name}: ${e.getMessage.linesIterator.next()}")
       }
     }

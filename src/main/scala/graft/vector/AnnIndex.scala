@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.functions.VectorKernels
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -140,11 +141,11 @@ object AnnIndex {
     * it on `cell` before any action to touch only those directories. */
   def readIndex(spark: SparkSession,
                 path: String): (Array[(Int, Array[Float])], DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = ParquetRead(spark, s"$path/centroids")
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1)
-    (cents, spark.read.parquet(s"$path/vectors"))
+    (cents, ParquetRead(spark, s"$path/vectors"))
   }
 
   /** [[search]] against a materialized index, touching only the

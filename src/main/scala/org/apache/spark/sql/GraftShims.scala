@@ -36,6 +36,36 @@ object GraftShims {
           -> "false"),
         spark.sessionState.newHadoopConf())
 
+  /** The Spark schema of one parquet file, read from its footer on
+    * the driver (row groups skipped) and converted exactly as Spark's
+    * own schema inference converts the footer it opens in a one-task
+    * job (`ParquetFileFormat.mergeSchemasInParallel`): the Spark
+    * schema stored in the footer when present, else the parquet
+    * schema through a converter built from the LIVE session conf —
+    * so `spark.sql.legacy.parquet.nanosAsLong` set before the call
+    * still reads nanosecond timestamps as Long. */
+  def parquetFileSchema(spark: SparkSession,
+                        file: org.apache.hadoop.fs.FileStatus)
+      : types.StructType = {
+    import execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
   /** Rebuild a DataFrame as a bare LogicalRDD over its own physical
     * RDD, WITHOUT origin statistics/constraints. Spark 4's
     * Dataset.(local)checkpoint copies the origin plan's COMPUTED

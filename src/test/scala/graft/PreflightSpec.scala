@@ -15,6 +15,13 @@ class PreflightSpec extends SpecBase {
     Preflight.check(spark, sfDir) // must not throw
   }
 
+  test("check opens the tables without a job: only the events.ts probe runs") {
+    // each table open reads one footer on the driver; the value probe
+    // (one min/max aggregate) is the only Spark work
+    val (_, jobs) = jobsDuring(Preflight.check(spark, sfDir))
+    assert(jobs.size <= 2, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+  }
+
   test("diff: type change and missing column are fatal, extra column warns") {
     val drifted = StructType(Seq(
       StructField("event_id", LongType),

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.{LsdDb, SpecBase}
 import graft.spatial.{Bounds, SkyPix}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,42 +37,10 @@ class FootprintReadSpec extends SpecBase {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  /** File-listing jobs `body` starts on this thread (Spark names
-    * them "Listing leaf files and directories for N paths"; schema
-    * inference runs its own job, not counted). The listener bus is
-    * asynchronous but ordered: once a marker job run after `body` is
-    * seen, every job `body` started has been seen too. */
-  private def listingJobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"fp-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(e.properties.getProperty(
-            "spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "footprint read")
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      var n = 0
-      var done = false
-      while (!done) {
-        val d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(d != null, "marker job never reached the listener")
-        if (d == "marker") done = true
-        else if (d.startsWith("Listing leaf files")) n += 1
-      }
-      n
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
+  /** File-listing jobs `body` starts (Spark names them "Listing leaf
+    * files and directories for N paths"). */
+  private def listingJobsDuring(body: => Unit): Int =
+    jobsDuring(body)._2.count(_.startsWith("Listing leaf files"))
 
   test("footprint read rows equal the full scan filtered to the cells") {
     val full = spark.read.parquet(layout)
