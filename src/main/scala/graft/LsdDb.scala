@@ -209,7 +209,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
 
   /** The PROBE view of a RESOLVED margin cache ([[marginCacheFor]]):
     * primaries AND margin replicas with `cell`/`is_margin` kept — the
-    * B side of [[graft.spatial.CrossMatch.applyPreMargined]]. */
+    * B side of [[graft.spatial.CrossMatch.Margined]]. */
   def tableMarginedRef(ref: MarginCacheRef): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(ParquetRead(spark, ref.path))
@@ -218,7 +218,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
   /** The PROBE view of a margin-cache layout: primaries AND margin
     * replicas, `cell`/`is_margin` kept (they are the join key and the
     * replica flag), ts normalization as [[table]]. This is the B side
-    * of [[graft.spatial.CrossMatch.applyPreMargined]] — the write-time
+    * of [[graft.spatial.CrossMatch.Margined]] — the write-time
     * neighbor replication means a cross-match against it is a plain
     * cell equi-join with NO query-time explode of the stored catalog
     * (LSD's neighbor-cache economics). */

@@ -322,7 +322,8 @@ object Joins {
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
     graft.spatial.CrossMatch
-      .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat", 1.0,
+      .pairs(a, graft.spatial.CrossMatch.Blocking(b),
+        "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat", 1.0,
         capLat = 31.0) // data lies in |lat| ≤ 30 → level-6 blocking
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
       .filter(col("dist_deg") <= 0.95)
@@ -366,7 +367,8 @@ object Joins {
     val b = skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
       "b_id", "b_lon", "b_lat")
     val matched = graft.spatial.CrossMatch
-      .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
+      .pairs(a, graft.spatial.CrossMatch.Blocking(b),
+        "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
         1.0, capLat = xmatchCapLat)
       .filter(Det.d6(col("dist_deg")) <= 0.95)
       .select("a_id").distinct()
@@ -433,8 +435,9 @@ object Joins {
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
     graft.spatial.CrossMatch
-      .allPairsPreMargined(a, bM, "a_id", "a_lon", "a_lat",
-        "b_id", "b_lon", "b_lat", 1.0, level, capLat = xmatchCapLat)
+      .pairs(a, graft.spatial.CrossMatch.Margined(bM, level),
+        "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat", 1.0,
+        capLat = xmatchCapLat)
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
       .filter(col("dist_deg") <= 0.95)
       .withColumn("match_rank", row_number().over(w))
@@ -880,7 +883,8 @@ object Joins {
     * d6-snapped haversine on the oid/sid sky projections. Cut radius
     * 0.87 (distinct from q_xmatch's 0.95 so the lines cannot mask
     * each other); the engine side blocks at a superset and decides
-    * membership/rank on the snapped value (CrossMatch.applySnapped),
+    * membership/rank on the snapped value (CrossMatch.nearest with
+    * `snapped`),
     * so both engines evaluate the identical relation. */
   /** The ONE declared QL xmatch relation (orders_sky ↷ supplier_sky,
     * radius 0.87, nmax 2, snapD6) as a ready session over the
@@ -1463,7 +1467,8 @@ object Joins {
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
     val m = graft.spatial.CrossMatch
-      .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
+      .pairs(a, graft.spatial.CrossMatch.Blocking(b),
+        "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
         1.0, capLat = xmatchCapLat)
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
       .filter(col("dist_deg") <= 0.95)
@@ -1542,17 +1547,17 @@ object Joins {
       "c_id", "c_lon", "c_lat")
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
-    // hop 1 KEEPS the matched b coordinates (allPairsCarry keepCoords)
+    // hop 1 KEEPS the matched b coordinates (pairs' keepCoords)
     // so hop 2's geometry needs no join-back onto b — and hop 2
     // CARRIES (b_id, dist_ab) through its blocked join so the final
     // output needs no join-back onto hop 1 (r22: both re-attach joins
     // of the r21 shape eliminated; same candidate sets, same window
     // rank keys ⇒ identical rows). Carried names are prefixed (hb_*)
-    // because allPairsCarry reserves a_*/b_* for the hop's own sides.
+    // because pairs reserves a_*/b_* for the hop's own sides.
     val hop1 = graft.spatial.CrossMatch
-      .allPairsCarry(a, b, "a_id", "a_lon", "a_lat",
-        "b_id", "b_lon", "b_lat", 1.0, capLat = xmatchCapLat,
-        carryA = Nil, carryB = Nil, keepCoords = true)
+      .pairs(a, graft.spatial.CrossMatch.Blocking(b), "a_id", "a_lon",
+        "a_lat", "b_id", "b_lon", "b_lat", 1.0, capLat = xmatchCapLat,
+        keepCoords = true)
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("dist_deg") <= 0.95)
@@ -1560,10 +1565,9 @@ object Joins {
         col("dist_deg").as("hb_dist"), col("b_lon").as("hb_lon"),
         col("b_lat").as("hb_lat"))
     graft.spatial.CrossMatch
-      .allPairsCarry(hop1, c, "a_id", "hb_lon", "hb_lat",
-        "c_id", "c_lon", "c_lat", 1.0, capLat = xmatchCapLat,
-        carryA = Seq("hb_id", "hb_dist"), carryB = Nil,
-        keepCoords = false)
+      .pairs(hop1, graft.spatial.CrossMatch.Blocking(c), "a_id", "hb_lon",
+        "hb_lat", "c_id", "c_lon", "c_lat", 1.0, capLat = xmatchCapLat,
+        carryA = Seq("hb_id", "hb_dist"))
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("dist_deg") <= 0.95)

@@ -89,7 +89,7 @@ object PipelineOps {
     * against the exploded corpus — the corpus is never shuffled, and
     * per-doc hit counts aggregate map-side first.
     *
-    * The broadcast is GUARDED (the CrossMatch.skewSafe pattern): the
+    * The broadcast is GUARDED (the CrossMatch.pairs skew pattern): the
     * eval-shingle relation is corpus-derived, so "tiny" is an
     * expectation, not an invariant — at 100 TB a pathological eval
     * split could exceed driver/broadcast memory. We count the distinct

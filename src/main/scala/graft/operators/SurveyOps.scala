@@ -230,7 +230,7 @@ object SurveyOps {
     * (SURVEY.md §1 xmatch, UNVERIFIED).
     *
     * Scale shape: block once at the catalog's reference epoch with the
-    * radius inflated by the maximum possible displacement (allPairsCarry
+    * radius inflated by the maximum possible displacement (CrossMatch.pairs
     * at 0.7°, a conservative superset — proof at [[pmBlockR]]), then
     * refine row-locally on the propagated distance. Candidates never
     * re-join their payload (pm, epoch ride through the blocked join),
@@ -288,7 +288,8 @@ object SurveyOps {
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
     graft.spatial.CrossMatch
-      .allPairsCarry(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
+      .pairs(a, graft.spatial.CrossMatch.Blocking(b),
+        "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
         pmBlockR, capLat = 31.0, // data lies in |lat| ≤ 30
         carryA = Seq("ep"), carryB = Seq("pm_lon", "pm_lat"),
         keepCoords = true)
@@ -986,7 +987,8 @@ object SurveyOps {
       // block at 0.95 > 0.9 + d6 slack: a pair whose RAW distance is
       // 0.9000004 snaps to 0.900000 and must survive the block (the
       // q_xmatch pattern)
-      .allPairs(c, c, "id", "lon", "lat", "id", "lon", "lat", 0.95,
+      .pairs(c, graft.spatial.CrossMatch.Blocking(c),
+        "id", "lon", "lat", "id", "lon", "lat", 0.95,
         capLat = 31.0) // data lies in |lat| ≤ 30
       .filter(col("a_id") =!= col("b_id"))
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
@@ -1483,7 +1485,8 @@ object SurveyOps {
                    b: org.apache.spark.sql.DataFrame,
                    dedup: Boolean, cnt: String) = {
         val p = graft.spatial.CrossMatch
-          .allPairs(a, b, "id", "lon", "lat", "id", "lon", "lat", blockR,
+          .pairs(a, graft.spatial.CrossMatch.Blocking(b),
+            "id", "lon", "lat", "id", "lon", "lat", blockR,
             capLat = 31.0) // data lies in |lat| ≤ 30
         val q = if (dedup) p.filter(col("a_id") < col("b_id")) else p
         q.withColumn("dist_deg", Det.d6(col("dist_deg")))
@@ -1825,8 +1828,9 @@ object SurveyOps {
             .as("lat")), col("det_id"))
       // blocking at 0.15 raw ⊇ 0.12 snapped cut; data |lat| ≤ 25 →
       // capLat 26 gives level-8 cells (fine blocking, no cap traffic)
-      val edges = CrossMatch.allPairs(d, d, "det_id", "lon", "lat",
-          "det_id", "lon", "lat", radiusDeg = 0.15, capLat = 26.0)
+      val edges = CrossMatch.pairs(d, CrossMatch.Blocking(d),
+          "det_id", "lon", "lat", "det_id", "lon", "lat",
+          radiusDeg = 0.15, capLat = 26.0)
         .filter(col("a_id") =!= col("b_id"))
         .filter(Det.d6(col("dist_deg")) <= 0.12)
         .select(col("a_id").as("src"), col("b_id").as("dst"))

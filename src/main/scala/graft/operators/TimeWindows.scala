@@ -372,7 +372,8 @@ object TimeWindows {
     * (StreamOps.xmatchStreamMargined: NO per-batch explode of the
     * catalog, no watermark, no state store) → append memory sink.
     *
-    * Oracle determinism is the applySnapped discipline: the stream
+    * Oracle determinism is the snapped-nearest discipline
+    * (CrossMatch.nearest with `snapped`): the stream
     * operator blocks at a SUPERSET radius, then membership is decided
     * on the d6-snapped distance — so a raw distance within one snap
     * half-step of the boundary can never be kept by one engine and
@@ -400,7 +401,7 @@ object TimeWindows {
        |SELECT det_id, obj_id, dist_deg FROM p WHERE dist_deg <= 0.6171
        |ORDER BY det_id, obj_id""".stripMargin) { (s, dir) =>
     val radius = 0.6171
-    val sup = radius + math.max(radius * 1e-3, 1e-6)
+    val sup = radius + graft.spatial.CrossMatch.snapHeadroom(radius)
     val root = graft.operators.Joins.ensureQlMarginDb(s, dir)
     val path = s"$root/supplier_sky.parquet"
     // contract check at the SUPERSET blocking radius, not the cut

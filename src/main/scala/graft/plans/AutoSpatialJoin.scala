@@ -204,7 +204,7 @@ object NeighborCells {
 /** Optimizer rule: rewrite `Filter(sky_dist(al, aa, bl, bb) <= r,
   * Join(A, B, inner/cross, no condition))` — the plan a user gets from
   * the NAIVE `a.crossJoin(b).where(skyDist(...) <= r)` — into the
-  * cell-blocked two-channel join [[CrossMatch.allPairs]] builds by
+  * cell-blocked two-channel join [[CrossMatch.pairs]] builds by
   * hand:
   *
   *   - cell channel: both sides filtered below the polar cap, A keyed

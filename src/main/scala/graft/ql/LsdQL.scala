@@ -1,7 +1,7 @@
 package graft.ql
 
 import graft.LsdDb
-import graft.spatial.SkyPix
+import graft.spatial.{CrossMatch, SkyPix}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
@@ -104,14 +104,14 @@ final case class IdSpec(lonCol: String, latCol: String, keyCol: String,
   * Deep-field skew mitigation is an OPTION on the relation, not a
   * separate library call: set `hotThreshold` (left-side rows per
   * blocking cell above which a cell is treated as a deep field) and
-  * the planner routes through [[graft.spatial.CrossMatch.skewSafe]] —
+  * the planner passes it to [[graft.spatial.CrossMatch.pairs]] —
   * hot cells salted into `salts` even tasks, cold cells on the plain
   * plan, row-identical results either way. A survey user whose first
   * query hits the deep field turns this on per-relation; the default
   * (None) is the unsalted plan.
   *
   * `snapD6 = true` switches the relation to SNAPPED semantics
-  * ([[graft.spatial.CrossMatch.applySnapped]]): boundary membership
+  * ([[graft.spatial.CrossMatch.nearest]] `snapped`): boundary membership
   * and the `_NR` ordering are decided on the 1e-6-degree-snapped
   * distance, so the relation is engine-exact at the radius boundary —
   * the same determinism discipline [[graft.spatial.Bounds.Cone]]
@@ -778,8 +778,8 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
           // (the bounded driving set broadcasts or exchanges; the
           // catalog scan feeds the join directly). Declared skew
           // mitigation COMPOSES with the route (the hot driving cells
-          // salt against the stored replicas — CrossMatch
-          // applyPreMargined*Skew). Falls back to the on-the-fly
+          // salt against the stored replicas — CrossMatch.pairs over a
+          // Margined probe). Falls back to the on-the-fly
           // blocking join — with the REASON surfaced through
           // [[explain]] — when: the table is a CTE/derived relation,
           // no (fresh) margin layout exists (stale snapshot caches
@@ -788,10 +788,9 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
           // (per-query dmax can exceed it), or the written level is
           // too fine for the radius.
           val snapHeadroom =
-            if (sjd.snapD6) math.max(sjd.radiusDeg * 1e-3, 1e-6) else 0.0
+            if (sjd.snapD6) CrossMatch.snapHeadroom(sjd.radiusDeg) else 0.0
           val needMargin = sjd.radiusDeg + snapHeadroom
-          val routeDecision
-              : Either[String, (org.apache.spark.sql.DataFrame, Int)] =
+          val routeDecision: Either[String, CrossMatch.Margined] =
             if (fullScope.contains(item.table))
               Left("matched table is a CTE/derived relation — " +
                 "no stored layout to route through")
@@ -806,17 +805,17 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
                     s"cover the effective radius $needMargin deg " +
                     "(radius + snap headroom) — rewrite the cache " +
                     "with a larger margin or lower dmax")
-                else if (ref.level >
-                    graft.spatial.CrossMatch.levelFor(needMargin))
+                else if (ref.level > CrossMatch.levelFor(needMargin))
                   Left(s"written level ${ref.level} is too fine for " +
                     s"radius $needMargin deg (max " +
-                    s"${graft.spatial.CrossMatch.levelFor(needMargin)})" +
+                    s"${CrossMatch.levelFor(needMargin)})" +
                     " — 3x3 neighbor closure would drop pairs")
-                else Right((db.tableMarginedRef(ref), ref.level))
+                else Right(CrossMatch.Margined(db.tableMarginedRef(ref),
+                  ref.level))
               }
           bctx.foreach(bc => bc.route(routeDecision match {
-            case Right((_, lvl)) =>
-              s"xmatch ${item.table}: margin cache (level=$lvl, " +
+            case Right(m) =>
+              s"xmatch ${item.table}: margin cache (level=${m.level}, " +
                 s"radius=$needMargin deg" +
                 sjd.hotThreshold.fold("")(h =>
                   s", hot cells > $h salted x${sjd.salts}") + ")"
@@ -833,45 +832,11 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
           // already names the declared mitigation — review r20).
           val effHot =
             if (bctx.exists(_.explaining)) None else sjd.hotThreshold
-          val rawPairs = routeDecision match {
-            case Right((bm, lvl)) =>
-              (sjd.snapD6, effHot) match {
-                case (true, None) =>
-                  graft.spatial.CrossMatch.applyPreMarginedSnapped(df, bm,
-                    sjd.leftKey, sjd.lonL, sjd.latL,
-                    sjd.rightKey, sjd.lonR, sjd.latR,
-                    sjd.radiusDeg, sjd.nmax, lvl)
-                case (false, None) =>
-                  graft.spatial.CrossMatch.applyPreMargined(df, bm,
-                    sjd.leftKey, sjd.lonL, sjd.latL,
-                    sjd.rightKey, sjd.lonR, sjd.latR,
-                    sjd.radiusDeg, sjd.nmax, lvl)
-                case (true, Some(ht)) =>
-                  graft.spatial.CrossMatch.applyPreMarginedSnappedSkew(
-                    df, bm, sjd.leftKey, sjd.lonL, sjd.latL,
-                    sjd.rightKey, sjd.lonR, sjd.latR,
-                    sjd.radiusDeg, sjd.nmax, lvl, ht, sjd.salts)
-                case (false, Some(ht)) =>
-                  graft.spatial.CrossMatch.applyPreMarginedSkew(df, bm,
-                    sjd.leftKey, sjd.lonL, sjd.latL,
-                    sjd.rightKey, sjd.lonR, sjd.latR,
-                    sjd.radiusDeg, sjd.nmax, lvl, ht, sjd.salts)
-              }
-            case Left(_) =>
-              if (sjd.snapD6) graft.spatial.CrossMatch.applySnapped(df, right,
-                sjd.leftKey, sjd.lonL, sjd.latL,
-                sjd.rightKey, sjd.lonR, sjd.latR, sjd.radiusDeg, sjd.nmax,
-                hotThreshold = effHot, salts = sjd.salts)
-              else effHot match {
-                case Some(ht) => graft.spatial.CrossMatch.skewSafe(df, right,
-                  sjd.leftKey, sjd.lonL, sjd.latL,
-                  sjd.rightKey, sjd.lonR, sjd.latR, sjd.radiusDeg, sjd.nmax,
-                  ht, sjd.salts)
-                case None => graft.spatial.CrossMatch(df, right,
-                  sjd.leftKey, sjd.lonL, sjd.latL,
-                  sjd.rightKey, sjd.lonR, sjd.latR, sjd.radiusDeg, sjd.nmax)
-              }
-          }
+          val rawPairs = CrossMatch.nearest(df,
+            routeDecision.getOrElse(CrossMatch.Blocking(right)),
+            sjd.leftKey, sjd.lonL, sjd.latL,
+            sjd.rightKey, sjd.lonR, sjd.latR, sjd.radiusDeg, sjd.nmax,
+            snapped = sjd.snapD6, hotThreshold = effHot, salts = sjd.salts)
           // internal pair keys get RESERVED names before the attach
           // joins: a user table with its own `a_id`/`b_id` column
           // would otherwise lose it silently (drop(name) removes ALL

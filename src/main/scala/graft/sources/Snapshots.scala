@@ -370,6 +370,23 @@ object Snapshots {
       (dirStats(back, statsCols), dirBlooms(back, bloomCols))
     }
 
+  /** Write `df` as the next snapshot after `prior` and commit it with
+    * the zone map and blooms of `statsCols`/`bloomCols` over the
+    * written directory; returns its id. The caller holds the writer
+    * lock. */
+  private def writeNext(spark: SparkSession, path: String,
+                        prior: Seq[Entry], df: DataFrame,
+                        statsCols: Seq[String], bloomCols: Seq[String],
+                        isBase: Boolean,
+                        tag: Option[String] = None): Long = {
+    val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
+    df.write.mode("overwrite").parquet(s"$path/snap=$id")
+    val (st, bl) = dirMeta(spark, s"$path/snap=$id", statsCols, bloomCols)
+    commit(spark, path, prior :+
+      Entry(id, isBase, tag = tag, stats = st, blooms = bl))
+    id
+  }
+
   /** Append `df` as a new snapshot; returns its id. Stages the data
     * directory completely before the commit-log swap, so readers can
     * never observe a partial snapshot. `statsCols` names columns whose
@@ -383,13 +400,8 @@ object Snapshots {
              bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
     withLock(spark, path) {
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      df.write.mode("overwrite").parquet(s"$path/snap=$id")
-      val (st, bl) = dirMeta(spark, s"$path/snap=$id", statsCols, bloomCols)
-      commit(spark, path, prior :+
-        Entry(id, isBase = false, stats = st, blooms = bl))
-      id
+      writeNext(spark, path, entries(spark, path), df, statsCols,
+        bloomCols, isBase = false)
     }
   }
 
@@ -410,14 +422,8 @@ object Snapshots {
       prior.find(_.tag.contains(tag)) match {
         case Some(e) => e.id // replayed batch: already committed
         case None =>
-          val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-          df.write.mode("overwrite").parquet(s"$path/snap=$id")
-          val (st, bl) =
-            dirMeta(spark, s"$path/snap=$id", statsCols, bloomCols)
-          commit(spark, path, prior :+
-            Entry(id, isBase = false, tag = Some(tag), stats = st,
-              blooms = bl))
-          id
+          writeNext(spark, path, prior, df, statsCols, bloomCols,
+            isBase = false, tag = Some(tag))
       }
     }
   }
@@ -431,25 +437,25 @@ object Snapshots {
     * resolves through the old directories, so compaction is purely a
     * physical operation — same rows, fewer directories. */
   def compact(spark: SparkSession, path: String): Long =
+    compactTo(spark, path)(read(spark, path))
+
+  /** Commit `head` (evaluated INSIDE the writer lock) as a new BASE
+    * snapshot. Resolving the head under the lock matters: the reads
+    * pin the directory list eagerly, and a snapshot committed between
+    * an unlocked resolve and the lock would be silently shadowed by
+    * the new base — permanent data loss once vacuum runs. A base
+    * folds all prior data, so its zone map and blooms are recomputed
+    * over the union of every column any prior entry tracked:
+    * readPruned/readPrunedKey keep pruning across compaction (dropping the blooms made keyed point-lookup pruning degrade
+    * permanently after a keyed compaction). */
+  private def compactTo(spark: SparkSession, path: String)(
+      head: => DataFrame): Long =
     withLock(spark, path) {
-      // resolve the head INSIDE the lock: read() pins the directory
-      // list eagerly, and a snapshot committed between an unlocked
-      // resolve and the lock would be silently shadowed by the new
-      // base — permanent data loss once vacuum runs (review r20)
-      val current = read(spark, path)
+      val current = head
       val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      current.write.mode("overwrite").parquet(s"$path/snap=$id")
-      // a base folds all prior data → recompute its zone map and
-      // blooms over the union of every column any prior entry
-      // tracked, so readPruned/readPrunedKey keep pruning across
-      // compaction
-      val (st, bl) = dirMeta(spark, s"$path/snap=$id",
+      writeNext(spark, path, prior, current,
         prior.flatMap(_.stats.keys).distinct,
-        prior.flatMap(_.blooms.keys).distinct)
-      commit(spark, path, prior :+
-        Entry(id, isBase = true, stats = st, blooms = bl))
-      id
+        prior.flatMap(_.blooms.keys).distinct, isBase = true)
     }
 
   /** Vacuum: physically delete snapshots OLDER than the last base and
@@ -507,6 +513,21 @@ object Snapshots {
     ParquetRead(spark, visible.map(e => s"$path/snap=${e.id}"): _*)
   }
 
+  /** [[read]] of only the visible directories whose entry passes
+    * `keep`; when every directory is pruned, an empty result with the
+    * head schema. */
+  private def readKept(spark: SparkSession, path: String,
+                       asOf: Option[Long])(keep: Entry => Boolean)
+      : DataFrame = {
+    val visible = visibleEntries(spark, path, asOf)
+    val kept = visible.filter(keep)
+    if (kept.nonEmpty)
+      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
+    else
+      ParquetRead(spark, s"$path/snap=${visible.last.id}")
+        .where(org.apache.spark.sql.functions.lit(false))
+  }
+
   /** Zone-map-pruned read: like [[read]], but snapshot directories
     * whose recorded `[min, max]` of `statCol` (written by
     * `append(statsCols = …)`) does NOT intersect `[lo, hi]` are
@@ -527,20 +548,13 @@ object Snapshots {
     * NaN are false). */
   def readPruned(spark: SparkSession, path: String, statCol: String,
                  lo: Double, hi: Double,
-                 asOf: Option[Long] = None): DataFrame = {
-    val visible = visibleEntries(spark, path, asOf)
-    val kept = visible.filter { e =>
+                 asOf: Option[Long] = None): DataFrame =
+    readKept(spark, path, asOf) { e =>
       e.stats.get(statCol) match {
         case Some((mn, mx)) => !(mx < lo || mn > hi) // NaN-safe: keep
         case None => true // no zone map for this column: must scan
       }
     }
-    if (kept.nonEmpty)
-      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
-    else // every directory pruned: empty result with the head schema
-      ParquetRead(spark, s"$path/snap=${visible.last.id}")
-        .where(org.apache.spark.sql.functions.lit(false))
-  }
 
   /** Bloom-pruned point-lookup read: like [[read]], but snapshot
     * directories whose recorded Bloom filter for `keyCol` (written by
@@ -559,7 +573,6 @@ object Snapshots {
     * `read(...).filter(col === value)` always. */
   def readPrunedKey(spark: SparkSession, path: String, keyCol: String,
                     value: Any, asOf: Option[Long] = None): DataFrame = {
-    val visible = visibleEntries(spark, path, asOf)
     // A tagged bloom only prunes when the probe's runtime class can
     // reproduce the writer's canonical: integral probes for "i"
     // columns, string probes for "s" columns. Tag/probe mismatches
@@ -577,17 +590,12 @@ object Snapshots {
       case Some("s") => value.isInstanceOf[String]
       case Some(_) => false // "o"/unknown: canonical not reproducible
     }
-    val kept = visible.filter { e =>
+    readKept(spark, path, asOf) { e =>
       e.blooms.get(keyCol) match {
         case Some(b) if probeOk(b.tag) => b.mightContain(v)
         case _ => true // no bloom / unprobeable type: must scan
       }
     }
-    if (kept.nonEmpty)
-      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
-    else // every directory pruned: empty result with the head schema
-      ParquetRead(spark, s"$path/snap=${visible.last.id}")
-        .where(org.apache.spark.sql.functions.lit(false))
   }
 
   /** Whether entry `e` can possibly hold `keyCol = v`: its zone map
@@ -634,13 +642,7 @@ object Snapshots {
   def readPrunedIn(spark: SparkSession, path: String, keyCol: String,
                    vs: Seq[Double], asOf: Option[Long] = None): DataFrame = {
     require(vs.nonEmpty, "IN-list probe needs at least one value")
-    val visible = visibleEntries(spark, path, asOf)
-    val kept = visible.filter(e => vs.exists(v => mayHoldEq(e, keyCol, v)))
-    if (kept.nonEmpty)
-      ParquetRead(spark, kept.map(e => s"$path/snap=${e.id}"): _*)
-    else // every directory pruned: empty result with the head schema
-      ParquetRead(spark, s"$path/snap=${visible.last.id}")
-        .where(org.apache.spark.sql.functions.lit(false))
+    readKept(spark, path, asOf)(e => vs.exists(v => mayHoldEq(e, keyCol, v)))
   }
 
   // ---- keyed tables: merge-on-read upserts/deletes (CDC-lite) ------
@@ -722,33 +724,30 @@ object Snapshots {
     // a status command over a counter file
     for (_ <- 0 until 2) {
       try {
-        if (!f.exists(p)) return (0L, 0L)
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
-          .map(_.group(1).toLong).getOrElse(0L)
-        return (n("retries"), n("aborts"))
+        return readOcStats(f, p)
       } catch { case _: java.io.IOException => Thread.sleep(20) }
     }
     (0L, 0L)
   }
+
+  /** (retries, aborts) of the counter file `p`; (0, 0) when absent. */
+  private def readOcStats(f: FileSystem, p: Path): (Long, Long) =
+    if (!f.exists(p)) (0L, 0L)
+    else {
+      val in = f.open(p)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+      def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
+        .map(_.group(1).toLong).getOrElse(0L)
+      (n("retries"), n("aborts"))
+    }
 
   /** Accumulate counters; caller MUST hold the writer lock (the
     * read-modify-write below is only safe serialized). */
   private def bumpOcStats(f: FileSystem, path: String,
                           retries: Long, aborts: Long): Unit = {
     val p = new Path(path, OcStats)
-    val (r0, a0) =
-      if (!f.exists(p)) (0L, 0L)
-      else {
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
-          .map(_.group(1).toLong).getOrElse(0L)
-        (n("retries"), n("aborts"))
-      }
+    val (r0, a0) = readOcStats(f, p)
     val tmp = new Path(path, s"$OcStats.tmp")
     val o = f.create(tmp, true)
     try o.write(s"retries:${r0 + retries}\naborts:${a0 + aborts}\n"
@@ -1022,23 +1021,7 @@ object Snapshots {
     * new BASE snapshot. Post-base reads scan one directory + later
     * deltas; [[vacuum]] then reclaims pre-base history as usual. */
   def compactMerged(spark: SparkSession, path: String, key: String): Long =
-    withLock(spark, path) {
-      // head resolved INSIDE the lock — same shadowed-commit data-loss
-      // race as [[compact]] (review r20)
-      val current = readMerged(spark, path, key)
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      current.write.mode("overwrite").parquet(s"$path/snap=$id")
-      // blooms recompute like compact() — dropping them made keyed
-      // point-lookup pruning degrade permanently after a keyed
-      // compaction (review r20)
-      val (st, bl) = dirMeta(spark, s"$path/snap=$id",
-        prior.flatMap(_.stats.keys).distinct,
-        prior.flatMap(_.blooms.keys).distinct)
-      commit(spark, path, prior :+
-        Entry(id, isBase = true, stats = st, blooms = bl))
-      id
-    }
+    compactTo(spark, path)(readMerged(spark, path, key))
 
   /** Incremental (delta) read: ONLY the rows that landed in snapshots
     * `(after, asOf]` — the "process just the new data" primitive an

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * position is the spherical mean of its members.
   *
   * Spark-native algorithm, no driver-side state:
-  *   1. candidate edges from [[CrossMatch.allPairs]] (cell-blocked,
+  *   1. candidate edges from [[CrossMatch.pairs]] (cell-blocked,
   *      shuffle-bounded);
   *   2. distributed label propagation to the component minimum —
   *      iterate `label := min(label, neighbors' labels)` to fixpoint.
@@ -38,8 +38,8 @@ object ObjectCatalog {
 
     // candidate edges (cell-blocked, shuffle-bounded), then the shared
     // min-label component engine (graft.operators.Components)
-    val pairs = CrossMatch.allPairs(d, d, "det_id", "lon", "lat",
-      "det_id", "lon", "lat", radiusDeg)
+    val pairs = CrossMatch.pairs(d, CrossMatch.Blocking(d),
+      "det_id", "lon", "lat", "det_id", "lon", "lat", radiusDeg)
       .filter(col("a_id") =!= col("b_id"))
       .select(col("a_id").as("src"), col("b_id").as("dst"))
     val assignments = assign(d, pairs, maxIter)
@@ -49,7 +49,7 @@ object ObjectCatalog {
   /** FoF phase 2 alone: component labels from a caller-supplied edge
     * relation (columns src, dst). Callers that need oracle-exact edge
     * semantics (e.g. a snapped-distance radius cut) build the pair
-    * relation themselves — typically [[CrossMatch.allPairs]] at a
+    * relation themselves — typically [[CrossMatch.pairs]] at a
     * superset radius, snap, re-cut — and hand it here; `build` is this
     * with the raw-distance default edges. `d` must have column det_id. */
   def assign(d: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame =

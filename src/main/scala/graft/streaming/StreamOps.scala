@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.spatial.CrossMatch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,28 +65,6 @@ object StreamOps {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
-  /** S6 — streaming spatial enrichment (alert cross-match): join a
-    * DETECTION STREAM against a static object catalog, emitting every
-    * catalog object within `radiusDeg` of each detection. The modern
-    * form of the reference's detection→object matching, applied to a
-    * live alert feed.
-    *
-    * Shape: stream-static equi-join on the SkyPix blocking cell — the
-    * static side is exploded (strip-pruned) into its neighbor cells at
-    * plan time, the stream side computes one home cell per row, the
-    * exact great-circle refine follows. Completely STATELESS (no
-    * watermark, no state store, append mode): each micro-batch is a
-    * map-side join against the broadcast/cached catalog, so the
-    * stream never shuffles and latency is one batch.
-    *
-    * Columns in: stream (idCol, lonCol, latCol, …); catalog (objIdCol,
-    * objLonCol, objLatCol). Out: stream row + obj_id + dist_deg.
-    *
-    * Limitation: cell-channel only — complete below |lat| ≈ 85°
-    * (CrossMatch.CapLat). Polar alerts would need the batch path's
-    * broadcast cap channel; a stream-side union of the two channels is
-    * the extension point.
-    */
   /** S7 — STREAM-STREAM coincidence join: two live detection streams
     * (e.g. two instruments), emitting pairs within `radiusDeg` on the
     * sky AND `maxDtSeconds` in time — transient confirmation, the
@@ -107,7 +86,7 @@ object StreamOps {
                         idA: String, idB: String,
                         radiusDeg: Double, maxDtSeconds: Long,
                         watermark: String): DataFrame = {
-    import graft.spatial.{CrossMatch, SkyPix}
+    import graft.spatial.SkyPix
     val level = CrossMatch.levelFor(radiusDeg)
     val aw = a.select(col(idA).as("id_a"), col("ts").as("ts_a"),
         col("lon").as("lon_a"), col("lat").as("lat_a"))
@@ -129,25 +108,31 @@ object StreamOps {
       .select("id_a", "id_b", "ts_a", "ts_b", "dt_s", "dist_deg")
   }
 
+  /** S6 — streaming spatial enrichment (alert cross-match): join a
+    * DETECTION STREAM against a static object catalog, emitting every
+    * catalog object within `radiusDeg` of each detection. The modern
+    * form of the reference's detection→object matching, applied to a
+    * live alert feed.
+    *
+    * Shape: [[graft.spatial.CrossMatch.pairs]] with the stream as A and
+    * a `Blocking` probe — a stream-static equi-join on the SkyPix
+    * blocking cell (the static catalog exploded, strip-pruned, into its
+    * neighbor cells at plan time; one home cell per stream row) plus
+    * the broadcast polar-cap channel, then the exact great-circle
+    * refine. Completely STATELESS (no watermark, no state store, append
+    * mode): each micro-batch joins against the static catalog, so
+    * latency is one batch, and results equal the batch operator's for
+    * any sky, poles included.
+    *
+    * Columns in: stream (lonCol, latCol, …); catalog (objIdCol,
+    * objLonCol, objLatCol). Out: stream row + obj_id + dist_deg.
+    */
   def xmatchStream(dets: DataFrame, catalog: DataFrame,
                    lonCol: String, latCol: String,
                    objIdCol: String, objLonCol: String, objLatCol: String,
-                   radiusDeg: Double): DataFrame = {
-    import graft.spatial.{CrossMatch, SkyPix}
-    val level = CrossMatch.levelFor(radiusDeg)
-    val cat = catalog.select(
-      col(objIdCol).as("obj_id"), col(objLonCol).as("obj_lon"),
-      col(objLatCol).as("obj_lat"))
-      .withColumn("cell", explode(SkyPix.neighborCellsWithin(
-        col("obj_lon"), col("obj_lat"), level, radiusDeg)))
-    dets
-      .withColumn("cell", SkyPix.cell(col(lonCol), col(latCol), level))
-      .join(cat, "cell")
-      .withColumn("dist_deg", CrossMatch.distDeg(
-        col(lonCol), col(latCol), col("obj_lon"), col("obj_lat")))
-      .filter(col("dist_deg") <= radiusDeg)
-      .drop("cell", "obj_lon", "obj_lat")
-  }
+                   radiusDeg: Double): DataFrame =
+    streamPairs(dets, CrossMatch.Blocking(catalog), lonCol, latCol,
+      objIdCol, objLonCol, objLatCol, radiusDeg, CrossMatch.CapLat)
 
   /** [[xmatchStream]] against a STORED MARGIN LAYOUT — the streaming
     * twin of the LsdQL margin route, and the LSD-era realtime shape:
@@ -157,13 +142,9 @@ object StreamOps {
     * each micro-batch is a STATELESS stream-static equi-join on the
     * home cell — no explode of the catalog per batch, no watermark,
     * no state store; the catalog scan feeds the join directly and the
-    * stream side (small per batch) broadcasts or exchanges.
-    *
-    * Channel decomposition mirrors CrossMatch.allPairsPreMargined
-    * exactly: cell-local pairs below `capLat`, plus a broadcast
-    * polar-cap channel over PRIMARY catalog rows (strictly-above-cap
-    * disjointness, same-hemisphere signum filter) — so results equal
-    * the batch operator's for any sky, poles included.
+    * stream side (small per batch) broadcasts or exchanges. The pairs
+    * come from [[graft.spatial.CrossMatch.pairs]] with a `Margined`
+    * probe, cap channel included.
     *
     * The written margin must cover `radiusDeg` (callers verify via
     * `SpatialWriter.requireMargin`); `level` is the layout's written
@@ -171,47 +152,31 @@ object StreamOps {
     * (stream row, catalog row) pair within radius: stream columns +
     * `obj_id` + `dist_deg` (raw — callers snapping for oracle
     * determinism block at a superset radius and cut on the snap,
-    * the applySnapped discipline). */
+    * as `CrossMatch.nearest(snapped = true)` does). */
   def xmatchStreamMargined(dets: DataFrame, catalogMargined: DataFrame,
                            lonCol: String, latCol: String,
                            objIdCol: String, objLonCol: String,
                            objLatCol: String,
                            radiusDeg: Double, level: Int,
-                           capLat: Double = graft.spatial.CrossMatch.CapLat)
-      : DataFrame = {
-    import graft.spatial.{CrossMatch, SkyPix}
-    require(radiusDeg > 0 && radiusDeg <= 1.0 && capLat >= radiusDeg,
-      s"radiusDeg in (0,1] and capLat >= radiusDeg required, got " +
-        s"radius=$radiusDeg capLat=$capLat")
-    // same closure guard as allPairsPreMargined: write-time replication
-    // only reaches the immediate 3x3 neighbors, so a layout written at
-    // a level too fine for this radius would silently DROP cross-cell
-    // pairs — fail loudly instead (review r19, ADVICE)
-    require(level <= CrossMatch.levelFor(radiusDeg, capLat),
-      s"margin layout written at level $level is too fine for radius " +
-        s"$radiusDeg below lat $capLat (max " +
-        s"${CrossMatch.levelFor(radiusDeg, capLat)})")
-    val cat = catalogMargined.select(
-      col(objIdCol).as("obj_id"), col(objLonCol).as("obj_lon"),
-      col(objLatCol).as("obj_lat"), col("cell"), col("is_margin"))
-    val ch1 = dets.filter(abs(col(latCol)) <= capLat)
-      .withColumn("cell", SkyPix.cell(col(lonCol), col(latCol), level))
-      .join(cat.filter(abs(col("obj_lat")) <= capLat)
-        .drop("is_margin"), "cell")
-      .drop("cell")
-    val capEdge = capLat - radiusDeg
-    val prim = cat.filter(!col("is_margin")).drop("cell", "is_margin")
-    val cap = dets.filter(abs(col(latCol)) > capEdge)
-      .crossJoin(broadcast(prim.filter(abs(col("obj_lat")) > capEdge)))
-      .filter(abs(col(latCol)) > capLat || abs(col("obj_lat")) > capLat)
-      .filter(signum(col(latCol)) === signum(col("obj_lat")))
-    ch1.unionByName(cap)
-      .filter(abs(col(latCol) - col("obj_lat")) <= radiusDeg)
-      .withColumn("dist_deg", CrossMatch.distDeg(
-        col(lonCol), col(latCol), col("obj_lon"), col("obj_lat")))
-      .filter(col("dist_deg") <= radiusDeg)
-      .drop("obj_lon", "obj_lat")
-  }
+                           capLat: Double = CrossMatch.CapLat)
+      : DataFrame =
+    streamPairs(dets, CrossMatch.Margined(catalogMargined, level),
+      lonCol, latCol, objIdCol, objLonCol, objLatCol, radiusDeg, capLat)
+
+  /** Stream rows paired by [[graft.spatial.CrossMatch.pairs]], every
+    * stream column carried: stream columns + obj_id + dist_deg. The
+    * stream has no id column, so its longitude stands in for the
+    * pair relation's a_id, which is dropped. */
+  private def streamPairs(dets: DataFrame, probe: CrossMatch.Probe,
+                          lonCol: String, latCol: String,
+                          objIdCol: String, objLonCol: String,
+                          objLatCol: String,
+                          radiusDeg: Double, capLat: Double): DataFrame =
+    CrossMatch.pairs(dets, probe, lonCol, lonCol, latCol,
+        objIdCol, objLonCol, objLatCol, radiusDeg, capLat,
+        carryA = dets.columns.toSeq)
+      .select(dets.columns.map(col) :+ col("b_id").as("obj_id") :+
+        col("dist_deg"): _*)
 
   /** S8 — streaming ingestion into a snapshot table: every micro-batch
     * lands as one committed snapshot, tagged with its batchId so a

@@ -395,7 +395,7 @@ object AdminCli {
   *                  [hotThreshold [salts]]
   *
   * The optional trailing args turn on deep-field skew mitigation
-  * (CrossMatch.skewSafe): cells with more than hotThreshold left-side
+  * (CrossMatch.pairs' hotThreshold): cells with more than hotThreshold left-side
   * rows are salted into `salts` (default 16) even tasks; results are
   * row-identical to the plain plan. The mitigation is recorded on the
   * declared relation too.
@@ -425,8 +425,10 @@ object XmatchCli {
     // and the declared QL relation must agree on boundary membership
     // and rank order, or a pipeline cross-checking them sees phantom
     // diffs (review r18)
-    val pairs = CrossMatch.applySnapped(db.table(args(1)), db.table(args(3)),
+    val pairs = CrossMatch.nearest(db.table(args(1)),
+      CrossMatch.Blocking(db.table(args(3))),
       aId, aLon, aLat, bId, bLon, bLat, args(5).toDouble, args(6).toInt,
+      snapped = true,
       hotThreshold = if (args.length >= 9) Some(args(8).toLong) else None,
       salts = if (args.length == 10) args(9).toInt else 16)
     pairs.write.mode("overwrite").parquet(s"${args(0)}/${args(7)}.parquet")

@@ -41,8 +41,8 @@ class EdgeCaseSpec extends SpecBase {
     val a = Seq((1L, 5.0, 5.0)).toDF("id", "lon", "lat")
     val b = Seq((10L, 5.0, 5.0), (11L, 5.0, 5.0), (12L, 5.0, 5.0))
       .toDF("id", "lon", "lat")
-    val got = CrossMatch(a, b, "id", "lon", "lat", "id", "lon", "lat",
-      0.1, 2).orderBy("match_rank")
+    val got = CrossMatch.nearest(a, CrossMatch.Blocking(b),
+      "id", "lon", "lat", "id", "lon", "lat", 0.1, 2).orderBy("match_rank")
       .collect().map(r => (r.getLong(1), r.getInt(3)))
     assert(got.toSeq == Seq((10L, 1), (11L, 2)))
   }
@@ -58,7 +58,7 @@ class EdgeCaseSpec extends SpecBase {
   test("allPairsCarry rejects carry columns that collide with pair columns") {
     val a = Seq((1L, 10.0, 10.0, 2.0)).toDF("id", "lon", "lat", "dist_deg")
     val e = intercept[IllegalArgumentException] {
-      graft.spatial.CrossMatch.allPairsCarry(a, a,
+      graft.spatial.CrossMatch.pairs(a, graft.spatial.CrossMatch.Blocking(a),
         "id", "lon", "lat", "id", "lon", "lat", 0.5, 85.0,
         carryA = Seq("dist_deg"), carryB = Nil, keepCoords = false)
     }

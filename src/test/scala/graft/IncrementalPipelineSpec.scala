@@ -57,12 +57,13 @@ class IncrementalPipelineSpec extends SpecBase {
     assert(night2.inputFiles.nonEmpty &&
       night2.inputFiles.forall(_.contains("snap=2")))
 
-    val viaDelta = CrossMatch(night2, catalog,
+    val viaDelta = CrossMatch.nearest(night2, CrossMatch.Blocking(catalog),
       "det_id", "lon", "lat", "obj_id", "obj_lon", "obj_lat",
       radiusDeg = 0.01, nmax = 1)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
 
-    val direct = CrossMatch(synthDets(150, 150).toDF(), catalog,
+    val direct = CrossMatch.nearest(synthDets(150, 150).toDF(),
+      CrossMatch.Blocking(catalog),
       "det_id", "lon", "lat", "obj_id", "obj_lon", "obj_lat",
       radiusDeg = 0.01, nmax = 1)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet

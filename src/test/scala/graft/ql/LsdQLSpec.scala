@@ -174,7 +174,8 @@ class LsdQLSpec extends SpecBase {
       .toDF("det_id", "det_lon", "det_lat")
     objs.write.parquet(s"$tmp/objs.parquet")
     dets.write.parquet(s"$tmp/dets.parquet")
-    val pairs = graft.spatial.CrossMatch(dets, objs,
+    val pairs = graft.spatial.CrossMatch.nearest(dets,
+      graft.spatial.CrossMatch.Blocking(objs),
       "det_id", "det_lon", "det_lat", "obj_id", "obj_lon", "obj_lat",
       radiusDeg = 0.05, nmax = 1)
     pairs.write.parquet(s"$tmp/xm.parquet")
@@ -217,8 +218,9 @@ class LsdQLSpec extends SpecBase {
       "each detection must match its own object")
     assert(rows.forall(_.getDouble(2) <= 0.05))
     // parity with the direct CrossMatch call
-    val direct = graft.spatial.CrossMatch(db2.table("dets"),
-      db2.table("objs"), "det_id", "det_lon", "det_lat",
+    val direct = graft.spatial.CrossMatch.nearest(db2.table("dets"),
+      graft.spatial.CrossMatch.Blocking(db2.table("objs")),
+      "det_id", "det_lon", "det_lat",
       "obj_id", "obj_lon", "obj_lat", 0.05, 1)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -301,8 +303,9 @@ class LsdQLSpec extends SpecBase {
         |FROM dets, objs WHERE _NR = 1 GROUP BY obj_id
         |ORDER BY obj_id""".stripMargin).collect()
     // DataFrame twin: CrossMatch + groupBy
-    val want = graft.spatial.CrossMatch(db2.table("dets"),
-      db2.table("objs"), "det_id", "det_lon", "det_lat",
+    val want = graft.spatial.CrossMatch.nearest(db2.table("dets"),
+      graft.spatial.CrossMatch.Blocking(db2.table("objs")),
+      "det_id", "det_lon", "det_lat",
       "obj_id", "obj_lon", "obj_lat", 0.05, 1)
       .filter(col("match_rank") === 1)
       .groupBy(col("b_id").as("obj_id"))
@@ -1205,8 +1208,10 @@ class LsdQLSpec extends SpecBase {
           val got = ql2.query(text).collect()
             .map(x => (x.getLong(0), Option(x.get(1)), Option(x.get(2))))
             .toSet
-          val pairs = graft.spatial.CrossMatch.applySnapped(det, obj,
-            "id", "lon", "lat", "obj_id", "olon", "olat", r, n)
+          val pairs = graft.spatial.CrossMatch.nearest(det,
+            graft.spatial.CrossMatch.Blocking(obj),
+            "id", "lon", "lat", "obj_id", "olon", "olat", r, n,
+            snapped = true)
           val twin =
             if (!outer) pairs.select(col("a_id").as("id"),
               col("b_id").as("m"), col("dist_deg").as("d"))
@@ -1313,9 +1318,10 @@ class LsdQLSpec extends SpecBase {
     // twin: bounded driving set through the LIBRARY snapped relation
     val bdet = db2.table("dets")
       .filter(b.predicate(col("lon"), col("lat")))
-    val twin = graft.spatial.CrossMatch.applySnapped(bdet,
-      db2.table("objs"), "id", "lon", "lat",
-      "obj_id", "olon", "olat", 0.05, 1)
+    val twin = graft.spatial.CrossMatch.nearest(bdet,
+      graft.spatial.CrossMatch.Blocking(db2.table("objs")),
+      "id", "lon", "lat", "obj_id", "olon", "olat", 0.05, 1,
+      snapped = true)
       .select(col("a_id"), col("b_id"), col("dist_deg")).orderBy("a_id")
     assert(got.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSeq ==
@@ -1688,10 +1694,11 @@ class LsdQLSpec extends SpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
     assert(got.toSeq == Seq((5L, 0.05, 1), (7L, 0.05, 2), (11L, 0.1, 3)),
       s"got ${got.toSeq}")
-    // parity with the direct applySnapped call
-    val twin = graft.spatial.CrossMatch.applySnapped(
-      db2.table("obj"), db2.table("cand"), "oid", "olon", "olat",
-      "cid", "clon", "clat", 0.1, 4)
+    // parity with the direct snapped nearest call
+    val twin = graft.spatial.CrossMatch.nearest(db2.table("obj"),
+      graft.spatial.CrossMatch.Blocking(db2.table("cand")),
+      "oid", "olon", "olat", "cid", "clon", "clat", 0.1, 4,
+      snapped = true)
       .orderBy("match_rank").collect()
       .map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(got.toSeq == twin.toSeq)

@@ -53,8 +53,8 @@ class CrossMatchSpec extends SpecBase {
 
   test("matches brute force exactly (pairs + ranks), incl. polar caps") {
     for ((radius, nmax) <- Seq((0.05, 1), (0.05, 3), (0.2, 2))) {
-      val got = CrossMatch(detDf, objDf, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", radius, nmax)
+      val got = CrossMatch.nearest(detDf, CrossMatch.Blocking(objDf),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, nmax)
         .select("a_id", "b_id", "match_rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(got == brute(radius, nmax), s"radius=$radius nmax=$nmax")
@@ -62,8 +62,8 @@ class CrossMatchSpec extends SpecBase {
   }
 
   test("distance bound holds and result is non-empty (radius 0.05)") {
-    val got = CrossMatch(detDf, objDf, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.05, 1)
+    val got = CrossMatch.nearest(detDf, CrossMatch.Blocking(objDf),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.05, 1)
     assert(got.count() > 0)
     assert(got.filter(col("dist_deg") > 0.05).count() == 0)
   }
@@ -82,10 +82,11 @@ class CrossMatchSpec extends SpecBase {
     val o = clumpObjs.toDF("obj_id", "lon", "lat")
     for ((radius, nmax, hot, salts) <- Seq(
         (0.05, 2, 100L, 7), (0.05, 1, 100000L, 4) /* nothing hot */ )) {
-      val plain = CrossMatch(d, o, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", radius, nmax)
-      val safe = CrossMatch.skewSafe(d, o, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", radius, nmax, hot, salts)
+      val plain = CrossMatch.nearest(d, CrossMatch.Blocking(o),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, nmax)
+      val safe = CrossMatch.nearest(d, CrossMatch.Blocking(o),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, nmax,
+        hotThreshold = Some(hot), salts = salts)
       assert(plain.exceptAll(safe).count() == 0 &&
         safe.exceptAll(plain).count() == 0,
         s"radius=$radius nmax=$nmax hot=$hot salts=$salts")
@@ -105,10 +106,11 @@ class CrossMatchSpec extends SpecBase {
     }
     val d = clumped.toDF("det_id", "lon", "lat")
     val o = clumpObjs.toDF("obj_id", "lon", "lat")
-    val plain = CrossMatch(d, o, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.05, 2)
-    val guarded = CrossMatch.skewSafe(d, o, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.05, 2, hotThreshold = 100L, salts = 5,
+    val plain = CrossMatch.nearest(d, CrossMatch.Blocking(o),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.05, 2)
+    val guarded = CrossMatch.nearest(d, CrossMatch.Blocking(o),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.05, 2,
+      hotThreshold = Some(100L), salts = 5,
       maxBroadcastRows = 10L) // anything real exceeds this
     assert(plain.exceptAll(guarded).count() == 0 &&
       guarded.exceptAll(plain).count() == 0)
@@ -117,8 +119,8 @@ class CrossMatchSpec extends SpecBase {
 
   test("empty probe side yields empty result") {
     val empty = Seq.empty[(Long, Double, Double)].toDF("det_id", "lon", "lat")
-    assert(CrossMatch(empty, objDf, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.1, 1).count() == 0)
+    assert(CrossMatch.nearest(empty, CrossMatch.Blocking(objDf),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.1, 1).count() == 0)
   }
 
   test("pre-margined cache path matches brute force (incl. polar caps)") {
@@ -128,15 +130,15 @@ class CrossMatchSpec extends SpecBase {
     graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
       margin = Some(radius))
     val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
-    val got = CrossMatch.applyPreMargined(detDf, bM, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", radius, 3, level)
+    val got = CrossMatch.nearest(detDf, CrossMatch.Margined(bM, level),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3)
       .select("a_id", "b_id", "match_rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == brute(radius, 3))
     // a coarser-than-written level must be rejected (closure violated)
     intercept[IllegalArgumentException] {
-      CrossMatch.applyPreMargined(detDf, bM, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", 0.9, 1, level)
+      CrossMatch.nearest(detDf, CrossMatch.Margined(bM, level),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.9, 1)
     }
   }
 
@@ -157,10 +159,14 @@ class CrossMatchSpec extends SpecBase {
       df.select("a_id", "b_id", "dist_deg", "match_rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
-    val viaMargin = rows(CrossMatch.applyPreMarginedSnapped(detDf, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3, level))
-    val viaBlocking = rows(CrossMatch.applySnapped(detDf, objDf,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3))
+    val viaMargin = rows(CrossMatch.nearest(detDf,
+      CrossMatch.Margined(bM, level),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3,
+      snapped = true))
+    val viaBlocking = rows(CrossMatch.nearest(detDf,
+      CrossMatch.Blocking(objDf),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3,
+      snapped = true))
     assert(viaMargin == viaBlocking,
       s"margin-routed snapped relation diverged: " +
         s"only-margin=${(viaMargin -- viaBlocking).take(5)} " +
@@ -184,20 +190,20 @@ class CrossMatchSpec extends SpecBase {
     graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
       margin = Some(radius))
     val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
-    val plain = CrossMatch(d, objDf, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", radius, 2)
+    val plain = CrossMatch.nearest(d, CrossMatch.Blocking(objDf),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2)
     for (maxB <- Seq(4L << 20, 1L)) { // broadcast arm, then forced shuffle
-      val skew = CrossMatch.applyPreMarginedSkew(d, bM,
-        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2, level,
-        hotThreshold = 100L, salts = 5, maxBroadcastRows = maxB)
+      val skew = CrossMatch.nearest(d, CrossMatch.Margined(bM, level),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2,
+        hotThreshold = Some(100L), salts = 5, maxBroadcastRows = maxB)
       assert(plain.exceptAll(skew).count() == 0 &&
         skew.exceptAll(plain).count() == 0, s"maxBroadcastRows=$maxB")
       assert(skew.count() > 0)
     }
-    // an all-cold threshold must degenerate to applyPreMargined exactly
-    val cold = CrossMatch.applyPreMarginedSkew(d, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2, level,
-      hotThreshold = 1000000L, salts = 5)
+    // an all-cold threshold must degenerate to the unsalted plan exactly
+    val cold = CrossMatch.nearest(d, CrossMatch.Margined(bM, level),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2,
+      hotThreshold = Some(1000000L), salts = 5)
     assert(plain.exceptAll(cold).count() == 0 &&
       cold.exceptAll(plain).count() == 0)
   }
@@ -221,11 +227,13 @@ class CrossMatchSpec extends SpecBase {
       df.select("a_id", "b_id", "dist_deg", "match_rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
-    val viaSkewMargin = rows(CrossMatch.applyPreMarginedSnappedSkew(d, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3, level,
-      hotThreshold = 100L, salts = 5))
-    val viaBlocking = rows(CrossMatch.applySnapped(d, objDf,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3))
+    val viaSkewMargin = rows(CrossMatch.nearest(d,
+      CrossMatch.Margined(bM, level),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3,
+      snapped = true, hotThreshold = Some(100L), salts = 5))
+    val viaBlocking = rows(CrossMatch.nearest(d, CrossMatch.Blocking(objDf),
+      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3,
+      snapped = true))
     assert(viaSkewMargin == viaBlocking,
       s"margin+salt snapped relation diverged: " +
         s"only-skew=${(viaSkewMargin -- viaBlocking).take(5)} " +
@@ -233,9 +241,45 @@ class CrossMatchSpec extends SpecBase {
   }
 
   test("radius validation") {
-    intercept[IllegalArgumentException] {
-      CrossMatch(detDf, objDf, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", 2.0, 1)
+    // every route rejects every out-of-contract argument it takes;
+    // each bad row breaks exactly one argument of a valid call
+    val radius = 0.05
+    val level = CrossMatch.levelFor(radius)
+    val path = s"${sys.props("java.io.tmpdir")}/graft_test_margin_valid"
+    graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
+      margin = Some(radius))
+    val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
+    case class Args(radius: Double = radius, capLat: Double = 85.0,
+                    nmax: Int = 1, salts: Int = 4, level: Int = level)
+    def route(margined: Boolean, snapped: Boolean, skewed: Boolean)(
+        x: Args): org.apache.spark.sql.DataFrame =
+      CrossMatch.nearest(detDf,
+        if (margined) CrossMatch.Margined(bM, x.level)
+        else CrossMatch.Blocking(objDf),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", x.radius, x.nmax,
+        snapped = snapped, capLat = x.capLat,
+        hotThreshold = if (skewed) Some(100L) else None, salts = x.salts)
+    val bad = Seq(
+      "radius 0" -> Args(radius = 0.0, level = 0),
+      "radius < 0" -> Args(radius = -0.1, level = 0),
+      "radius > 1" -> Args(radius = 2.0, level = 0),
+      "capLat < radius" -> Args(radius = 0.5, capLat = 0.4, level = 0),
+      "nmax < 1" -> Args(nmax = 0))
+    for (margined <- Seq(false, true); snapped <- Seq(false, true);
+         skewed <- Seq(false, true)) {
+      val name = s"margined=$margined snapped=$snapped skewed=$skewed"
+      val run = route(margined, snapped, skewed) _
+      run(Args()) // the valid call builds
+      val rows = bad ++
+        (if (skewed) Seq("salts < 1" -> Args(salts = 0)) else Nil) ++
+        (if (margined) Seq("level finer than levelFor" ->
+          Args(level = CrossMatch.levelFor(radius) + 1)) else Nil) ++
+        (if (snapped) Seq("no snap headroom" ->
+          Args(radius = 0.9995, level = 0)) else Nil)
+      for ((why, x) <- rows)
+        withClue(s"$name, $why: ") {
+          intercept[IllegalArgumentException](run(x))
+        }
     }
   }
 
@@ -249,8 +293,9 @@ class CrossMatchSpec extends SpecBase {
       (11L, 10.0, 0.1000004), // raw > r, snaps to 0.100000 → member
       (12L, 10.0, 0.1000006)) // snaps to 0.100001 → out
       .toDF("cid", "clon", "clat")
-    val snapped = CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-      "cid", "clon", "clat", radiusDeg = 0.1, nmax = 4)
+    val snapped = CrossMatch.nearest(a, CrossMatch.Blocking(b),
+      "oid", "olon", "olat", "cid", "clon", "clat", radiusDeg = 0.1,
+      nmax = 4, snapped = true)
       .orderBy("match_rank")
       .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
     // snapped ties (ids 5 and 7 both at 0.050000) order by b_id; the
@@ -259,8 +304,8 @@ class CrossMatchSpec extends SpecBase {
     assert(snapped.toSeq == Seq((5L, 0.05, 1), (7L, 0.05, 2),
       (11L, 0.1, 3)), s"got ${snapped.toSeq}")
     // contrast: the raw relation drops id 11 and ranks id 7 first
-    val raw = CrossMatch(a, b, "oid", "olon", "olat",
-      "cid", "clon", "clat", 0.1, 4)
+    val raw = CrossMatch.nearest(a, CrossMatch.Blocking(b),
+      "oid", "olon", "olat", "cid", "clon", "clat", 0.1, 4)
       .orderBy("match_rank").collect().map(_.getLong(1))
     assert(raw.toSeq == Seq(7L, 5L))
   }
@@ -272,27 +317,30 @@ class CrossMatchSpec extends SpecBase {
     val a = Seq((1L, 10.0, 0.0)).toDF("oid", "olon", "olat")
     val b = Seq((5L, 10.0, 0.00010004)) // raw ~1.0004e-4 > r, snaps to r
       .toDF("cid", "clon", "clat")
-    val got = CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-      "cid", "clon", "clat", radiusDeg = 0.0001, nmax = 1).collect()
+    val got = CrossMatch.nearest(a, CrossMatch.Blocking(b),
+      "oid", "olon", "olat", "cid", "clon", "clat", radiusDeg = 0.0001,
+      nmax = 1, snapped = true).collect()
     assert(got.length == 1 && got.head.getDouble(2) == 0.0001,
       s"snap-boundary member lost at small radius: ${got.toSeq}")
     // and the blocking-cap headroom is a loud require, not silent loss
     intercept[IllegalArgumentException] {
-      CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-        "cid", "clon", "clat", radiusDeg = 1.0, nmax = 1)
+      CrossMatch.nearest(a, CrossMatch.Blocking(b),
+        "oid", "olon", "olat", "cid", "clon", "clat", radiusDeg = 1.0,
+        nmax = 1, snapped = true)
     }
   }
 
   test("applySnapped: skew-composed path is row-identical") {
     def run(ht: Option[Long]) =
-      CrossMatch.applySnapped(detDf, objDf, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", 0.2, 2, hotThreshold = ht, salts = 4)
+      CrossMatch.nearest(detDf, CrossMatch.Blocking(objDf),
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.2, 2,
+        snapped = true, hotThreshold = ht, salts = 4)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
     val plain = run(None)
     // threshold 1 forces every populated cell hot — the whole catalog
-    // takes the skewSafe rank-all + re-snap path
+    // takes the salted superset pairs + re-snap path
     val viaSkew = run(Some(1L))
     assert(plain.nonEmpty && viaSkew == plain,
       s"diverged: ${(viaSkew diff plain).take(3)} / ${

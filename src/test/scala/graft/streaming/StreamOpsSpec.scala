@@ -214,7 +214,8 @@ class StreamOpsSpec extends SpecBase {
       // batch ground truth from the same engine primitives
       val dets = Seq((1L, 10.01, 20.01), (2L, 0.005, 0.0), (3L, 90.0, 50.0))
         .toDF("det_id", "lon", "lat")
-      val want = graft.spatial.CrossMatch.allPairs(dets, catalog,
+      val want = graft.spatial.CrossMatch.pairs(dets,
+        graft.spatial.CrossMatch.Blocking(catalog),
         "det_id", "lon", "lat", "obj_id", "lon", "lat", 0.1)
         .select("a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -222,6 +223,29 @@ class StreamOpsSpec extends SpecBase {
       assert(got.contains((1L, 100L)) && got.contains((1L, 101L)))
       assert(got.contains((2L, 103L)), "lon wraparound must match")
       assert(!got.exists(_._1 == 3L), "far detection must not match")
+    } finally q.stop()
+  }
+
+  test("streaming xmatch pairs a trans-polar detection via the cap channel") {
+    implicit val sqlCtx = spark.sqlContext
+    // 0.1 deg apart across the pole but 180 deg apart in lon: no
+    // lon-neighbor cell holds the object, only the cap channel can
+    val catalog = Seq((300L, 190.0, 89.95)).toDF("obj_id", "lon", "lat")
+    val input = MemoryStream[Det]
+    val q = StreamOps.xmatchStream(input.toDF(), catalog,
+        "lon", "lat", "obj_id", "lon", "lat", radiusDeg = 0.15)
+      .writeStream.format("memory").queryName("xmatch_stream_polar")
+      .outputMode(OutputMode.Append).start()
+    try {
+      input.addData(Det(1, 10.0, 89.95))
+      q.processAllAvailable()
+      val out = spark.table("xmatch_stream_polar")
+      assert(out.columns.toSeq ==
+        Seq("det_id", "lon", "lat", "obj_id", "dist_deg"))
+      val got = out.collect()
+      assert(got.map(r => (r.getLong(0), r.getLong(3))).toSeq ==
+        Seq((1L, 300L)), "trans-polar pair must match")
+      assert(math.abs(got.head.getDouble(4) - 0.1) < 1e-9)
     } finally q.stop()
   }
 
@@ -256,10 +280,10 @@ class StreamOpsSpec extends SpecBase {
       input.addData(dets.drop(2)); q.processAllAvailable()
       val got = spark.table("xmatch_margin_st").select("det_id", "obj_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = graft.spatial.CrossMatch.allPairsPreMargined(
+      val want = graft.spatial.CrossMatch.pairs(
         dets.map(d => (d.det_id, d.lon, d.lat)).toDF("det_id", "lon", "lat"),
-        bM, "det_id", "lon", "lat", "obj_id", "olon", "olat",
-        radius, level)
+        graft.spatial.CrossMatch.Margined(bM, level),
+        "det_id", "lon", "lat", "obj_id", "olon", "olat", radius)
         .select("a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want,

@@ -383,7 +383,7 @@ class CliSpec extends SpecBase {
     // every object matches itself at rank 1, distance 0
     assert(pairs.filter("a_id = b_id AND match_rank = 1").count() == 200)
 
-    // deep-field flag: same xmatch through CrossMatch.skewSafe
+    // deep-field flag: same xmatch through CrossMatch's skew salting
     // (hotThreshold=1 forces every populated cell hot, salts=4) must
     // produce the identical pair set — the row-identity equality that
     // tools/ScaleSmoke (as of commit 1372bdc) checked at scale,
