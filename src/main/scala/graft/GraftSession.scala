@@ -1,10 +1,12 @@
 package graft
 
+import graft.sources.LocalFs
 import org.apache.spark.sql.SparkSession
 
 /** The one local session that Bench, Verify, the CLIs, the dev tools
   * and the test suite build: `local[cpus]` with `cpus` shuffle
-  * partitions, UTC session time, no UI, WARN logging. `cpus`
+  * partitions, UTC session time, no UI, WARN logging, and the
+  * engine's `file:` FileSystem ([[LocalFs.install]]). `cpus`
   * defaults to `SPARK_GRAFT_CPUS`, else 4. On a running session
   * `getOrCreate` returns it and applies only the SQL settings.
   */
@@ -18,6 +20,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LocalFs.install(s)
     s
   }
 }

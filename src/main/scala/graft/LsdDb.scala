@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ParquetRead, Snapshots}
+import graft.sources.{LocalFs, ParquetRead, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -18,6 +18,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * single-node-specific.
   */
 final case class LsdDb(spark: SparkSession, root: String) {
+
+  // The session preconditions of every read below, set once: the
+  // engine's `file:` FileSystem, and nanosecond parquet timestamps read
+  // as raw Longs (see [[table]]).
+  LocalFs.install(spark)
+  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Load one table. The driver's testdata stores each table as
     * `<root>/<name>.parquet`; a partitioned dataset directory with the
@@ -103,7 +109,6 @@ final case class LsdDb(spark: SparkSession, root: String) {
     * normalization as [[table]]. Advisory like the zone-map prunes:
     * the caller's own exact predicate must still apply below. */
   def tableFootprint(name: String, cells: Seq[Long]): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$root/$name.parquet"
     require(spatialMeta(name).isDefined,
       s"table '$name' is not a SpatialWriter layout (no _SPATIAL " +
@@ -210,10 +215,8 @@ final case class LsdDb(spark: SparkSession, root: String) {
   /** The PROBE view of a RESOLVED margin cache ([[marginCacheFor]]):
     * primaries AND margin replicas with `cell`/`is_margin` kept — the
     * B side of [[graft.spatial.CrossMatch.Margined]]. */
-  def tableMarginedRef(ref: MarginCacheRef): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def tableMarginedRef(ref: MarginCacheRef): DataFrame =
     normalizeTs(ParquetRead(spark, ref.path))
-  }
 
   /** The PROBE view of a margin-cache layout: primaries AND margin
     * replicas, `cell`/`is_margin` kept (they are the join key and the
@@ -249,7 +252,6 @@ final case class LsdDb(spark: SparkSession, root: String) {
                          toExcl: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, date_trunc, lit,
       to_timestamp}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$root/$name.parquet"
     val (_, gran) = temporalMeta(name).getOrElse(throw
       new IllegalArgumentException(s"table '$name' is not a TimeWriter " +
@@ -271,7 +273,6 @@ final case class LsdDb(spark: SparkSession, root: String) {
     * the layout-column strip and the ns→µs ts conversion. */
   private def tableResolved(name: String, asOf: Option[Long],
                             snapRead: String => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$root/$name.parquet"
     val isSnapshotTable = {
       val fs = org.apache.hadoop.fs.FileSystem.get(

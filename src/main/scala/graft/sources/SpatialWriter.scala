@@ -230,7 +230,7 @@ object SpatialWriter {
     * the exchange (REPARTITION_BY_NUM, as in [[graft.LsdDb.spread]]),
     * and hash partitioning still sends each key to one task, so each
     * directory still gets exactly one file. */
-  private[sources] def writeTasks(df: DataFrame): Int =
+  private[graft] def writeTasks(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Write `df` DIRECTORY-partitioned by SkyPix cell of (lonCol,

@@ -1,7 +1,7 @@
 package graft.vector
 
 import graft.functions.VectorKernels
-import graft.sources.ParquetRead
+import graft.sources.{ParquetRead, SpatialWriter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -129,8 +129,10 @@ object AnnIndex {
       .toDF("cell", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
+    // an explicit task count, as in SpatialWriter.write: a bare
+    // repartition(cell) lets AQE coalesce all k cells into one task
     assigned
-      .repartition(col("cell"))
+      .repartition(SpatialWriter.writeTasks(assigned), col("cell"))
       .write.mode("overwrite")
       .partitionBy("cell")
       .parquet(s"$path/vectors")

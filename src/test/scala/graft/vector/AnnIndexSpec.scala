@@ -126,6 +126,10 @@ class AnnIndexSpec extends SpecBase {
     val dirs = new java.io.File(s"$path/vectors").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(dirs.nonEmpty && dirs.length <= 16)
+    // the explicit write-task count still sends each cell to one task
+    dirs.foreach(d => assert(
+      d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+      s"${d.getName} must hold exactly one data file"))
 
     val probes = emb.select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 20)
