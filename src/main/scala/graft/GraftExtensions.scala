@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.IntegerType
   *        (codegen'd; doubles as the AutoSpatialJoin marker),
   *      `sky_cell(lon, lat, level)` — packed equal-area cell id
   *        (the SkyPix grid; level must be a foldable int),
-  *      `sky_neighbor_cells(lon, lat, level, marginDeg)` — 9-slot
-  *        strip-pruned neighbor array (null slots = pruned),
+  *      `sky_neighbor_cells(lon, lat, level, marginDeg)` — the
+  *        strip-pruned neighbor cells as a compact array (distinct
+  *        ids, home cell included, no null entries),
   *      `snap6(x)` — the determinism snap (decimal(18,6) round trip,
   *        codegen'd fast path).
   *
@@ -92,17 +93,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "sky_cell(lon, lat, level) - packed equal-area sky cell id"),
         (args: Seq[Expression]) => {
           require(args.length == 3, "sky_cell(lon, lat, level)")
-          plans.AutoSpatialJoin.cellExpr(args(0), args(1),
+          spatial.SkyPix.cellExpr(args(0), args(1),
             foldableInt(args(2), "sky_cell level"))
         }),
       (new FunctionIdentifier("sky_neighbor_cells"),
         info("sky_neighbor_cells",
           "sky_neighbor_cells(lon, lat, level, marginDeg) - " +
-            "strip-pruned 9-slot neighbor cell array (null = pruned)"),
+            "strip-pruned neighbor cell ids (compact, home cell included)"),
         (args: Seq[Expression]) => {
           require(args.length == 4,
             "sky_neighbor_cells(lon, lat, level, marginDeg)")
-          plans.NeighborCells(args(0), args(1),
+          spatial.NeighborCells(args(0), args(1),
             foldableInt(args(2), "sky_neighbor_cells level"),
             foldableDouble(args(3), "sky_neighbor_cells marginDeg"))
         }),

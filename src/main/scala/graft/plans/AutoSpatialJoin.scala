@@ -1,12 +1,12 @@
 package graft.plans
 
-import graft.spatial.CrossMatch
+import graft.spatial.{CrossMatch, NeighborCells, SkyPix}
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** `sky_dist(lon1, lat1, lon2, lat2)` — great-circle distance in
   * degrees (haversine), as a first-class expression. Works anywhere a
@@ -72,133 +72,6 @@ case class SkyDist(lon1: Expression, lat1: Expression,
       newThird: Expression, newFourth: Expression): Expression =
     copy(lon1 = newFirst, lat1 = newSecond, lon2 = newThird,
       lat2 = newFourth)
-}
-
-/** 9-slot strip-pruned neighbor-cell array as ONE compact expression —
-  * `sky_neighbor_cells(lon, lat)` for a plan-time (level, margin).
-  *
-  * Why an expression and not a raw Catalyst tree: the tree form
-  * (9 CaseWhen slots, each re-inlining the morton interleave and the
-  * four strip predicates — no common-subexpression elimination runs
-  * inside a Generate's generator) codegens to ~19k lines and Janino
-  * dies with "Code grows beyond 64 KB" in generate_doConsume_0, so
-  * the whole stage silently fell back to interpreted eval — an
-  * interpreted-path tax on every probe row of the signature operator.
-  * This form codegens to a single static call.
-  *
-  * Semantics are bit-identical to the old tree: every step mirrors
-  * the Catalyst operator it replaces (Pmod's double path is
-  * `r = a % n; if (r < 0) (r + n) % n else r` — verified against the
-  * compiled class), and the interpreted and codegen paths share
-  * [[NeighborCells.compute]]. Null slots mark pruned neighbors; the
-  * downstream null-rejecting equi-join drops them. A null lon/lat
-  * makes the whole array null (explode emits nothing) where the old
-  * tree emitted 9 null slots — identical after the join. */
-case class NeighborCells(lon: Expression, lat: Expression,
-                         level: Int, marginDeg: Double)
-    extends BinaryExpression {
-  override def left: Expression = lon
-  override def right: Expression = lat
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = lon.nullable || lat.nullable
-  override def prettyName: String = "sky_neighbor_cells"
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.forall(_.dataType == DoubleType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure("sky_neighbor_cells requires DOUBLE lon, lat")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NeighborCells.compute(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      level, marginDeg)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, b) =>
-      s"${ev.value} = graft.plans.NeighborCells.compute(" +
-        s"$l, $b, $level, ${marginDeg}D);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(lon = newLeft, lat = newRight)
-}
-
-object NeighborCells {
-  /** Shared interpreted/codegen kernel. Arithmetic mirrors, op for
-    * op, the Catalyst tree it replaced (ixy / morton / strip
-    * predicates in [[AutoSpatialJoin]]'s comments) so the candidate
-    * set is bit-identical. */
-  def compute(lon: Double, lat: Double, level: Int,
-              marginDeg: Double): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val n = 1L << level
-    val w = 360.0 / n
-    // Pmod(lon, 360.0) — Spark's exact double path
-    val r0 = lon % 360.0
-    val lonNorm = if (r0 < 0) (r0 + 360.0) % 360.0 else r0
-    val fx = lonNorm / 360.0
-    val fy = (math.sin(math.toRadians(lat)) + 1.0) / 2.0
-    // Greatest(Least(cast(floor(f*n) as long), n-1), 0)
-    def clamp(f: Double): Long =
-      math.max(math.min(math.floor(f * n.toDouble).toLong, n - 1L), 0L)
-    val ix = clamp(fx)
-    val iy = clamp(fy)
-    val cosLat = math.cos(math.toRadians(lat))
-    val sinMargin = math.sin(math.toRadians(math.min(90.0, marginDeg)))
-    val dLonE = (ix + 1L).toDouble * w - lonNorm
-    val dLonW = lonNorm - ix.toDouble * w
-    val eastNear = math.sin(math.toRadians(dLonE)) * cosLat <= sinMargin
-    val westNear = math.sin(math.toRadians(dLonW)) * cosLat <= sinMargin
-    val latEdgeN = math.toDegrees(math.asin(
-      (iy + 1L).toDouble * (2.0 / n) - 1.0))
-    val latEdgeS = math.toDegrees(math.asin(iy.toDouble * (2.0 / n) - 1.0))
-    val northNear = latEdgeN - lat <= marginDeg
-    val southNear = lat - latEdgeS <= marginDeg
-    def morton(x: Long, y: Long): Long = {
-      var acc = 0L
-      var b = 0
-      while (b < level) {
-        acc |= ((x >> b) & 1L) << (2 * b)
-        acc |= ((y >> b) & 1L) << (2 * b + 1)
-        b += 1
-      }
-      acc
-    }
-    val tag = level.toLong << 58
-    val slots = new Array[Any](9)
-    var i = 0
-    var dx = -1
-    while (dx <= 1) {
-      var dy = -1
-      while (dy <= 1) {
-        val strip = (dx, dy) match {
-          case (0, 0)   => true
-          case (-1, 0)  => westNear
-          case (1, 0)   => eastNear
-          case (0, -1)  => southNear
-          case (0, 1)   => northNear
-          case (-1, -1) => westNear && southNear
-          case (-1, 1)  => westNear && northNear
-          case (1, -1)  => eastNear && southNear
-          case _        => eastNear && northNear // (1, 1)
-        }
-        val ny = iy + dy
-        if (strip && ny >= 0 && ny < n) {
-          // Pmod on longs: both operands positive here (ix+dx >= -1,
-          // + n keeps it positive before the mod)
-          val nx = (ix + dx + n) % n
-          slots(i) = java.lang.Long.valueOf(morton(nx, ny) | tag)
-        } // else null slot
-        i += 1
-        dy += 1
-      }
-      dx += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(slots)
-  }
 }
 
 /** Optimizer rule: rewrite `Filter(sky_dist(al, aa, bl, bb) <= r,
@@ -276,8 +149,8 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
     * case — a SELECTIVE (high-cardinality) user equality that alone
     * would hash-join well: pushdown folds that equality into the
     * generated cell join too, so the join stays keyed on
-    * (cell, user key); the rewrite's overhead is the 9-slot neighbor
-    * explode (≤9× one side's rows, map-side) plus the cap-channel
+    * (cell, user key); the rewrite's overhead is the strip-pruned
+    * neighbor explode (≤9× one side's rows, map-side) plus the cap-channel
     * arm — bounded linear work, never a blow-up. Cardinality-aware
     * skipping would need reliable row-count stats the rule cannot
     * assume; the sky_dist marker is treated as declared spatial
@@ -339,50 +212,7 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
       (aRefs.subsetOf(right.outputSet) && bRefs.subsetOf(left.outputSet))
   }
 
-  // ---- raw catalyst expression builders ----------------------------
-  //
-  // Rule-injected expressions never pass through the analyzer, and in
-  // Spark 4 the `functions._` Column API builds ColumnNodes whose
-  // conversion to resolved Expressions IS an analyzer step — so the
-  // grid math here is spelled out with concrete catalyst classes
-  // (numerically identical trees to SkyPix's Column builders; the
-  // AutoSpatialJoinSpec brute-force equivalence pins the semantics).
-
-  private def dbl(e: Expression): Expression = Cast(e, DoubleType)
-  private def L(v: Long): Literal = Literal(v)
   private def D(v: Double): Literal = Literal(v)
-
-  /** (ix, iy) grid coordinates — raw form of SkyPix.ixy. */
-  private def ixy(lon: Expression, lat: Expression,
-                  level: Int): (Expression, Expression) = {
-    val n = 1L << level
-    val fx = Divide(Pmod(lon, D(360.0)), D(360.0))
-    val fy = Divide(Add(Sin(ToRadians(lat)), D(1.0)), D(2.0))
-    def clamp(f: Expression) = Greatest(Seq(
-      Least(Seq(Cast(Floor(Multiply(f, D(n.toDouble))), LongType),
-        L(n - 1))), L(0L)))
-    (clamp(fx), clamp(fy))
-  }
-
-  /** Morton interleave — raw form of SkyPix.morton. */
-  private def morton(ix: Expression, iy: Expression,
-                     level: Int): Expression =
-    (0 until level).map { b =>
-      val bx = ShiftLeft(BitwiseAnd(ShiftRight(ix, Literal(b)), L(1L)),
-        Literal(2 * b))
-      val by = ShiftLeft(BitwiseAnd(ShiftRight(iy, Literal(b)), L(1L)),
-        Literal(2 * b + 1))
-      BitwiseOr(bx, by)
-    }.foldLeft(L(0L): Expression)(BitwiseOr(_, _))
-
-  /** Packed cell id — raw form of SkyPix.cell. `private[graft]` so
-    * [[graft.GraftExtensions]] can expose it as the SQL function
-    * `sky_cell(lon, lat, level)`. */
-  private[graft] def cellExpr(lon: Expression, lat: Expression,
-                              level: Int): Expression = {
-    val (ix, iy) = ixy(lon, lat, level)
-    BitwiseOr(morton(ix, iy, level), L(level.toLong << 58))
-  }
 
   private def blocked(left: LogicalPlan, right: LogicalPlan,
                       sd: SkyDist, radius: Double): LogicalPlan = {
@@ -393,22 +223,10 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
     val (bLon, bLat) = if (leftFirst) (sd.lon2, sd.lat2) else (sd.lon1, sd.lat1)
 
     val level = CrossMatch.levelFor(radius, CapLat)
-    // NeighborCells emits the raw 9-slot (dx,dy) array with NO
-    // array_distinct: slot distinctness relies on the grid having
-    // >= 4 columns and >= 4 rows (at level l the grid is 2^l × 2^l),
-    // i.e. level >= 2 — at level <= 1, wraparound aliases east/west
-    // (or north/south) slots onto the same cell and the join would
-    // emit duplicate pairs. levelFor(r <= 1 deg) >= 4 today; this
-    // guard makes a future radius-scope widening fail loudly instead
-    // of silently corrupting results.
-    require(level >= 2,
-      s"AutoSpatialJoin: blocking level $level < 2 would alias " +
-        "neighbor slots (duplicate pairs); widen levelFor or dedup " +
-        "the neighbor array before lowering the level")
 
     // --- cell channel (both sides below the cap) ---
     val aBelow = Filter(LessThanOrEqual(Abs(aLat), D(CapLat)), left)
-    val cellA = Alias(cellExpr(aLon, aLat, level), GenCellA)()
+    val cellA = Alias(SkyPix.cellExpr(aLon, aLat, level), GenCellA)()
     val aKeyed = Project(left.output :+ cellA, aBelow)
 
     val bBelow = Filter(LessThanOrEqual(Abs(bLat), D(CapLat)), right)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -37,14 +37,11 @@ object ZOrderLayout {
   private val Bits = 16
   private val MaxRank = (1L << Bits) - 1
 
-  /** Interleave two 16-bit ranks (x even bits, y odd) — same fold as
-    * SkyPix's Morton cell, without the level tag. */
+  /** Interleave two 16-bit ranks (x even bits, y odd) — SkyPix's
+    * Morton interleave, without the level tag. */
   private def interleave(ix: Column, iy: Column): Column =
-    (0 until Bits).map { b =>
-      val bx = shiftleft(shiftright(ix, b).bitwiseAND(1L), 2 * b)
-      val by = shiftleft(shiftright(iy, b).bitwiseAND(1L), 2 * b + 1)
-      bx.bitwiseOR(by)
-    }.foldLeft(lit(0L))((acc, c) => acc.bitwiseOR(c))
+    GraftShims.column(graft.spatial.SkyPix.interleaveExpr(
+      GraftShims.expression(ix), GraftShims.expression(iy), Bits))
 
   private def rank(c: Column, lo: Double, hi: Double): Column = {
     val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)

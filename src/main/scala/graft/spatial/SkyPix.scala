@@ -1,7 +1,9 @@
 package graft.spatial
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, GraftShims}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.functions.{lit, pmod, radians, raise_error,
+  shiftleft, shiftright, sin, when, concat}
 import org.apache.spark.sql.types.LongType
 
 /** Hierarchical equal-area sky pixelization — the engine's analog of
@@ -17,8 +19,15 @@ import org.apache.spark.sql.types.LongType
   * supports O(1) neighbor enumeration. Unlike true HEALPix the cells
   * are not iso-latitude diamonds; none of our operators depend on
   * cell shape, only on the grid being hierarchical + equal-area +
-  * neighbor-closed, so the simpler math wins (it stays inside
-  * whole-stage codegen as plain Catalyst expressions — no UDF).
+  * neighbor-closed, so the simpler math wins.
+  *
+  * The grid is written down once per form. The cell id is one raw
+  * Catalyst builder ([[cellExpr]]): plain, non-nullable arithmetic
+  * inside whole-stage codegen, shared by [[cell]], [[mortonCell]], the
+  * SQL function `sky_cell` and [[graft.plans.AutoSpatialJoin]]. The
+  * neighbor-cell array is one codegen'd expression ([[NeighborCells]])
+  * over one JVM kernel that mirrors the Catalyst grid op for op;
+  * [[cellId]] and [[mortonCellValue]] are that kernel's grid.
   *
   * Cell id layout: (level << 58) | morton(ix, iy), supporting levels
   * 0..28. At level k there are 4^k cells (level 6 ≈ 4096 cells ≈ 10
@@ -28,146 +37,120 @@ import org.apache.spark.sql.types.LongType
 object SkyPix {
   val MaxLevel = 28
 
-  /** Grid coordinates at a level, as Columns (pure expressions).
-    *
-    * NULL-COORDINATE CONTRACT (review r20): Spark's least/greatest
-    * SKIP null arguments, so this raw grid math maps a NULL lon/lat
-    * to grid index n-1 — the top-corner cell — NOT to null. The grid
-    * expressions stay null-UNAWARE on purpose: gating inside ix/iy
-    * wrapped every subexpression in a CASE that the 9 neighbor slots
-    * duplicated (2-4x on the whole xmatch bench family), and even ONE
-    * top-level when() makes `cell` nullable, which knocks hot joins
-    * and aggregations off codegen's primitive fast paths (measured 2x
-    * on q_tracklets). Null handling therefore lives at the
-    * BOUNDARIES: [[graft.sources.SpatialWriter]] refuses null
-    * coordinates loudly at import (a catalog row needs a position),
-    * [[graft.streaming.StreamOps.skymapStream]] filters them before
-    * densities, and the cross-match channels are immune regardless —
-    * a null-coordinate row's candidate pairs die at the exact
-    * haversine refine (NULL distance never passes `<= r`). */
-  private def ixy(lon: Column, lat: Column, level: Int): (Column, Column) = {
-    val n = 1L << level
-    // clamp into [0, n-1] so lon=360 / lat=±90 stay in range
-    val fx = pmod(lon, lit(360.0)) / 360.0
-    val fy = (sin(radians(lat)) + 1.0) / 2.0
-    val ix = least(floor(fx * n).cast(LongType), lit(n - 1))
-    val iy = least(floor(fy * n).cast(LongType), lit(n - 1))
-    (greatest(ix, lit(0L)), greatest(iy, lit(0L)))
-  }
-
-  /** Morton-interleave two level-bit coordinates (expression tree —
-    * a shift/or chain, codegen-friendly). */
-  private def morton(ix: Column, iy: Column, level: Int): Column =
-    (0 until level).map { b =>
-      val bx = shiftleft(shiftright(ix, b).bitwiseAND(1L), 2 * b)
-      val by = shiftleft(shiftright(iy, b).bitwiseAND(1L), 2 * b + 1)
-      bx.bitwiseOR(by)
-    }.foldLeft(lit(0L))((acc, c) => acc.bitwiseOR(c))
-
-  /** cell(lon_deg, lat_deg) → packed cell id at `level`. NULL
-    * coordinates land in the top-corner cell — see [[ixy]]'s
-    * null-coordinate contract (boundaries guard, not the hot path). */
-  def cell(lon: Column, lat: Column, level: Int): Column = {
+  private def checkLevel(level: Int): Unit =
     require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    val (ix, iy) = ixy(lon, lat, level)
-    morton(ix, iy, level).bitwiseOR(lit(level.toLong << 58))
+
+  // ---- Catalyst form ------------------------------------------------
+  //
+  // The cell id is built as raw Catalyst expressions, not through the
+  // `functions._` Column API: the same tree then serves Column callers
+  // ([[cell]], [[mortonCell]]), the SQL function `sky_cell` and the
+  // optimizer rule [[graft.plans.AutoSpatialJoin]], whose injected
+  // expressions never pass through the analyzer. After analysis the
+  // tree is plain, non-nullable arithmetic, which keeps `cell` on
+  // codegen's primitive fast paths in hot joins and aggregations.
+  //
+  // NULL-COORDINATE CONTRACT: Spark's least/greatest SKIP
+  // null arguments, so this grid math maps a NULL lon/lat to grid
+  // index n-1 — the top-corner cell — NOT to null. The grid stays
+  // null-UNAWARE on purpose: gating inside ix/iy wrapped every
+  // subexpression in a CASE, and even ONE top-level when() makes
+  // `cell` nullable, which knocks hot joins and aggregations off
+  // codegen's primitive fast paths (measured 2x on q_tracklets). Null
+  // handling therefore lives at the BOUNDARIES:
+  // [[graft.sources.SpatialWriter]] refuses null coordinates loudly at
+  // import (a catalog row needs a position),
+  // [[graft.streaming.StreamOps.skymapStream]] filters them before
+  // densities, and the cross-match channels are immune regardless — a
+  // null-coordinate row's candidate pairs die at the exact haversine
+  // refine (NULL distance never passes `<= r`).
+
+  /** Grid index of a unit-square fraction at `level`, clamped into
+    * [0, n-1] so lon = 360 and lat = ±90 stay in range. */
+  private def gridIndexExpr(f: Expression, level: Int): Expression = {
+    val n = 1L << level
+    Greatest(Seq(Least(Seq(
+      Cast(Floor(Multiply(f, Literal(n.toDouble))), LongType),
+      Literal(n - 1))), Literal(0L)))
   }
 
-  /** The ≤9-cell neighborhood (cell + 8 adjacent, lon-wrapped, lat
-    * edges clamped) — the query-time equivalent of the reference's
-    * neighbor-margin cache: probing all neighbors of a cell makes a
-    * radius-bounded spatial join cell-local without replicating rows
-    * at write time. Returns an array column (use explode). */
-  def neighborCells(lon: Column, lat: Column, level: Int): Column = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    val n = 1L << level
-    val (ix, iy) = ixy(lon, lat, level)
-    val cells = for (dx <- -1 to 1; dy <- -1 to 1) yield {
-      val nx = pmod(ix + dx, lit(n)) // lon wraps
-      val ny = iy + dy               // lat clamps (drop out-of-range)
-      when(ny >= 0 && ny < n,
-        morton(nx, ny, level).bitwiseOR(lit(level.toLong << 58)))
-    }
-    array_distinct(filter(array(cells: _*), c => c.isNotNull))
+  /** Morton-interleave the low `bits` bits of two coordinates, x on
+    * the even bits and y on the odd (a shift/or chain,
+    * codegen-friendly). Also the z-value of [[graft.sources
+    * .ZOrderLayout]]. */
+  private[graft] def interleaveExpr(ix: Expression, iy: Expression,
+                                    bits: Int): Expression =
+    (0 until bits).map { b =>
+      val bx = ShiftLeft(BitwiseAnd(ShiftRight(ix, Literal(b)), Literal(1L)),
+        Literal(2 * b))
+      val by = ShiftLeft(BitwiseAnd(ShiftRight(iy, Literal(b)), Literal(1L)),
+        Literal(2 * b + 1))
+      BitwiseOr(bx, by)
+    }.foldLeft(Literal(0L): Expression)(BitwiseOr(_, _))
+
+  /** Packed cell id of grid coordinates: the interleave plus the
+    * level tag. */
+  private def mortonExpr(ix: Expression, iy: Expression,
+                         level: Int): Expression =
+    BitwiseOr(interleaveExpr(ix, iy, level), Literal(level.toLong << 58))
+
+  /** Packed cell id of (lon_deg, lat_deg) at `level` as a Catalyst
+    * expression — the one cell-id builder. NULL coordinates land in
+    * the top-corner cell (see the null-coordinate contract above). */
+  def cellExpr(lon: Expression, lat: Expression, level: Int): Expression = {
+    checkLevel(level)
+    val fx = Divide(Pmod(lon, Literal(360.0)), Literal(360.0))
+    val fy = Divide(Add(Sin(ToRadians(lat)), Literal(1.0)), Literal(2.0))
+    mortonExpr(gridIndexExpr(fx, level), gridIndexExpr(fy, level), level)
   }
+
+  private def column(e: Expression): Column = GraftShims.column(e)
+  private def expr(c: Column): Expression = GraftShims.expression(c)
+
+  /** cell(lon_deg, lat_deg) → packed cell id at `level`. */
+  def cell(lon: Column, lat: Column, level: Int): Column =
+    column(cellExpr(expr(lon), expr(lat), level))
 
   /** The home cell plus only those neighbor cells whose shared
-    * boundary lies within `marginDeg` of the point — the margin-strip
-    * form of [[neighborCells]], cutting write-time replication (and
-    * query-time probe explode) from a flat 9× to ~(1 + strip
-    * fraction)×.
-    *
-    * The per-edge distance tests are exact LOWER bounds on the
-    * great-circle distance to the neighbor cell, so pruning on them is
-    * conservative (never drops a replica a radius-`marginDeg` match
-    * could need):
-    *   - meridian (east/west edge): any geodesic into the neighbor
-    *     crosses the edge meridian, and the point-to-meridian distance
-    *     d satisfies sin d = sin(Δlon)·cos(lat) (cross-track formula,
-    *     exact);
-    *   - parallel (north/south edge): point-to-parallel distance is
-    *     exactly |Δlat|;
-    *   - diagonal neighbors must cross BOTH boundaries, so both tests
-    *     apply (dist ≥ max of the two lower bounds).
-    */
+    * boundary lies within `marginDeg` of the point — the query-time
+    * equivalent of the reference's neighbor-margin cache, and the
+    * write-time replication of a margin layout. Strip pruning cuts
+    * the replication (and the probe explode) from a flat 9× to
+    * ~(1 + strip fraction)×; `marginDeg` = 180 keeps every in-range
+    * 3×3 neighbor. One codegen'd expression over the
+    * [[NeighborCells]] kernel: a compact array of distinct ids, no
+    * null entries; null for a NULL coordinate (explode emits
+    * nothing). Use with explode. */
   def neighborCellsWithin(lon: Column, lat: Column, level: Int,
                           marginDeg: Double): Column =
-    array_distinct(filter(
-      neighborCellsWithinRaw(lon, lat, level, marginDeg), c => c.isNotNull))
+    column(NeighborCells(expr(lon), expr(lat), level, marginDeg))
 
-  /** Raw 9-slot form of [[neighborCellsWithin]]: strip-pruned or
-    * out-of-range neighbors are NULL entries instead of being filtered
-    * out, and no de-duplication is applied. This variant contains NO
-    * higher-order functions, so it can be injected into plans by
-    * optimizer rules (lambda variables need the analyzer, which
-    * rule-injected expressions never see — [[graft.plans
-    * .AutoSpatialJoin]]). Consumers explode it and equi-join on the
-    * cell: null slots never match, and slots are pairwise-distinct
-    * for level >= 2 (the 9 (ix±1, iy±1) grid positions are distinct
-    * once the grid is wider than 2 cells). */
-  def neighborCellsWithinRaw(lon: Column, lat: Column, level: Int,
-                             marginDeg: Double): Column = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    require(marginDeg >= 0, s"marginDeg must be >= 0, got $marginDeg")
+  // ---- JVM form: the same grid, op for op ---------------------------
+
+  /** `Pmod(lon, 360.0)` on Spark's double path:
+    * `r = lon % 360; if (r < 0) (r + 360) % 360 else r`. */
+  private[spatial] def lonNorm(lon: Double): Double = {
+    val r = lon % 360.0
+    if (r < 0) (r + 360.0) % 360.0 else r
+  }
+
+  /** JVM twin of [[gridIndexExpr]]. */
+  private def gridIndex(f: Double, level: Int): Long = {
     val n = 1L << level
-    val w = 360.0 / n
-    val (ix, iy) = ixy(lon, lat, level)
-    val lonNorm = pmod(lon, lit(360.0))
-    val cosLat = cos(radians(lat))
-    val sinMargin = math.sin(math.toRadians(math.min(90.0, marginDeg)))
-    // Δlon (deg) to the east/west cell edges; sin(Δlon)·cos(lat) vs
-    // sin(margin) is the exact meridian-distance comparison (both
-    // sides of the inequality are in [0°, 90°] for cells ≤ 90° wide;
-    // coarser cells make sin non-monotone which only over-replicates)
-    val dLonE = (ix + 1).cast("double") * w - lonNorm
-    val dLonW = lonNorm - ix.cast("double") * w
-    val eastNear = sin(radians(dLonE)) * cosLat <= sinMargin
-    val westNear = sin(radians(dLonW)) * cosLat <= sinMargin
-    // lat of the north/south cell edges (exact grid geometry)
-    val latEdgeN = degrees(asin((iy + 1).cast("double") * (2.0 / n) - 1.0))
-    val latEdgeS = degrees(asin(iy.cast("double") * (2.0 / n) - 1.0))
-    val northNear = latEdgeN - lat <= marginDeg
-    val southNear = lat - latEdgeS <= marginDeg
-    val cells = for (dx <- -1 to 1; dy <- -1 to 1) yield {
-      val nx = pmod(ix + dx, lit(n)) // lon wraps
-      val ny = iy + dy               // lat clamps (drop out-of-range)
-      val inRange = ny >= 0 && ny < n
-      val strip = (dx, dy) match {
-        case (0, 0)   => lit(true)
-        case (-1, 0)  => westNear
-        case (1, 0)   => eastNear
-        case (0, -1)  => southNear
-        case (0, 1)   => northNear
-        case (-1, -1) => westNear && southNear
-        case (-1, 1)  => westNear && northNear
-        case (1, -1)  => eastNear && southNear
-        case (1, 1)   => eastNear && northNear
-        case _        => lit(true) // unreachable
-      }
-      when(inRange && strip,
-        morton(nx, ny, level).bitwiseOR(lit(level.toLong << 58)))
-    }
-    array(cells: _*)
+    math.max(math.min(math.floor(f * n.toDouble).toLong, n - 1L), 0L)
+  }
+
+  /** (ix, iy) of a point at `level`, identical to [[cellExpr]]'s. */
+  private[spatial] def gridOf(lon: Double, lat: Double,
+                              level: Int): (Long, Long) =
+    (gridIndex(lonNorm(lon) / 360.0, level),
+      gridIndex((math.sin(math.toRadians(lat)) + 1.0) / 2.0, level))
+
+  /** Packed cell id of a point, equal to [[cell]]'s, for tests and
+    * driver-side checks. */
+  def cellId(lonDeg: Double, latDeg: Double, level: Int): Long = {
+    val (ix, iy) = gridOf(lonDeg, latDeg, level)
+    mortonCellValue(ix, iy, level)
   }
 
   /** Oracle-matchable grid coordinate: identical to the internal grid
@@ -180,33 +163,31 @@ object SkyPix {
     * consumers never compare cell ids across engines, only oracle
     * queries do). Keep textually in sync with [[sql.ixSnapped]]. */
   def ixSnapped(lon: Column, level: Int): Column = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    val n = 1L << level
-    val fx = graft.functions.Det.d6(pmod(lon, lit(360.0)) / 360.0)
-    greatest(least(floor(fx * n), lit(n - 1)), lit(0L))
+    checkLevel(level)
+    column(gridIndexExpr(expr(
+      graft.functions.Det.d6(pmod(lon, lit(360.0)) / 360.0)), level))
   }
 
   /** See [[ixSnapped]]; sin(lat) axis. */
   def iySnapped(lat: Column, level: Int): Column = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    val n = 1L << level
-    val fy = graft.functions.Det.d6((sin(radians(lat)) + 1.0) / 2.0)
-    greatest(least(floor(fy * n), lit(n - 1)), lit(0L))
+    checkLevel(level)
+    column(gridIndexExpr(expr(
+      graft.functions.Det.d6((sin(radians(lat)) + 1.0) / 2.0)), level))
   }
 
   /** Public packed-cell constructor from grid coordinates — [[cell]]
     * = mortonCell(ixy). Exposed so queries that group by (ix, iy) can
     * emit the packed id without recomputing the projection. */
   def mortonCell(ix: Column, iy: Column, level: Int): Column = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
-    morton(ix, iy, level).bitwiseOR(lit(level.toLong << 58))
+    checkLevel(level)
+    column(mortonExpr(expr(ix), expr(iy), level))
   }
 
-  /** Driver-side (plain Long) twin of [[mortonCell]], for building
-    * driver-sized lookup tables (e.g. dust-map ingest) without a
-    * Spark job per cell. */
+  /** JVM twin of [[mortonCell]], for the neighbor kernel, [[cellId]]
+    * and driver-sized lookup tables (e.g. dust-map ingest) built
+    * without a Spark job per cell. */
   def mortonCellValue(ix: Long, iy: Long, level: Int): Long = {
-    require(level >= 0 && level <= MaxLevel, s"level $level out of range")
+    checkLevel(level)
     var m = 0L
     var b = 0
     while (b < level) {
@@ -278,99 +259,4 @@ object SkyPix {
   /** Recover the row-within-cell counter from a packed `_ID`. */
   def idRow(idCol: Column, rowBits: Int = 24): Column =
     idCol.bitwiseAND(lit((1L << rowBits) - 1))
-
-  /** Scala-side twin of [[neighborCellsWithin]] for tests /
-    * driver-side checks (same arithmetic, same conservative per-edge
-    * lower-bound tests; SkyPixSpec anchors twin ≡ expression). */
-  def stripNeighborIds(lonDeg: Double, latDeg: Double, level: Int,
-                       marginDeg: Double): Seq[Long] = {
-    val n = 1L << level
-    val w = 360.0 / n
-    val lonNorm = ((lonDeg % 360) + 360) % 360
-    val fy = (math.sin(math.toRadians(latDeg)) + 1.0) / 2.0
-    val ix = math.min((lonNorm / 360.0 * n).toLong, n - 1).max(0)
-    val iy = math.min((fy * n).toLong, n - 1).max(0)
-    val cosLat = math.cos(math.toRadians(latDeg))
-    val sinMargin = math.sin(math.toRadians(math.min(90.0, marginDeg)))
-    val dLonE = (ix + 1).toDouble * w - lonNorm
-    val dLonW = lonNorm - ix.toDouble * w
-    val eastNear = math.sin(math.toRadians(dLonE)) * cosLat <= sinMargin
-    val westNear = math.sin(math.toRadians(dLonW)) * cosLat <= sinMargin
-    val latEdgeN = math.toDegrees(math.asin(
-      math.max(-1, math.min(1, (iy + 1).toDouble * (2.0 / n) - 1.0))))
-    val latEdgeS = math.toDegrees(math.asin(
-      math.max(-1, math.min(1, iy.toDouble * (2.0 / n) - 1.0))))
-    val northNear = latEdgeN - latDeg <= marginDeg
-    val southNear = latDeg - latEdgeS <= marginDeg
-    val out = Seq.newBuilder[Long]
-    for (dx <- -1 to 1; dy <- -1 to 1) {
-      val ny = iy + dy
-      val strip = (dx, dy) match {
-        case (0, 0)   => true
-        case (-1, 0)  => westNear
-        case (1, 0)   => eastNear
-        case (0, -1)  => southNear
-        case (0, 1)   => northNear
-        case (-1, -1) => westNear && southNear
-        case (-1, 1)  => westNear && northNear
-        case (1, -1)  => eastNear && southNear
-        case (1, 1)   => eastNear && northNear
-        case _        => true
-      }
-      if (ny >= 0 && ny < n && strip) {
-        val nx = ((ix + dx) % n + n) % n
-        var m = 0L
-        var b = 0
-        while (b < level) {
-          m |= ((nx >> b) & 1L) << (2 * b)
-          m |= ((ny >> b) & 1L) << (2 * b + 1)
-          b += 1
-        }
-        out += (m | (level.toLong << 58))
-      }
-    }
-    out.result().distinct
-  }
-
-  /** Scala-side twin for tests / driver-side checks. */
-  def cellId(lonDeg: Double, latDeg: Double, level: Int): Long = {
-    val nCells = 1L << level
-    val fx = (((lonDeg % 360) + 360) % 360) / 360.0
-    val fy = (math.sin(math.toRadians(latDeg)) + 1.0) / 2.0
-    val ix = math.min((fx * nCells).toLong, nCells - 1).max(0)
-    val iy = math.min((fy * nCells).toLong, nCells - 1).max(0)
-    var m = 0L
-    var b = 0
-    while (b < level) {
-      m |= ((ix >> b) & 1L) << (2 * b)
-      m |= ((iy >> b) & 1L) << (2 * b + 1)
-      b += 1
-    }
-    m | (level.toLong << 58)
-  }
-
-  /** Cell angular size lower bound (deg) at a level — used to pick a
-    * level such that a radius-r match only needs the 8 neighbors. */
-  def minCellSizeDeg(level: Int): Double = {
-    // y-direction: worst case at the equator where Δ(sin lat) is
-    // largest per degree; a cell spans 2/n in sin(lat), ≥ (2/n) rad
-    // ≈ 114.6/n deg at the equator; x-direction: 360/n deg of lon,
-    // which shrinks by cos(lat) in angular terms — but the sin(lat)
-    // compression means high-|lat| cells are tall in lat instead.
-    // Lower bound used: 360/n * min over the cell of cos(lat) is not
-    // bounded below at the poles, so radius-bounded matching uses
-    // levels where 360/(1<<level) ≥ 2·radius AND callers must treat
-    // |lat| > 85° with a coarser level (documented limitation, same
-    // polar-cap caveat the reference's butterfly projection addressed).
-    360.0 / (1L << level)
-  }
-
-  /** Pick the finest level whose cells are ≥ 2× the radius wide, so
-    * any two points within `radiusDeg` land in the same or adjacent
-    * cells (capped to keep polar distortion safe; see minCellSizeDeg). */
-  def levelForRadius(radiusDeg: Double): Int = {
-    var lvl = 0
-    while (lvl < 12 && minCellSizeDeg(lvl + 1) >= 2 * radiusDeg) lvl += 1
-    lvl
-  }
 }

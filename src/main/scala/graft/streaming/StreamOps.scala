@@ -71,13 +71,21 @@ object StreamOps {
     * streaming form of the batch (sky × time) product-grid
     * cross-match (q_xmatch_temporal).
     *
-    * Shape: both sides watermarked, equi-join on the SkyPix blocking
-    * cell (side B exploded into strip-pruned neighbor cells) PLUS a
-    * two-sided event-time range predicate. The time bound is what
-    * makes stream-stream state FINITE: each side buffers only rows
-    * newer than watermark − maxDt, and the state store is keyed by
-    * the cell — it shards exactly like the batch shuffle does, so the
-    * pattern holds at full alert-stream rate.
+    * Shape: both sides watermarked, then the two disjoint channels of
+    * [[graft.spatial.CrossMatch.pairs]], each a stream-stream join
+    * with the same two-sided event-time range predicate:
+    *   - cell channel: both sides at or below `CrossMatch.CapLat`,
+    *     equi-join on the SkyPix blocking cell (side B exploded into
+    *     its strip-pruned neighbor cells);
+    *   - polar-cap channel: rows above `CapLat - radiusDeg`, at least
+    *     one side above `CapLat`, equi-joined on `signum(lat)` (a
+    *     stream-stream join needs an equality key; a pair within
+    *     radius near a pole shares the hemisphere).
+    * The time bound is what makes stream-stream state FINITE: each
+    * side buffers only rows newer than watermark − maxDt, and the
+    * state store is keyed by the cell — it shards exactly like the
+    * batch shuffle does, so the pattern holds at full alert-stream
+    * rate.
     *
     * Expected input columns on both streams: (`ts`, idCol, `lon`,
     * `lat`). Output: id_a, id_b, ts_a, ts_b, dt_s, dist_deg.
@@ -87,19 +95,30 @@ object StreamOps {
                         radiusDeg: Double, maxDtSeconds: Long,
                         watermark: String): DataFrame = {
     import graft.spatial.SkyPix
+    val cap = CrossMatch.CapLat
     val level = CrossMatch.levelFor(radiusDeg)
     val aw = a.select(col(idA).as("id_a"), col("ts").as("ts_a"),
         col("lon").as("lon_a"), col("lat").as("lat_a"))
       .withWatermark("ts_a", watermark)
-      .withColumn("cell", SkyPix.cell(col("lon_a"), col("lat_a"), level))
     val bw = b.select(col(idB).as("id_b"), col("ts").as("ts_b"),
         col("lon").as("lon_b"), col("lat").as("lat_b"))
       .withWatermark("ts_b", watermark)
-      .withColumn("cell", explode(SkyPix.neighborCellsWithin(
+    val inBand =
+      col("ts_b") >= col("ts_a") - expr(s"INTERVAL $maxDtSeconds SECONDS") &&
+        col("ts_b") <= col("ts_a") + expr(s"INTERVAL $maxDtSeconds SECONDS")
+    val aCell = aw.filter(abs(col("lat_a")) <= cap)
+      .withColumn("cell_a", SkyPix.cell(col("lon_a"), col("lat_a"), level))
+    val bCell = bw.filter(abs(col("lat_b")) <= cap)
+      .withColumn("cell_b", explode(SkyPix.neighborCellsWithin(
         col("lon_b"), col("lat_b"), level, radiusDeg)))
-    aw.join(bw, aw("cell") === bw("cell") &&
-        col("ts_b") >= col("ts_a") - expr(s"INTERVAL $maxDtSeconds SECONDS") &&
-        col("ts_b") <= col("ts_a") + expr(s"INTERVAL $maxDtSeconds SECONDS"))
+    val cellChannel = aCell.join(bCell, col("cell_a") === col("cell_b") &&
+      inBand).drop("cell_a", "cell_b")
+    val capEdge = cap - radiusDeg
+    val capChannel = aw.filter(abs(col("lat_a")) > capEdge)
+      .join(bw.filter(abs(col("lat_b")) > capEdge),
+        signum(col("lat_a")) === signum(col("lat_b")) && inBand &&
+          (abs(col("lat_a")) > cap || abs(col("lat_b")) > cap))
+    cellChannel.unionByName(capChannel)
       .withColumn("dist_deg", CrossMatch.distDeg(
         col("lon_a"), col("lat_a"), col("lon_b"), col("lat_b")))
       .filter(col("dist_deg") <= radiusDeg)

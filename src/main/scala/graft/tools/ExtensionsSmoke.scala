@@ -42,9 +42,10 @@ object ExtensionsSmoke {
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-9, s"sky_dist ${r.getDouble(0)}")
     assert(r.getDouble(3) == 0.123457, s"snap6 ${r.getDouble(3)}")
     val nb = r.getSeq[Any](2)
-    assert(nb.length == 9 && nb.exists(_ != null), s"neighbors $nb")
+    assert(nb.contains(r.getLong(1)) && !nb.contains(null),
+      s"neighbors $nb must hold the home cell and no nulls")
     println(s"functions OK: d=${r.getDouble(0)} cell=${r.getLong(1)} " +
-      s"probed=${nb.count(_ != null)} snap=${r.getDouble(3)}")
+      s"probed=${nb.size} snap=${r.getDouble(3)}")
 
     // 2) the optimizer rule fires on the naive cross-join shape
     val a = Seq((1L, 10.0, 0.0), (2L, 200.0, 45.0)).toDF("ida", "la", "ba")

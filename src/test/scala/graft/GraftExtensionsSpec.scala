@@ -43,16 +43,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("sky_neighbor_cells emits the 9-slot strip-pruned array") {
+  test("sky_neighbor_cells emits the compact strip-pruned array") {
     val e = fns("sky_neighbor_cells")(Seq(
       Literal(10.0), Literal(0.0), Literal(4), Literal(0.1)))
     val arr = e.eval().asInstanceOf[ArrayData]
-    assert(arr.numElements() == 9)
-    val nonNull = (0 until 9).count(i => !arr.isNullAt(i))
-    assert(nonNull >= 1 && nonNull <= 9)
-    // the home slot is always populated and carries the level tag
-    val vals = (0 until 9).filter(i => !arr.isNullAt(i)).map(arr.getLong)
-    assert(vals.forall(_ >> 58 == 4L))
+    val n = arr.numElements()
+    assert(n >= 1 && n <= 9)
+    assert((0 until n).forall(i => !arr.isNullAt(i)), "no null entries")
+    val vals = (0 until n).map(arr.getLong)
+    assert(vals.distinct == vals && vals.forall(_ >> 58 == 4L))
+    // the home cell is always present
+    val home = fns("sky_cell")(Seq(Literal(10.0), Literal(0.0), Literal(4)))
+      .eval().asInstanceOf[Long]
+    assert(vals.contains(home), s"$vals must hold $home")
   }
 
   test("snap6 is the SnapDecimal6 determinism snap") {

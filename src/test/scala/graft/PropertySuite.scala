@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Haversine
-import graft.spatial.SkyPix
+import graft.spatial.{NeighborCells, SkyPix}
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Pure-JVM ScalaCheck properties (no SparkSession — sbt runs
@@ -86,7 +86,7 @@ object PropertySuite extends Properties("graft") {
       havDeg(lo, la, lon2, lat2) <= margin && math.abs(lat2) <= latCap
     Prop(!applicable || {
       val home = SkyPix.cellId(lo, la, lv)
-      SkyPix.stripNeighborIds(lon2, lat2, lv, margin).contains(home)
+      NeighborCells.ids(lon2, lat2, lv, margin).contains(home)
     })
   }
 

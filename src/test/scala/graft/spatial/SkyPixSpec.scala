@@ -47,7 +47,8 @@ class SkyPixSpec extends SpecBase {
     val df = Seq((0.1, 0.1), (359.9, 0.1), (10.0, 89.0)).toDF("lon", "lat")
     val rows = df.select(col("lon"), col("lat"),
       SkyPix.cell(col("lon"), col("lat"), 6).as("home"),
-      SkyPix.neighborCells(col("lon"), col("lat"), 6).as("nbrs")).collect()
+      SkyPix.neighborCellsWithin(col("lon"), col("lat"), 6, 180.0).as("nbrs"))
+      .collect()
     for (r <- rows) {
       val home = r.getLong(2)
       val nbrs = r.getSeq[Long](3)
@@ -70,7 +71,8 @@ class SkyPixSpec extends SpecBase {
     val df = shifted.toDF("lon1", "lat1", "lon2", "lat2")
     val bad = df.select(
       SkyPix.cell(col("lon1"), col("lat1"), level).as("c1"),
-      SkyPix.neighborCells(col("lon2"), col("lat2"), level).as("nbrs"))
+      SkyPix.neighborCellsWithin(col("lon2"), col("lat2"), level, 180.0)
+        .as("nbrs"))
       .filter(!array_contains(col("nbrs"), col("c1")))
       .count()
     assert(bad == 0)
@@ -112,7 +114,8 @@ class SkyPixSpec extends SpecBase {
     assert(bad == 0)
     // and the strip list is a subset of the full 9-neighborhood
     val sup = df.select(
-      SkyPix.neighborCells(col("lon2"), col("lat2"), level).as("all9"),
+      SkyPix.neighborCellsWithin(col("lon2"), col("lat2"), level, 180.0)
+        .as("all9"),
       SkyPix.neighborCellsWithin(col("lon2"), col("lat2"), level, margin)
         .as("strip"))
       .filter(size(array_except(col("strip"), col("all9"))) > 0)
@@ -120,19 +123,51 @@ class SkyPixSpec extends SpecBase {
     assert(sup == 0)
   }
 
-  test("strip Column expression and Scala twin agree") {
-    // anchors stripNeighborIds ≡ neighborCellsWithin, so the pure-JVM
-    // ScalaCheck closure property (PropertySuite.skypix.stripClosure)
-    // covers the expression too
-    val pts = samples(300, 6).filter { case (_, la) => math.abs(la) < 89 }
-    val df = pts.toDF("lon", "lat")
-    for ((level, margin) <- Seq((3, 2.0), (6, 0.4), (9, 0.05))) {
-      val got = df.select(
-        SkyPix.neighborCellsWithin(col("lon"), col("lat"), level, margin))
-        .collect().map(_.getSeq[Long](0).sorted.toSeq)
-      val want = pts.map { case (lo, la) =>
-        SkyPix.stripNeighborIds(lo, la, level, margin).sorted.toSeq }
-      assert(got.toSeq == want)
+  test("neighbor kernel at edge points: compact, distinct, holds the " +
+    "Catalyst home cell; margin 180 is the whole in-range 3x3") {
+    // lon/lat at the wrap, the poles, signed zeros and cell edges,
+    // plus random points; every level the grid supports in practice
+    val edgeLats = (0 to 16).map(k => math.toDegrees(math.asin(2.0 * k / 16 - 1)))
+    val lons = Seq(0.0, -0.0, 360.0, 359.99999999999994, 720.0, -360.0,
+      -720.5, 1e-300, -1e-300, 180.0, 22.5, 45.0, 337.5, 0.5)
+    val lats = Seq(90.0, -90.0, 89.99999, -89.99999, 0.0, -0.0, 85.0,
+      -85.0) ++ edgeLats
+    val pts = (for (lo <- lons; la <- lats) yield (lo, la)) ++ samples(200, 6)
+    val levels = 0 to 12
+    val margins = Seq(0.01, 0.5, 2.0, 180.0)
+    // the shuffle keeps the optimizer from folding the select into a
+    // local relation, so the expressions run as generated code
+    val df = pts.toDF("lon", "lat").repartition(3)
+    val cols = levels.flatMap { lv =>
+      SkyPix.cell(col("lon"), col("lat"), lv) +: margins.map(m =>
+        SkyPix.neighborCellsWithin(col("lon"), col("lat"), lv, m))
+    }
+    val rows = df.select(col("lon") +: col("lat") +: cols: _*).collect()
+    assert(rows.length == pts.size)
+    // (ix, iy) of a packed id: the even and odd morton bits
+    def unpack(c: Long, lv: Int): (Long, Long) =
+      (0 until lv).foldLeft((0L, 0L)) { case ((x, y), b) =>
+        (x | (((c >> (2 * b)) & 1L) << b), y | (((c >> (2 * b + 1)) & 1L) << b))
+      }
+    for (r <- rows; (lv, i) <- levels.zipWithIndex) {
+      val (lo, la) = (r.getDouble(0), r.getDouble(1))
+      val base = 2 + i * (1 + margins.size)
+      val home = r.getLong(base)
+      assert(SkyPix.cellId(lo, la, lv) == home, s"cellId ($lo, $la) L$lv")
+      val n = 1L << lv
+      val (ix, iy) = unpack(home, lv)
+      val all = (for (dx <- -1 to 1; dy <- -1 to 1 if iy + dy >= 0 && iy + dy < n)
+        yield SkyPix.mortonCellValue((ix + dx + n) % n, iy + dy, lv)).toSet
+      for ((m, j) <- margins.zipWithIndex) {
+        val arr = r.getSeq[Any](base + 1 + j)
+        val what = s"($lo, $la) L$lv m$m: $arr"
+        assert(!arr.contains(null), what)
+        val ids = arr.map(_.asInstanceOf[Long])
+        assert(ids.distinct == ids && ids.size <= 9 && ids.contains(home), what)
+        assert(ids.toSet.subsetOf(all), what)
+        assert(ids == NeighborCells.ids(lo, la, lv, m).toSeq, what)
+        if (m == 180.0) assert(ids.toSet == all, what)
+      }
     }
   }
 

@@ -328,6 +328,31 @@ class StreamOpsSpec extends SpecBase {
     } finally q.stop()
   }
 
+  test("stream-stream coincidence join pairs a trans-polar detection " +
+    "via the cap channel") {
+    implicit val sqlCtx = spark.sqlContext
+    val ia = MemoryStream[TsDet]
+    val ib = MemoryStream[TsDet]
+    val joined = StreamOps.coincidenceStream(ia.toDF(), ib.toDF(),
+      "det_id", "det_id", radiusDeg = 0.15, maxDtSeconds = 600,
+      watermark = "1 hour")
+    val q = joined.writeStream.format("memory")
+      .queryName("coincidence_polar")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // 0.1 deg apart across the pole but 180 deg apart in lon: no
+      // lon-neighbor cell holds B, only the cap channel can pair them
+      ia.addData(TsDet(ts("2024-01-01 00:00:00"), 1, 10.0, 89.95))
+      ib.addData(TsDet(ts("2024-01-01 00:00:00"), 61, 190.0, 89.95))
+      q.processAllAvailable()
+      val got = spark.table("coincidence_polar")
+        .select("id_a", "id_b", "dist_deg").collect()
+      assert(got.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        Seq((1L, 61L)), s"exactly the trans-polar pair: ${got.toSeq}")
+      assert(math.abs(got.head.getDouble(2) - 0.1) < 1e-9)
+    } finally q.stop()
+  }
+
   test("dropDuplicatesWithinWatermark dedups within the horizon") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]

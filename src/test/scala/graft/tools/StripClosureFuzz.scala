@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.spatial.SkyPix
+import graft.spatial.{NeighborCells, SkyPix}
 
 /** Dev fuzz harness for the stripClosure property (PropertySuite):
   * samples the exact same distributions with a seeded RNG at much
@@ -48,7 +48,7 @@ object StripClosureFuzz {
         havDeg(lo, la, lon2, lat2) <= margin && math.abs(lat2) <= latCap
       if (applicable) {
         val home = SkyPix.cellId(lo, la, lv)
-        if (!SkyPix.stripNeighborIds(lon2, lat2, lv, margin).contains(home)) {
+        if (!NeighborCells.ids(lon2, lat2, lv, margin).contains(home)) {
           failures += 1
           println(f"FAIL lo=$lo%.10f la=$la%.10f lv=$lv margin=$margin%.10f " +
             f"lon2=$lon2%.10f lat2=$lat2%.10f hav=${havDeg(lo, la, lon2, lat2)}%.10f")
