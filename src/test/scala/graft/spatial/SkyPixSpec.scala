@@ -123,6 +123,23 @@ class SkyPixSpec extends SpecBase {
     assert(sup == 0)
   }
 
+  test("strip Column expression and Scala twin agree") {
+    // anchors NeighborCells.ids ≡ neighborCellsWithin on the local
+    // (interpreted) path, so the pure-JVM ScalaCheck closure property
+    // (PropertySuite.skypix.stripClosure) covers the expression too;
+    // the edge-point case below covers the generated-code path
+    val pts = samples(300, 6).filter { case (_, la) => math.abs(la) < 89 }
+    val df = pts.toDF("lon", "lat")
+    for ((level, margin) <- Seq((3, 2.0), (6, 0.4), (9, 0.05))) {
+      val got = df.select(
+        SkyPix.neighborCellsWithin(col("lon"), col("lat"), level, margin))
+        .collect().map(_.getSeq[Long](0).sorted.toSeq)
+      val want = pts.map { case (lo, la) =>
+        NeighborCells.ids(lo, la, level, margin).toSeq.sorted }
+      assert(got.toSeq == want)
+    }
+  }
+
   test("neighbor kernel at edge points: compact, distinct, holds the " +
     "Catalyst home cell; margin 180 is the whole in-range 3x3") {
     // lon/lat at the wrap, the poles, signed zeros and cell edges,
