@@ -102,8 +102,8 @@ object DustMap {
     // driver-side enumeration this replaces would materialize 1M+
     // Rows on the driver; here the driver holds only the images
     // (tens of MB, the irreducible ingest cost) and each executor
-    // samples its own id-range. Same coneCellsDf discipline:
-    // driver-side work is O(1), generation is distributed.
+    // samples its own id-range: driver-side work is O(1), generation
+    // is distributed.
     val bNgp = spark.sparkContext.broadcast(ngp)
     val bSgp = spark.sparkContext.broadcast(sgp)
     val _ = sample(0.0, 45.0) // validate images driver-side before shipping

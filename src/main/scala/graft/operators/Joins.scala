@@ -4,6 +4,7 @@ import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.Det.{sql => D}
 import graft.sources.CacheKeys
+import graft.spatial.CrossMatch
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -298,11 +299,7 @@ object Joins {
        |  FROM supplier),
        |p AS (SELECT a_id, b_id,
        |    ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-            " * sin(radians(b_lon - a_lon) / 2)" +
-            " * sin(radians(b_lon - a_lon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))} AS dist_deg
        |  FROM a CROSS JOIN b)
        |SELECT a_id, b_id, dist_deg, CAST(rn AS INT) AS match_rank FROM (
        |  SELECT a_id, b_id, dist_deg,
@@ -356,11 +353,7 @@ object Joins {
        |  FROM supplier)
        |SELECT a_id, a_lon, a_lat FROM a
        |WHERE NOT EXISTS (SELECT 1 FROM b WHERE ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-            " * sin(radians(b_lon - a_lon) / 2)" +
-            " * sin(radians(b_lon - a_lon) / 2))))")} <= 0.95)
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))} <= 0.95)
        |ORDER BY a_id""".stripMargin) { (s, dir) =>
     val a = skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
       "a_id", "a_lon", "a_lat")
@@ -576,11 +569,7 @@ object Joins {
        |  FROM customer),
        |d AS (SELECT id, lon, lat,
        |    ${D.d6(
-          s"degrees(2 * asin(sqrt(" +
-            s"sin(radians(lat - ($coneLat)) / 2) * sin(radians(lat - ($coneLat)) / 2)" +
-            s" + cos(radians($coneLat)) * cos(radians(lat))" +
-            s" * sin(radians(lon - $coneLon) / 2)" +
-            s" * sin(radians(lon - $coneLon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg(s"$coneLon", s"$coneLat", "lon", "lat"))} AS dist_deg
        |  FROM c)
        |SELECT id, lon, lat, dist_deg FROM d
        |WHERE dist_deg <= $coneR ORDER BY id""".stripMargin) { (s, dir) =>
@@ -632,11 +621,7 @@ object Joins {
        |  FROM customer),
        |d AS (SELECT id, lon, lat,
        |    ${D.d6(
-          s"degrees(2 * asin(sqrt(" +
-            s"sin(radians(lat - ($qlbLat)) / 2) * sin(radians(lat - ($qlbLat)) / 2)" +
-            s" + cos(radians($qlbLat)) * cos(radians(lat))" +
-            s" * sin(radians(lon - $qlbLon) / 2)" +
-            s" * sin(radians(lon - $qlbLon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg(s"$qlbLon", s"$qlbLat", "lon", "lat"))} AS dist_deg
        |  FROM c)
        |SELECT id, lon, lat FROM d
        |WHERE dist_deg <= $qlbR ORDER BY id""".stripMargin) { (s, dir) =>
@@ -665,21 +650,6 @@ object Joins {
     ql.query("SELECT id, lon, lat FROM customer_sky ORDER BY id",
       graft.spatial.Bounds.Rect(355.0011, 15.0022, -10.0033, 20.0044))
   }
-
-  /** DuckDB/Spark-portable haversine text (degrees) between two
-    * (lon, lat) expression pairs — ONE source for the round's oracle
-    * distance strings (a transposed term in a hand-inlined copy would
-    * produce a subtly wrong oracle that only fails at a boundary
-    * row). Same term order as the historical inline copies, so the
-    * IEEE evaluation tree is unchanged. */
-  private[operators] def havSqlAB(lonA: String, latA: String,
-                                  lonB: String, latB: String): String =
-    "degrees(2 * asin(sqrt(" +
-      s"sin(radians(($latB) - ($latA)) / 2) * " +
-      s"sin(radians(($latB) - ($latA)) / 2)" +
-      s" + cos(radians($latA)) * cos(radians($latB))" +
-      s" * sin(radians(($lonB) - ($lonA)) / 2)" +
-      s" * sin(radians(($lonB) - ($lonA)) / 2))))"
 
   /** SQL twin of [[skyFrom]]: the deterministic sky-lattice
     * projection of an integer key, as a SELECT-list fragment. */
@@ -752,7 +722,7 @@ object Joins {
        |    CAST(ts AS TIMESTAMP) AS ts
        |  FROM events),
        |p AS (SELECT id, lon, lat, ts,
-       |    ${D.d6(havSqlAB("120.4321", "(-3.2109)", "lon", "lat"))}
+       |    ${D.d6(CrossMatch.sql.distDeg("120.4321", "(-3.2109)", "lon", "lat"))}
        |      AS dist_deg
        |  FROM d)
        |SELECT id, lon, lat, ts FROM p
@@ -827,12 +797,12 @@ object Joins {
     s"""WITH d AS (SELECT ${skySqlCols("event_id", "id", "lon", "lat")}
        |  FROM events),
        |bd AS (SELECT id, lon, lat FROM d
-       |  WHERE ${D.d6(havSqlAB("7.4321", "(-26.2109)", "lon", "lat"))}
+       |  WHERE ${D.d6(CrossMatch.sql.distDeg("7.4321", "(-26.2109)", "lon", "lat"))}
        |    <= 9.8765),
        |o AS (SELECT ${skySqlCols("s_suppkey", "obj_id", "olon", "olat")}
        |  FROM supplier),
        |p AS (SELECT bd.id, o.obj_id,
-       |    ${D.d6(havSqlAB("lon", "lat", "olon", "olat"))} AS dist_deg
+       |    ${D.d6(CrossMatch.sql.distDeg("lon", "lat", "olon", "olat"))} AS dist_deg
        |  FROM bd CROSS JOIN o),
        |m AS (SELECT id, obj_id, dist_deg FROM (
        |    SELECT id, obj_id, dist_deg,
@@ -910,7 +880,7 @@ object Joins {
        |b AS (SELECT ${skySqlCols("s_suppkey", "b_id", "b_lon", "b_lat")}
        |  FROM supplier),
        |p AS (SELECT a_id, b_id,
-       |    ${D.d6(havSqlAB("a_lon", "a_lat", "b_lon", "b_lat"))}
+       |    ${D.d6(CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))}
        |      AS dist_deg
        |  FROM a CROSS JOIN b)""".stripMargin
 
@@ -1004,12 +974,12 @@ object Joins {
     s"""WITH d AS (SELECT ${skySqlCols("event_id", "id", "lon", "lat")}
        |  FROM events),
        |bd AS (SELECT id, lon, lat FROM d
-       |  WHERE ${D.d6(havSqlAB("8.7654", "(-25.4321)", "lon", "lat"))}
+       |  WHERE ${D.d6(CrossMatch.sql.distDeg("8.7654", "(-25.4321)", "lon", "lat"))}
        |    <= 9.3456),
        |o AS (SELECT ${skySqlCols("s_suppkey", "obj_id", "olon", "olat")}
        |  FROM supplier),
        |p AS (SELECT bd.id, o.obj_id,
-       |    ${D.d6(havSqlAB("lon", "lat", "olon", "olat"))} AS dist_deg
+       |    ${D.d6(CrossMatch.sql.distDeg("lon", "lat", "olon", "olat"))} AS dist_deg
        |  FROM bd CROSS JOIN o),
        |m AS (SELECT id, obj_id, dist_deg FROM (
        |    SELECT id, obj_id, dist_deg,
@@ -1141,7 +1111,7 @@ object Joins {
        |b AS (SELECT ${skySqlCols("s_suppkey", "b_id", "b_lon", "b_lat")}
        |  FROM supplier),
        |p AS (SELECT a_id, b_id,
-       |    ${D.d6(havSqlAB("a_lon", "a_lat", "b_lon", "b_lat"))}
+       |    ${D.d6(CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))}
        |      AS dist_deg
        |  FROM a CROSS JOIN b)
        |SELECT a_id, b_id, dist_deg FROM (
@@ -1178,11 +1148,7 @@ object Joins {
   }
 
   private val havSql =
-    "degrees(2 * asin(sqrt(" +
-      "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-      " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-      " * sin(radians(b_lon - a_lon) / 2)" +
-      " * sin(radians(b_lon - a_lon) / 2))))"
+    CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat")
 
   /** J6c — the DECLARATIVE cross-match: the query is written as the
     * naive `crossJoin + skyDist <= r` a user would type, and the
@@ -1253,11 +1219,7 @@ object Joins {
        |a AS (SELECT * FROM e WHERE id < 500),
        |p AS (SELECT a.id AS a_id, b.id AS b_id,
        |    ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)" +
-            " + cos(radians(a.lat)) * cos(radians(b.lat))" +
-            " * sin(radians(b.lon - a.lon) / 2)" +
-            " * sin(radians(b.lon - a.lon) / 2))))")} AS dist_deg,
+          CrossMatch.sql.distDeg("a.lon", "a.lat", "b.lon", "b.lat"))} AS dist_deg,
        |    b.tus - a.tus AS dt_us
        |  FROM a CROSS JOIN e b WHERE a.id <> b.id)
        |SELECT a_id, b_id, dist_deg, dt_us FROM p
@@ -1445,11 +1407,7 @@ object Joins {
        |  FROM supplier),
        |p AS (SELECT a_id, b_id,
        |    ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-            " * sin(radians(b_lon - a_lon) / 2)" +
-            " * sin(radians(b_lon - a_lon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))} AS dist_deg
        |  FROM a CROSS JOIN b),
        |m AS (SELECT a_id, b_id, dist_deg FROM (
        |    SELECT a_id, b_id, dist_deg,
@@ -1508,34 +1466,18 @@ object Joins {
        |p1 AS (SELECT a_id, b_id, b_lon, b_lat, dist_ab FROM (
        |    SELECT a.a_id, b.b_id, b.b_lon, b.b_lat,
        |      ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-            " * sin(radians(b_lon - a_lon) / 2)" +
-            " * sin(radians(b_lon - a_lon) / 2))))")} AS dist_ab,
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))} AS dist_ab,
        |      row_number() OVER (PARTITION BY a.a_id
        |        ORDER BY ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b_lat - a_lat) / 2) * sin(radians(b_lat - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(b_lat))" +
-            " * sin(radians(b_lon - a_lon) / 2)" +
-            " * sin(radians(b_lon - a_lon) / 2))))")}, b.b_id) AS rn
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "b_lon", "b_lat"))}, b.b_id) AS rn
        |    FROM a CROSS JOIN b) WHERE rn = 1 AND dist_ab <= 0.95),
        |p2 AS (SELECT a_id, b_id, dist_ab, c_id, dist_bc FROM (
        |    SELECT p1.a_id, p1.b_id, p1.dist_ab, c.c_id,
        |      ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(c_lat - b_lat) / 2) * sin(radians(c_lat - b_lat) / 2)" +
-            " + cos(radians(b_lat)) * cos(radians(c_lat))" +
-            " * sin(radians(c_lon - b_lon) / 2)" +
-            " * sin(radians(c_lon - b_lon) / 2))))")} AS dist_bc,
+          CrossMatch.sql.distDeg("b_lon", "b_lat", "c_lon", "c_lat"))} AS dist_bc,
        |      row_number() OVER (PARTITION BY p1.a_id
        |        ORDER BY ${D.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(c_lat - b_lat) / 2) * sin(radians(c_lat - b_lat) / 2)" +
-            " + cos(radians(b_lat)) * cos(radians(c_lat))" +
-            " * sin(radians(c_lon - b_lon) / 2)" +
-            " * sin(radians(c_lon - b_lon) / 2))))")}, c.c_id) AS rn
+          CrossMatch.sql.distDeg("b_lon", "b_lat", "c_lon", "c_lat"))}, c.c_id) AS rn
        |    FROM p1 CROSS JOIN c) WHERE rn = 1 AND dist_bc <= 0.95)
        |SELECT a_id, b_id, c_id, dist_ab, dist_bc
        |FROM p2 ORDER BY a_id""".stripMargin) { (s, dir) =>

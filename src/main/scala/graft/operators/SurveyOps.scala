@@ -3,6 +3,7 @@ package graft.operators
 import graft.{LsdDb, QuerySpec}
 import graft.functions.Det
 import graft.functions.{Det => D}
+import graft.spatial.CrossMatch
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -255,11 +256,7 @@ object SurveyOps {
        |  FROM a CROSS JOIN b),
        |p AS (SELECT a_id, b_id,
        |    ${D.sql.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(by - a_lat) / 2) * sin(radians(by - a_lat) / 2)" +
-            " + cos(radians(a_lat)) * cos(radians(by))" +
-            " * sin(radians(bx - a_lon) / 2)" +
-            " * sin(radians(bx - a_lon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg("a_lon", "a_lat", "bx", "by"))} AS dist_deg
        |  FROM t)
        |SELECT a_id, b_id, dist_deg, CAST(rn AS INT) AS match_rank FROM (
        |  SELECT a_id, b_id, dist_deg,
@@ -758,11 +755,7 @@ object SurveyOps {
        |a AS (SELECT * FROM e WHERE id < 500),
        |p AS (SELECT a.id AS a_id, b.id AS b_id,
        |    ${D.sql.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)" +
-            " + cos(radians(a.lat)) * cos(radians(b.lat))" +
-            " * sin(radians(b.lon - a.lon) / 2)" +
-            " * sin(radians(b.lon - a.lon) / 2))))")} AS dist_deg,
+          CrossMatch.sql.distDeg("a.lon", "a.lat", "b.lon", "b.lat"))} AS dist_deg,
        |    (b.tus - a.tus) / 86400000000.0 AS dt_days
        |  FROM a CROSS JOIN e b
        |  WHERE b.tus > a.tus AND b.tus - a.tus <= 172800000000)
@@ -850,11 +843,7 @@ object SurveyOps {
        |p AS (SELECT a.id AS a_id, b.id AS b_id,
        |    a.lon AS alon, a.lat AS alat, b.lon AS blon, b.lat AS blat,
        |    ${D.sql.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)" +
-            " + cos(radians(a.lat)) * cos(radians(b.lat))" +
-            " * sin(radians(b.lon - a.lon) / 2)" +
-            " * sin(radians(b.lon - a.lon) / 2))))")} AS dist_deg,
+          CrossMatch.sql.distDeg("a.lon", "a.lat", "b.lon", "b.lat"))} AS dist_deg,
        |    (b.tus - a.tus) / 86400000000.0 AS dt_days
        |  FROM e a CROSS JOIN e b
        |  WHERE b.tus > a.tus AND b.tus - a.tus <= 172800000000),
@@ -955,11 +944,7 @@ object SurveyOps {
        |  FROM orders WHERE o_orderkey <= 60000),
        |p AS (SELECT a.id AS a_id, b.id AS b_id,
        |    ${D.sql.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)" +
-            " + cos(radians(a.lat)) * cos(radians(b.lat))" +
-            " * sin(radians(b.lon - a.lon) / 2)" +
-            " * sin(radians(b.lon - a.lon) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg("a.lon", "a.lat", "b.lon", "b.lat"))} AS dist_deg
        |  FROM c a JOIN c b
        |    ON a.id <> b.id AND abs(a.lat - b.lat) <= 0.9000005),
        |nn AS (SELECT a_id, dist_deg,
@@ -1147,12 +1132,8 @@ object SurveyOps {
        |SELECT a.object_id AS a_id, b.object_id AS b_id,
        |  a.pm_lon_deg_day AS pm_lon, a.pm_lat_deg_day AS pm_lat,
        |  ${D.sql.d6(
-          "degrees(2 * asin(sqrt(" +
-            "sin(radians(b.lat0_deg - a.lat0_deg) / 2)" +
-            " * sin(radians(b.lat0_deg - a.lat0_deg) / 2)" +
-            " + cos(radians(a.lat0_deg)) * cos(radians(b.lat0_deg))" +
-            " * sin(radians(b.lon0_deg - a.lon0_deg) / 2)" +
-            " * sin(radians(b.lon0_deg - a.lon0_deg) / 2))))")} AS dist_deg
+          CrossMatch.sql.distDeg("a.lon0_deg", "a.lat0_deg",
+            "b.lon0_deg", "b.lat0_deg"))} AS dist_deg
        |FROM v a JOIN v b
        |  ON a.vlon = b.vlon AND a.vlat = b.vlat
        |  AND a.object_id < b.object_id
@@ -1532,11 +1513,7 @@ object SurveyOps {
     * the q_two_point oracle (kept in one place so the three pair
     * CTEs stay literally identical). */
   private def twoPointDistSql(a: String, b: String): String = D.sql.d6(
-    s"degrees(2 * asin(sqrt(" +
-      s"sin(radians($b.lat - $a.lat) / 2) * sin(radians($b.lat - $a.lat) / 2)" +
-      s" + cos(radians($a.lat)) * cos(radians($b.lat))" +
-      s" * sin(radians($b.lon - $a.lon) / 2)" +
-      s" * sin(radians($b.lon - $a.lon) / 2))))")
+    CrossMatch.sql.distDeg(s"$a.lon", s"$a.lat", s"$b.lon", s"$b.lat"))
 
   /** A21 — classical (Schuster/DFT) PERIODOGRAM: per object and
     * trial frequency, the spectral power P(f) = (C² + S²)/n with
@@ -1767,11 +1744,7 @@ object SurveyOps {
     * libm last-ulp + any mx²+my² FMA contraction divergence). */
   val qObjectCatalog: QuerySpec = {
     val distSql = D.sql.d6(
-      "degrees(2 * asin(sqrt(" +
-        "sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)" +
-        " + cos(radians(a.lat)) * cos(radians(b.lat))" +
-        " * sin(radians(b.lon - a.lon) / 2)" +
-        " * sin(radians(b.lon - a.lon) / 2))))")
+      CrossMatch.sql.distDeg("a.lon", "a.lat", "b.lon", "b.lat"))
     QuerySpec(
       "q_object_catalog",
       s"""WITH RECURSIVE dets AS MATERIALIZED (

@@ -395,7 +395,7 @@ object TimeWindows {
        |    CAST(s_suppkey * 7 % 600 AS DOUBLE) / 10.0 - 30.0 AS olat
        |  FROM supplier),
        |p AS (SELECT det_id, obj_id, ${D.d6(
-          graft.operators.Joins.havSqlAB("lon", "lat", "olon", "olat"))}
+          graft.spatial.CrossMatch.sql.distDeg("lon", "lat", "olon", "olat"))}
        |    AS dist_deg
        |  FROM d CROSS JOIN o)
        |SELECT det_id, obj_id, dist_deg FROM p WHERE dist_deg <= 0.6171

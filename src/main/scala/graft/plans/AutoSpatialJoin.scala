@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.spatial.{CrossMatch, NeighborCells, SkyPix}
+import graft.spatial.CrossMatch
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
@@ -77,15 +77,11 @@ case class SkyDist(lon1: Expression, lat1: Expression,
 /** Optimizer rule: rewrite `Filter(sky_dist(al, aa, bl, bb) <= r,
   * Join(A, B, inner/cross, no condition))` — the plan a user gets from
   * the NAIVE `a.crossJoin(b).where(skyDist(...) <= r)` — into the
-  * cell-blocked two-channel join [[CrossMatch.pairs]] builds by
-  * hand:
-  *
-  *   - cell channel: both sides filtered below the polar cap, A keyed
-  *     by its home SkyPix cell, B exploded (strip-pruned) into the
-  *     neighbor cells within r, equi-join on cell;
-  *   - cap channel: rows with either side above `capLat`, joined with
-  *     the disjoint-hemisphere predicates (tiny by equal-area
-  *     construction — Catalyst broadcasts it on its own).
+  * cell-blocked two-channel join of [[CrossMatch.pairs]], built by
+  * CrossMatch's one channel builder ([[CrossMatch.explodeCells]] and
+  * [[CrossMatch.channels]]): a cell channel below the polar cap (A
+  * keyed by its home SkyPix cell, B exploded strip-pruned into the
+  * neighbor cells within r) and the broadcast polar-cap channel.
   *
   * The original filter (including the exact sky_dist refine and any
   * other conjuncts) is re-applied above the union, so the rewrite is
@@ -102,12 +98,6 @@ case class SkyDist(lon1: Expression, lat1: Expression,
 object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
 
   private val CapLat = CrossMatch.CapLat
-
-  // Generated cell-key column names — the idempotence-guard signature
-  // in [[rewrite]] and the key names emitted by [[blocked]] must stay
-  // in lockstep, so both read from here.
-  private val GenCellA = "_graft_ca"
-  private val GenCellB = "_graft_cb"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // post-pushdown shape: extraOptimizations run AFTER the main
@@ -180,8 +170,8 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
     }.flatMap { case (sd, r) =>
       val isOwnOutput = conjuncts.exists {
         case EqualTo(a: AttributeReference, b: AttributeReference) =>
-          (a.name == GenCellA && b.name == GenCellB) ||
-            (a.name == GenCellB && b.name == GenCellA)
+          (a.name == CrossMatch.CellA && b.name == CrossMatch.CellB) ||
+            (a.name == CrossMatch.CellB && b.name == CrossMatch.CellA)
         case EqualTo(l, rr) =>
           // the cap channel's EXACT generated signature: signum over
           // the SAME lat expressions the sky_dist conjunct matches on,
@@ -212,8 +202,8 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
       (aRefs.subsetOf(right.outputSet) && bRefs.subsetOf(left.outputSet))
   }
 
-  private def D(v: Double): Literal = Literal(v)
-
+  /** CrossMatch's channels with A = `left`, B = `right`, so the union
+    * keeps the join's output order. */
   private def blocked(left: LogicalPlan, right: LogicalPlan,
                       sd: SkyDist, radius: Double): LogicalPlan = {
     // orient: (aLon, aLat) on the left plan, (bLon, bLat) on the right
@@ -221,38 +211,11 @@ object AutoSpatialJoin extends Rule[LogicalPlan] with PredicateHelper {
       (sd.lon1.references ++ sd.lat1.references).subsetOf(left.outputSet)
     val (aLon, aLat) = if (leftFirst) (sd.lon1, sd.lat1) else (sd.lon2, sd.lat2)
     val (bLon, bLat) = if (leftFirst) (sd.lon2, sd.lat2) else (sd.lon1, sd.lat1)
-
     val level = CrossMatch.levelFor(radius, CapLat)
-
-    // --- cell channel (both sides below the cap) ---
-    val aBelow = Filter(LessThanOrEqual(Abs(aLat), D(CapLat)), left)
-    val cellA = Alias(SkyPix.cellExpr(aLon, aLat, level), GenCellA)()
-    val aKeyed = Project(left.output :+ cellA, aBelow)
-
-    val bBelow = Filter(LessThanOrEqual(Abs(bLat), D(CapLat)), right)
-    val explode = Explode(NeighborCells(bLon, bLat, level, radius))
-    val elemField = explode.elementSchema.fields.head
-    val cellB = AttributeReference(GenCellB, elemField.dataType,
-      elemField.nullable)()
-    val bKeyed = Generate(explode, unrequiredChildIndex = Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellB), child = bBelow)
-
-    val cellJoin = Join(aKeyed, bKeyed, Inner,
-      Some(EqualTo(cellA.toAttribute, cellB)), JoinHint.NONE)
-    val cellChannel = Project(left.output ++ right.output, cellJoin)
-
-    // --- polar cap channel (disjoint from the cell channel: requires
-    // at least one side strictly above the cap) ---
-    val capEdge = D(CapLat - radius)
-    val aCap = Filter(GreaterThan(Abs(aLat), capEdge), left)
-    val bCap = Filter(GreaterThan(Abs(bLat), capEdge), right)
-    val capCond = And(
-      Or(GreaterThan(Abs(aLat), D(CapLat)), GreaterThan(Abs(bLat), D(CapLat))),
-      EqualTo(Signum(aLat), Signum(bLat)))
-    val capJoin = Join(aCap, bCap, Inner, Some(capCond), JoinHint.NONE)
-    val capChannel = Project(left.output ++ right.output, capJoin)
-
-    Union(Seq(cellChannel, capChannel))
+    val (bCells, cellB) =
+      CrossMatch.explodeCells(right, bLon, bLat, level, radius, CapLat)
+    CrossMatch.channels(left, aLon, aLat, level, bCells, cellB, right, bLat,
+      radius, CapLat)
   }
 }
 

@@ -1,6 +1,12 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.{Abs, Alias, And, Attribute,
+  AttributeReference, EqualTo, Explode, Expression, GreaterThan,
+  LessThanOrEqual, Literal, Or, Signum}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter,
+  Generate, HintInfo, Join, JoinHint, LogicalPlan, Project, Union}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,6 +36,12 @@ import org.apache.spark.sql.functions._
   * construction, tiny) polar slices. The two channels are disjoint,
   * so no dedup pass is needed.
   *
+  * The channel decomposition is written once, as logical-plan
+  * builders ([[explodeCells]], [[channels]], [[capChannel]]): [[pairs]]
+  * wraps their plan into a DataFrame, and the optimizer rule
+  * [[graft.plans.AutoSpatialJoin]] injects the same plan in place of a
+  * naive cross join.
+  *
   * At 100 TB: phase 1 is a plain shuffle join on a balanced key;
   * nothing is driver-side, the window in phase 2 shuffles by A id
   * only for rows that had candidates, and the cap channel stays a
@@ -45,6 +57,22 @@ object CrossMatch {
     val a = sin(dLat / 2) * sin(dLat / 2) +
       cos(radians(lat1)) * cos(radians(lat2)) * sin(dLon / 2) * sin(dLon / 2)
     degrees(lit(2) * asin(sqrt(a)))
+  }
+
+  /** DuckDB/Spark-portable SQL text of [[distDeg]], for oracle queries. */
+  object sql {
+    /** Haversine distance in degrees from (lonA, latA) to (lonB, latB),
+      * each a SQL expression. One text for every oracle distance: a
+      * transposed term in a hand-inlined copy would give an oracle that
+      * only fails at a boundary row. */
+    def distDeg(lonA: String, latA: String,
+                lonB: String, latB: String): String =
+      "degrees(2 * asin(sqrt(" +
+        s"sin(radians(($latB) - ($latA)) / 2) * " +
+        s"sin(radians(($latB) - ($latA)) / 2)" +
+        s" + cos(radians($latA)) * cos(radians($latB))" +
+        s" * sin(radians(($lonB) - ($lonA)) / 2)" +
+        s" * sin(radians(($lonB) - ($lonA)) / 2))))"
   }
 
   /** Finest level whose 3×3 neighborhood is closure-complete for
@@ -162,66 +190,77 @@ object CrossMatch {
 
     val aSel = a.select(col(aId).as("a_id") +: col(aLon).as("a_lon") +:
       col(aLat).as("a_lat") +: carryA.map(col): _*)
-    def bSel(df: DataFrame, extra: String*): DataFrame =
+    def bSel(df: DataFrame, extra: Column*): DataFrame =
       df.select((col(bId).as("b_id") +: col(bLon).as("b_lon") +:
-        col(bLat).as("b_lat") +: carryB.map(col)) ++ extra.map(col): _*)
-    // B's cell-channel rows (with `cell`) and its primary rows
-    val (level, bCells, bPrim) = probe match {
+        col(bLat).as("b_lat") +: carryB.map(col)) ++ extra: _*)
+    def plan(df: DataFrame): LogicalPlan = GraftShims.analyzed(df)
+    def attr(p: LogicalPlan, name: String): Attribute =
+      p.output.find(_.name == name).get
+    // B's cell-channel rows (B's primary columns plus `CellB`), the
+    // cell attribute, and B's primary rows
+    val (level, bCells, cellB, bPrim) = probe match {
       case Blocking(b) =>
         // strip-pruned explode: a B row only visits neighbor cells
         // whose boundary is within radiusDeg (exact lower-bound tests
         // — see SkyPix.neighborCellsWithin), so the explode factor is
         // 1 + strip fraction, not a flat 9×
         val level = levelFor(radiusDeg, capLat)
-        val bs = bSel(b)
-        (level, bs.filter(abs(col("b_lat")) <= capLat)
-          .withColumn("cell", explode(SkyPix.neighborCellsWithin(
-            col("b_lon"), col("b_lat"), level, radiusDeg))), bs)
+        val bs = plan(bSel(b))
+        val (cells, cellB) = explodeCells(bs, attr(bs, "b_lon"),
+          attr(bs, "b_lat"), level, radiusDeg, capLat)
+        (level, cells, cellB, bs)
       case Margined(bM, level) =>
         require(level <= levelFor(radiusDeg, capLat),
           s"margin cache written at level $level is too fine for radius " +
             s"$radiusDeg below lat $capLat (max " +
             s"${levelFor(radiusDeg, capLat)})")
-        (level, bSel(bM, "cell").filter(abs(col("b_lat")) <= capLat),
-          bSel(bM.filter(!col("is_margin"))))
+        val bs = bSel(bM, col("cell").as(CellB), col("is_margin"))
+        val cells = plan(bs.filter(abs(col("b_lat")) <= capLat)
+          .drop("is_margin"))
+        (level, cells, attr(cells, CellB),
+          plan(bs.filter(!col("is_margin")).drop(CellB, "is_margin")))
     }
+    val bLatPrim = attr(bPrim, "b_lat")
+    val spark = a.sparkSession
     val coords = if (keepCoords) Seq("a_lon", "a_lat", "b_lon", "b_lat")
     else Nil
     val refined = refine(radiusDeg, coords ++ carryA ++ carryB) _
-    val cellOf = SkyPix.cell(col("a_lon"), col("a_lat"), level)
-    def channels(aPart: DataFrame): DataFrame =
-      aPart.filter(abs(col("a_lat")) <= capLat)
-        .withColumn("cell", cellOf)
-        .join(bCells, "cell").drop("cell")
-        .unionByName(capChannel(aPart, bPrim, radiusDeg, capLat))
-        .transform(refined)
+    def channelsOf(aPart: DataFrame): DataFrame = {
+      val ap = plan(aPart)
+      GraftShims.ofRows(spark, channels(ap, attr(ap, "a_lon"),
+        attr(ap, "a_lat"), level, bCells, cellB, bPrim, bLatPrim,
+        radiusDeg, capLat)).transform(refined)
+    }
 
-    lazy val aCelled = aSel.withColumn("cell", cellOf)
+    lazy val aCelled = aSel.withColumn("cell",
+      SkyPix.cell(col("a_lon"), col("a_lat"), level))
     val hot = hotThreshold.toSeq.flatMap { ht =>
       aCelled.filter(abs(col("a_lat")) <= capLat)
         .groupBy("cell").count().filter(col("count") > ht)
         .select("cell").collect().map(_.getLong(0)).toSeq
     }
-    if (hot.isEmpty) channels(aSel)
+    if (hot.isEmpty) channelsOf(aSel)
     else {
       val isHot = col("cell").isin(hot: _*) && abs(col("a_lat")) <= capLat
       val aHot = aCelled.filter(isHot)
         .withColumn("_salt", pmod(xxhash64(col("a_id")), lit(salts.toLong)))
       // the probe slice is the hot cells' replicas; counted first so
       // the replicated set never outgrows the broadcast cap
-      val bProbeBase = bCells.filter(col("cell").isin(hot: _*))
+      val bProbeBase = GraftShims.ofRows(spark, bCells)
+        .withColumnRenamed(CellB, "cell").filter(col("cell").isin(hot: _*))
       val probeRows = bProbeBase.count()
       val bProbe = bProbeBase
         .withColumn("_salt", explode(sequence(lit(0L), lit(salts - 1L))))
       val probeSide =
         if (probeRows * salts <= maxBroadcastRows) broadcast(bProbe)
         else bProbe.hint("shuffle_hash")
+      val aHotPrim = plan(aHot.drop("cell", "_salt"))
       val hotPairs = aHot.join(probeSide, Seq("cell", "_salt"))
         .drop("cell", "_salt")
-        .unionByName(capChannel(aHot.drop("cell", "_salt"), bPrim,
-          radiusDeg, capLat))
+        .unionByName(GraftShims.ofRows(spark, capChannel(aHotPrim,
+          attr(aHotPrim, "a_lat"), bPrim, bLatPrim, radiusDeg, capLat)))
         .transform(refined)
-      channels(aCelled.filter(!isHot).drop("cell")).unionByName(hotPairs)
+      channelsOf(aCelled.filter(!isHot).drop("cell")).unionByName(hotPairs)
     }
   }
 
@@ -268,21 +307,78 @@ object CrossMatch {
       .select("a_id", "b_id", "dist_deg", "match_rank")
   }
 
+  // ---- The channel builder ----------------------------------------
+  //
+  // Logical plans built from plans and expressions only, so the same
+  // tree serves [[pairs]] (analyzed as a DataFrame) and
+  // [[graft.plans.AutoSpatialJoin]] (injected inside the optimizer).
+
+  /** Generated cell-key names of the cell channel: A's home cell and
+    * B's probe cell. AutoSpatialJoin's idempotence guard recognizes
+    * the channel by them. */
+  private[graft] val CellA = "_graft_ca"
+  private[graft] val CellB = "_graft_cb"
+
+  /** B's query-time probe rows: each B row at or below `capLat`,
+    * exploded to its strip-pruned neighbor cells within `radiusDeg` at
+    * `level` ([[NeighborCells]]). Returns the plan, whose output is
+    * `b.output` plus the cell attribute `CellB`, and that attribute. */
+  private[graft] def explodeCells(b: LogicalPlan, bLon: Expression,
+                                  bLat: Expression, level: Int,
+                                  radiusDeg: Double, capLat: Double)
+      : (LogicalPlan, Attribute) = {
+    val explode = Explode(NeighborCells(bLon, bLat, level, radiusDeg))
+    val elem = explode.elementSchema.fields.head
+    val cellB = AttributeReference(CellB, elem.dataType, elem.nullable)()
+    (Generate(explode, unrequiredChildIndex = Nil, outer = false,
+      qualifier = None, generatorOutput = Seq(cellB),
+      child = Filter(LessThanOrEqual(Abs(bLat), Literal(capLat)), b)),
+      cellB)
+  }
+
+  /** The candidate relation of the two channels, output
+    * `a.output ++ bPrim.output`:
+    *   - cell channel: A rows at or below `capLat`, keyed by their home
+    *     cell at `level` (`CellA`), equi-joined on `cellB` to `bCells`
+    *     — B's rows at or below the cap, carrying `bPrim`'s attributes
+    *     plus `cellB` (exploded by [[explodeCells]], or stored
+    *     replicas);
+    *   - polar-cap channel ([[capChannel]]) over B's primary rows.
+    * `aLon`/`aLat` are over `a`, `bLat` over `bPrim`. */
+  private[graft] def channels(a: LogicalPlan, aLon: Expression,
+                              aLat: Expression, level: Int,
+                              bCells: LogicalPlan, cellB: Attribute,
+                              bPrim: LogicalPlan, bLat: Expression,
+                              radiusDeg: Double,
+                              capLat: Double): LogicalPlan = {
+    val cellA = Alias(SkyPix.cellExpr(aLon, aLat, level), CellA)()
+    val aKeyed = Project(a.output :+ cellA,
+      Filter(LessThanOrEqual(Abs(aLat), Literal(capLat)), a))
+    val cellJoin = Join(aKeyed, bCells, Inner,
+      Some(EqualTo(cellA.toAttribute, cellB)), JoinHint.NONE)
+    Union(Seq(Project(a.output ++ bPrim.output, cellJoin),
+      capChannel(a, aLat, bPrim, bLat, radiusDeg, capLat)))
+  }
+
   /** Polar-cap channel: pairs with at least one side ABOVE the cap,
-    * matched via broadcast. The strict >capLat requirement makes the
-    * two channels disjoint (the cell channel requires both sides ≤
-    * capLat), so no dedup pass is needed — a dropDuplicates over the
-    * candidate set was the dominant shuffle at the multi-million-row
-    * scale. */
-  private def capChannel(aSel: DataFrame, bSel: DataFrame,
-                         radiusDeg: Double, capLat: Double): DataFrame = {
-    val capEdge = capLat - radiusDeg
-    val aCap = aSel.filter(abs(col("a_lat")) > capEdge)
-    val bCap = bSel.filter(abs(col("b_lat")) > capEdge)
-    aCap.crossJoin(broadcast(bCap))
-      .filter(abs(col("a_lat")) > capLat || abs(col("b_lat")) > capLat)
-      // only pair within the same hemisphere's cap neighborhood
-      .filter(signum(col("a_lat")) === signum(col("b_lat")))
+    * output `a.output ++ bPrim.output`. The strict >capLat requirement
+    * makes the two channels disjoint (the cell channel requires both
+    * sides ≤ capLat), so no dedup pass is needed — a dropDuplicates
+    * over the candidate set was the dominant shuffle at the
+    * multi-million-row scale. B's cap slice is broadcast through the
+    * join's own hint, so the plan means the same before the optimizer
+    * and inside it. */
+  private[graft] def capChannel(a: LogicalPlan, aLat: Expression,
+                                bPrim: LogicalPlan, bLat: Expression,
+                                radiusDeg: Double,
+                                capLat: Double): LogicalPlan = {
+    val (cap, capEdge) = (Literal(capLat), Literal(capLat - radiusDeg))
+    Join(Filter(GreaterThan(Abs(aLat), capEdge), a),
+      Filter(GreaterThan(Abs(bLat), capEdge), bPrim), Inner,
+      Some(And(Or(GreaterThan(Abs(aLat), cap), GreaterThan(Abs(bLat), cap)),
+        // only pair within the same hemisphere's cap neighborhood
+        EqualTo(Signum(aLat), Signum(bLat)))),
+      JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
   }
 
   /** Exact-distance refinement over a candidate relation. */

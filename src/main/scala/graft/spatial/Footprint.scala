@@ -26,8 +26,7 @@ object Footprint {
   def rect(lonCol: Column, latCol: Column, lonMin: Double, lonMax: Double,
            latMin: Double, latMax: Double): Column = {
     val lon = pmod(lonCol, lit(360.0))
-    val lo = ((lonMin % 360) + 360) % 360
-    val hi = ((lonMax % 360) + 360) % 360
+    val (lo, hi) = (SkyPix.lonNorm(lonMin), SkyPix.lonNorm(lonMax))
     val lonPred =
       if (lonMax - lonMin >= 360.0) lit(true) // full ring
       else if (lo <= hi) lon >= lo && lon <= hi
@@ -46,34 +45,10 @@ object Footprint {
     val n = 1L << level
     val latLo = lat0 - radiusDeg
     val latHi = lat0 + radiusDeg
-    val southPole = latLo <= -90 + 1e-12
-    val northPole = latHi >= 90 - 1e-12
-    def iyOf(lat: Double): Long = {
-      val fy = (math.sin(math.toRadians(math.max(-90, math.min(90, lat)))) + 1) / 2
-      math.min((fy * n).toLong, n - 1).max(0)
-    }
-    val iyLo = if (southPole) 0L else iyOf(latLo)
-    val iyHi = if (northPole) n - 1 else iyOf(latHi)
-    val cells = Seq.newBuilder[Long]
-    for (iy <- iyLo to iyHi) {
-      // widen the lon half-width by the worst (smallest) cos(lat) of
-      // the row; a row touching a pole needs every lon column
-      val rowLatMax = math.max(math.abs(latOfRowEdge(iy, n)),
-        math.abs(latOfRowEdge(iy + 1, n)))
-      val cosMin = math.cos(math.toRadians(math.min(89.999, rowLatMax)))
-      val halfWidthCells =
-        if (rowLatMax >= 89.9) n.toDouble
-        else radiusDeg / (360.0 / n) / cosMin + 1
-      val ix0 = math.floor((((lon0 % 360) + 360) % 360) / 360.0 * n).toLong
-      val w = math.min(n.toDouble, 2 * halfWidthCells + 1).toLong
-      if (w >= n) {
-        for (ix <- 0L until n) cells += pack(ix, iy, level)
-      } else {
-        for (d <- -halfWidthCells.toLong to halfWidthCells.toLong)
-          cells += pack(((ix0 + d) % n + n) % n, iy, level)
-      }
-    }
-    cells.result().distinct
+    val iyLo = if (latLo <= -90 + 1e-12) 0L else rowOf(latLo, level)
+    val iyHi = if (latHi >= 90 - 1e-12) n - 1 else rowOf(latHi, level)
+    rowCover(iyLo, iyHi, lon0, level)(cosMin =>
+      radiusDeg / (360.0 / n) / cosMin + 1)
   }
 
   /** Cells at `level` intersecting a lon/lat rectangle (wraparound-
@@ -84,14 +59,9 @@ object Footprint {
                 latMax: Double, level: Int): Seq[Long] = {
     require(latMin <= latMax, "latMin > latMax")
     val n = 1L << level
-    def iyOf(lat: Double): Long = {
-      val fy = (math.sin(math.toRadians(math.max(-90.0, math.min(90.0, lat)))) + 1) / 2
-      math.min((fy * n).toLong, n - 1).max(0)
-    }
-    val lo = ((lonMin % 360) + 360) % 360
-    val hi = ((lonMax % 360) + 360) % 360
-    val ixLo = math.min(math.floor(lo / 360.0 * n).toLong, n - 1)
-    val ixHi = math.min(math.floor(hi / 360.0 * n).toLong, n - 1)
+    val (lo, hi) = (SkyPix.lonNorm(lonMin), SkyPix.lonNorm(lonMax))
+    val ixLo = SkyPix.colOf(lonMin, level)
+    val ixHi = SkyPix.colOf(lonMax, level)
     val ixs: Seq[Long] =
       (if (lonMax - lonMin >= 360.0) 0L until n // full ring: every column
       else if (lo <= hi) ixLo to ixHi
@@ -99,7 +69,7 @@ object Footprint {
       // endpoints land in the same/adjacent columns (a nearly-full
       // wrap), so dedup like the other enumerators (review r20)
       else ((ixLo until n) ++ (0L to ixHi)).distinct)
-    for (iy <- iyOf(latMin) to iyOf(latMax); ix <- ixs)
+    for (iy <- rowOf(latMin, level) to rowOf(latMax, level); ix <- ixs)
       yield pack(ix, iy, level)
   }
 
@@ -119,8 +89,7 @@ object Footprint {
   /** Exact lon/lat-rectangle area in deg² (wraparound-aware). */
   def rectAreaDeg2(lonMin: Double, lonMax: Double, latMin: Double,
                    latMax: Double): Double = {
-    val lo = ((lonMin % 360) + 360) % 360
-    val hi = ((lonMax % 360) + 360) % 360
+    val (lo, hi) = (SkyPix.lonNorm(lonMin), SkyPix.lonNorm(lonMax))
     val dLon =
       if (lonMax - lonMin >= 360.0) 360.0 // full ring, not an empty span
       else if (lo <= hi) hi - lo
@@ -286,76 +255,48 @@ object Footprint {
     val latHi = if (northIn) 90.0 else pts.map(_._2).max + pad
     // lon extent as offsets from the centroid meridian, wrap-safe
     def off(lon: Double): Double = {
-      val d = (lon - f.lonCDeg) % 360
-      if (d > 180) d - 360 else if (d <= -180) d + 360 else d
+      val d = math.IEEEremainder(lon - f.lonCDeg, 360.0) // exact, in [-180, 180]
+      if (d <= -180) d + 360 else d
     }
     val offs = pts.map(p => off(p._1))
     val (offLo, offHi) = (offs.min, offs.max)
     val allLons = northIn || southIn || (offHi - offLo) >= 360 - 1e-9
     val n = 1L << level
-    def iyOf(lat: Double): Long = {
-      val fy = (math.sin(math.toRadians(math.max(-90, math.min(90, lat)))) + 1) / 2
-      math.min((fy * n).toLong, n - 1).max(0)
-    }
+    rowCover(rowOf(latLo, level), rowOf(latHi, level),
+      f.lonCDeg + (offLo + offHi) / 2, level)(cosMin =>
+      if (allLons) n.toDouble
+      else ((offHi - offLo) / 2 + pad / cosMin) / (360.0 / n) + 1)
+  }
+
+  /** Grid row of a latitude, clamped to [-90, 90] first: a cover's
+    * lat ± pad can pass a pole, while [[SkyPix.rowOf]] (like the cell
+    * id) takes sin of the raw latitude. */
+  private def rowOf(lat: Double, level: Int): Long =
+    SkyPix.rowOf(math.max(-90, math.min(90, lat)), level)
+
+  /** The row walk of the cone and polygon covers: every column of
+    * rows `iyLo..iyHi` within `halfWidthCells(cosMin)` columns of
+    * `lon0`'s, where `cosMin` is the row's worst (smallest) cos(lat). A
+    * row touching a pole, or one whose span reaches around, needs
+    * every column. */
+  private def rowCover(iyLo: Long, iyHi: Long, lon0: Double, level: Int)(
+      halfWidthCells: Double => Double): Seq[Long] = {
+    val n = 1L << level
+    val ix0 = SkyPix.colOf(lon0, level)
     val cells = Seq.newBuilder[Long]
-    for (iy <- iyOf(latLo) to iyOf(latHi)) {
+    for (iy <- iyLo to iyHi) {
       val rowLatMax = math.max(math.abs(latOfRowEdge(iy, n)),
         math.abs(latOfRowEdge(iy + 1, n)))
       val cosMin = math.cos(math.toRadians(math.min(89.999, rowLatMax)))
-      val centerLon = f.lonCDeg + (offLo + offHi) / 2
-      val halfSpanDeg = (offHi - offLo) / 2 + pad / cosMin
-      val halfWidthCells = halfSpanDeg / (360.0 / n) + 1
-      if (allLons || rowLatMax >= 89.9 || 2 * halfWidthCells + 1 >= n) {
+      val hw = halfWidthCells(cosMin)
+      if (rowLatMax >= 89.9 || 2 * hw + 1 >= n) {
         for (ix <- 0L until n) cells += pack(ix, iy, level)
       } else {
-        val ix0 = math.floor((((centerLon % 360) + 360) % 360) / 360.0 * n).toLong
-        for (d <- -halfWidthCells.toLong to halfWidthCells.toLong)
+        for (d <- -hw.toLong to hw.toLong)
           cells += pack(((ix0 + d) % n + n) % n, iy, level)
       }
     }
     cells.result().distinct
-  }
-
-  /** Distributed twin of [[coneCells]]: the same conservative cell
-    * superset as a DataFrame (`cell` BIGINT), generated on executors —
-    * one row per quadtree row, lon span exploded per row. Use when the
-    * enumeration is too large for a driver IN-list (deep levels ×
-    * wide cones): `table.join(coneCellsDf(...), Seq("cell"),
-    * "left_semi")` prunes a cell-partitioned layout via dynamic
-    * partition pruning instead of a literal filter. Driver-side work
-    * is O(1) (two row indices); everything else is Column arithmetic
-    * mirroring [[coneCells]] exactly. */
-  def coneCellsDf(spark: org.apache.spark.sql.SparkSession,
-                  lon0: Double, lat0: Double, radiusDeg: Double,
-                  level: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val n = 1L << level
-    val latLo = lat0 - radiusDeg
-    val latHi = lat0 + radiusDeg
-    def iyOf(lat: Double): Long = {
-      val fy = (math.sin(math.toRadians(math.max(-90, math.min(90, lat)))) + 1) / 2
-      math.min((fy * n).toLong, n - 1).max(0)
-    }
-    val iyLo = if (latLo <= -90 + 1e-12) 0L else iyOf(latLo)
-    val iyHi = if (latHi >= 90 - 1e-12) n - 1 else iyOf(latHi)
-    val ix0 = math.floor((((lon0 % 360) + 360) % 360) / 360.0 * n).toLong
-    def latEdge(iy: Column): Column =
-      degrees(asin(greatest(lit(-1.0), least(lit(1.0),
-        iy.cast("double") * 2.0 / n - 1.0))))
-    val iy = col("id")
-    val rowLatMax = greatest(abs(latEdge(iy)), abs(latEdge(iy + 1)))
-    val cosMin = cos(radians(least(lit(89.999), rowLatMax)))
-    val halfW = when(rowLatMax >= 89.9, lit(n.toDouble))
-      .otherwise(lit(radiusDeg / (360.0 / n)) / cosMin + 1)
-    val w = least(lit(n.toDouble), halfW * 2 + 1)
-    val ixs = when(w >= n.toDouble, sequence(lit(0L), lit(n - 1)))
-      .otherwise(transform(
-        sequence(-halfW.cast(LongType), halfW.cast(LongType)),
-        d => pmod(d + ix0, lit(n))))
-    spark.range(iyLo, iyHi + 1)
-      .select(iy.as("iy"), explode(ixs).as("ix"))
-      .select(SkyPix.mortonCell(col("ix"), col("iy"), level).as("cell"))
-      .distinct()
   }
 
   private def latOfRowEdge(iy: Long, n: Long): Double = {

@@ -24,10 +24,11 @@ import org.apache.spark.sql.types.LongType
   * The grid is written down once per form. The cell id is one raw
   * Catalyst builder ([[cellExpr]]): plain, non-nullable arithmetic
   * inside whole-stage codegen, shared by [[cell]], [[mortonCell]], the
-  * SQL function `sky_cell` and [[graft.plans.AutoSpatialJoin]]. The
+  * SQL function `sky_cell` and [[CrossMatch]]'s channel builder. The
   * neighbor-cell array is one codegen'd expression ([[NeighborCells]])
   * over one JVM kernel that mirrors the Catalyst grid op for op;
-  * [[cellId]] and [[mortonCellValue]] are that kernel's grid.
+  * [[cellId]] and [[mortonCellValue]] are that kernel's grid, and
+  * [[Footprint]]'s cell covers index rows and columns through it.
   *
   * Cell id layout: (level << 58) | morton(ix, iy), supporting levels
   * 0..28. At level k there are 4^k cells (level 6 ≈ 4096 cells ≈ 10
@@ -44,9 +45,9 @@ object SkyPix {
   //
   // The cell id is built as raw Catalyst expressions, not through the
   // `functions._` Column API: the same tree then serves Column callers
-  // ([[cell]], [[mortonCell]]), the SQL function `sky_cell` and the
-  // optimizer rule [[graft.plans.AutoSpatialJoin]], whose injected
-  // expressions never pass through the analyzer. After analysis the
+  // ([[cell]], [[mortonCell]]), the SQL function `sky_cell` and
+  // [[CrossMatch]]'s channel builder, whose plan the optimizer rule
+  // [[graft.plans.AutoSpatialJoin]] injects without the analyzer. After analysis the
   // tree is plain, non-nullable arithmetic, which keeps `cell` on
   // codegen's primitive fast paths in hot joins and aggregations.
   //
@@ -140,11 +141,18 @@ object SkyPix {
     math.max(math.min(math.floor(f * n.toDouble).toLong, n - 1L), 0L)
   }
 
+  /** Grid column of a longitude at `level`, identical to [[cellExpr]]'s. */
+  private[spatial] def colOf(lon: Double, level: Int): Long =
+    gridIndex(lonNorm(lon) / 360.0, level)
+
+  /** Grid row of a latitude at `level`, identical to [[cellExpr]]'s. */
+  private[spatial] def rowOf(lat: Double, level: Int): Long =
+    gridIndex((math.sin(math.toRadians(lat)) + 1.0) / 2.0, level)
+
   /** (ix, iy) of a point at `level`, identical to [[cellExpr]]'s. */
   private[spatial] def gridOf(lon: Double, lat: Double,
                               level: Int): (Long, Long) =
-    (gridIndex(lonNorm(lon) / 360.0, level),
-      gridIndex((math.sin(math.toRadians(lat)) + 1.0) / 2.0, level))
+    (colOf(lon, level), rowOf(lat, level))
 
   /** Packed cell id of a point, equal to [[cell]]'s, for tests and
     * driver-side checks. */

@@ -1,13 +1,15 @@
 package graft.tools
 
 import graft.{Bench, GraftSession, QuerySpec, Registry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.util.control.NonFatal
 
 /** Dev tool: profile declared queries under Bench's conditions — the
@@ -21,7 +23,8 @@ import scala.util.control.NonFatal
   * duration breakdown and state-store metrics. After the last rep it
   * prints the executed plan, or with `--plans` writes
   * `explain("formatted")` to `<outDir>/<query>_<tag>.txt` (the
-  * `plans/rNN` artifacts).
+  * `plans/rNN` artifacts). For a streaming replay that plan is the
+  * last micro-batch's, not the scan of the collected result.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dataDir> Profile [--plans <outDir> <tag>] <query...>
   *
@@ -33,14 +36,19 @@ object Profile {
                          gcMs: Long, tasks: Int, recIn: Long, recOut: Long,
                          name: String)
   final case class Rep(label: String, seconds: Double, stages: Seq[Stage],
-                       batches: Seq[String])
+                       batches: Seq[String], batchPlan: Option[String])
 
-  /** The stages and streaming micro-batches a session completes: one
-    * SparkListener and one StreamingQueryListener, registered on
-    * construction. */
+  /** The stages and streaming micro-batches a session completes, and
+    * the formatted plan Spark posts with each micro-batch's SQL
+    * execution: one SparkListener and one StreamingQueryListener,
+    * registered on construction. */
   final class Recorder(spark: SparkSession) {
     private val stages = new ConcurrentLinkedQueue[Stage]()
     private val batches = new ConcurrentLinkedQueue[String]()
+    private val batchPlans = new ConcurrentLinkedQueue[String]()
+    // run ids of the streaming queries started; a micro-batch runs in
+    // the job group named by its query's run id
+    private val runIds = ConcurrentHashMap.newKeySet[String]()
     private val stageListener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
@@ -54,10 +62,18 @@ object Profile {
           m.shuffleReadMetrics.recordsRead,
           m.shuffleWriteMetrics.recordsWritten, ops.take(200)))
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.jobGroupId.exists(runIds.contains) =>
+          batchPlans.add(x.physicalPlanDescription)
+        case _ =>
+      }
     }
     private val streamListener = new StreamingQueryListener {
+      // delivered on the stream's own thread before its first batch
       override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          e: StreamingQueryListener.QueryStartedEvent): Unit =
+        runIds.add(e.runId.toString)
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
@@ -74,12 +90,13 @@ object Profile {
     spark.sparkContext.addSparkListener(stageListener)
     spark.streams.addListener(streamListener)
 
-    /** Everything completed since the previous call. */
-    def take(): (Seq[Stage], Seq[String]) = {
+    /** Everything completed since the previous call, with the last
+      * micro-batch's plan. */
+    def take(): (Seq[Stage], Seq[String], Option[String]) = {
       GraftShims.waitForListeners(spark)
       def drain[T](q: ConcurrentLinkedQueue[T]): Seq[T] =
         Iterator.continually(q.poll()).takeWhile(_ != null).toList
-      (drain(stages), drain(batches))
+      (drain(stages), drain(batches), drain(batchPlans).lastOption)
     }
 
     def close(): Unit = {
@@ -111,8 +128,8 @@ object Profile {
     rec.take() // drop whatever ran before this query
     val runs = Seq("cold", "warm", "warm").map { label =>
       val (seconds, df) = Bench.runOnce(spark, dir, q.fn)
-      val (stages, batches) = rec.take()
-      val rep = Rep(label, seconds, stages, batches)
+      val (stages, batches, batchPlan) = rec.take()
+      val rep = Rep(label, seconds, stages, batches, batchPlan)
       println(f"${q.name} $label: $seconds%.2f s")
       println("-- stages (wall | task | cpu | gc | tasks | recIn | recOut | name)")
       stages.sortBy(-_.wallMs).take(8).foreach { s =>
@@ -126,17 +143,20 @@ object Profile {
       (rep, df)
     }
     // the drained DataFrame's plan: AQE has finalized it, so it shows
-    // the executed join strategies and AQEShuffleReads
-    val df = runs.last._2
+    // the executed join strategies and AQEShuffleReads. A streaming
+    // replay drains a scan of its collected rows; its operators ran in
+    // the micro-batches, so the last batch's plan stands for it.
+    val (lastRep, df) = runs.last
     plans match {
       case Some((outDir, tag)) =>
         Files.createDirectories(outDir)
         val file = outDir.resolve(s"${q.name}_$tag.txt")
-        Files.writeString(file, df.queryExecution.explainString(
-          ExplainMode.fromString("formatted")))
+        Files.writeString(file, lastRep.batchPlan.getOrElse(
+          df.queryExecution.explainString(ExplainMode.fromString("formatted"))))
         println(s"wrote $file")
       case None =>
-        println(df.queryExecution.executedPlan.toString.take(6000))
+        println(lastRep.batchPlan.getOrElse(
+          df.queryExecution.executedPlan.toString).take(6000))
     }
     runs.map(_._1)
   }

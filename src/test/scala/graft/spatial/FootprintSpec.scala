@@ -32,6 +32,20 @@ class FootprintSpec extends SpecBase {
     assert(wrapped.filter(col("lon") > 10 && col("lon") < 350).count() == 0)
   }
 
+  test("rect keeps rows sitting exactly on an in-range lon bound") {
+    // normalising a bound by adding 360 rounds away its low bits (0.1
+    // became 0.10000000000002274), which dropped the row at lon = 0.1
+    val rows = Seq((1L, 0.1, 0.0), (2L, 5.0, 0.5), (3L, 10.1, -0.5))
+    val kept = rows.toDF("id", "lon", "lat")
+      .filter(Footprint.rect(col("lon"), col("lat"), 0.1, 10.1, -1, 1))
+      .select("id").as[Long].collect().toSet
+    assert(kept == Set(1L, 2L, 3L))
+    for (level <- 0 to 12; (_, lon, lat) <- rows)
+      assert(Footprint.rectCells(0.1, 10.1, -1, 1, level)
+        .contains(SkyPix.cellId(lon, lat, level)),
+        s"level $level: cell of ($lon, $lat) missing")
+  }
+
   test("rectCells: a nearly-full wrap emits each cell once (a set)") {
     // review r20: lonMin=10.1 > lonMax=9.9 at level 0 emitted column 0
     // twice from the two wrap arms — harmless for isin pruning, wrong
@@ -62,9 +76,14 @@ class FootprintSpec extends SpecBase {
       0, 360, -90, 90)).count() == cat.count())
   }
 
+  // cover centres on the lon wrap edge: -0, the largest double below
+  // 360, and whole turns
+  private val wrapEdges = Seq(-0.0, 359.99999999999994, 360.0, 720.0, -360.0)
+
   test("coneCells is a superset of the cells of matching points") {
     for ((lon0, lat0, r) <- Seq((120.0, 30.0, 5.0), (0.5, -45.0, 2.0),
-      (359.0, 88.0, 3.0), (180.0, -89.5, 1.0))) {
+      (359.0, 88.0, 3.0), (180.0, -89.5, 1.0)) ++
+      wrapEdges.zipWithIndex.map { case (lon, i) => (lon, 20.0 * i - 40, 6.0) }) {
       val level = 5
       val cells = Footprint.coneCells(lon0, lat0, r, level).toSet
       val pointCells = cat
@@ -153,7 +172,9 @@ class FootprintSpec extends SpecBase {
 
   test("polygonCells is a superset of the cells of contained points") {
     for ((verts, level) <- Seq((lShape, 6),
-      (Seq((350.0, -5.0), (15.0, -8.0), (12.0, 10.0), (355.0, 6.0)), 5))) {
+      (Seq((350.0, -5.0), (15.0, -8.0), (12.0, 10.0), (355.0, 6.0)), 5)) ++
+      wrapEdges.map(c => (Seq((c - 5, -5.0), (c + 5, -5.0), (c + 5, 5.0),
+        (c - 5, 5.0)), 5))) {
       val cells = Footprint.polygonCells(verts, level).toSet
       val pointCells = cat
         .filter(Footprint.polygon(col("lon"), col("lat"), verts))
@@ -238,37 +259,5 @@ class FootprintSpec extends SpecBase {
     assert(unstable == 0,
       s"$unstable grid points decide unstably near the boundary, " +
         s"first at $firstBad — vertex tweak or sf bump could flip a row")
-  }
-
-  test("coneCellsDf equals the driver-side enumeration") {
-    // equatorial, mid-latitude, polar-touching, wraparound, all-sky-row
-    val cases = Seq(
-      (10.0, 0.0, 1.5, 6), (200.0, 55.0, 3.0, 5), (0.0, 88.5, 2.0, 6),
-      (359.5, -20.0, 1.0, 7), (180.0, -89.0, 5.0, 4), (45.0, 30.0, 0.3, 9))
-    for ((lo, la, r, lv) <- cases) {
-      val driver = Footprint.coneCells(lo, la, r, lv).toSet
-      val dist = Footprint.coneCellsDf(spark, lo, la, r, lv)
-        .collect().map(_.getLong(0)).toSet
-      assert(dist == driver,
-        s"cone ($lo,$la,r=$r,lv=$lv): distributed=${dist.size} " +
-          s"driver=${driver.size}, diff=${(dist diff driver).take(3)}" +
-          s"/${(driver diff dist).take(3)}")
-    }
-  }
-
-  test("coneCellsDf semi-join prunes like the IN-list filter") {
-    import org.apache.spark.sql.functions._
-    val pts = spark.range(20000).select(
-      (col("id") % 3600).cast("double")./(10.0).as("lon"),
-      // coprime multiplier decorrelates lat from lon (1200 | 3600)
-      ((col("id") * 7 % 1200).cast("double") / 10.0 - 60.0).as("lat"))
-      .withColumn("cell", SkyPix.cell(col("lon"), col("lat"), 5))
-    val viaIn = pts.filter(
-      col("cell").isin(Footprint.coneCells(100.0, 10.0, 4.0, 5): _*))
-      .count()
-    val viaJoin = pts.join(
-      Footprint.coneCellsDf(spark, 100.0, 10.0, 4.0, 5),
-      Seq("cell"), "left_semi").count()
-    assert(viaIn == viaJoin && viaIn > 0)
   }
 }

@@ -41,6 +41,24 @@ class ProfileSpec extends SpecBase {
     Files.delete(out)
   }
 
+  test("--plans writes a streaming replay's micro-batch plan") {
+    // q_stream_xmatch drains a scan of its collected rows; the plan
+    // that matters is the cross-match each micro-batch ran
+    val out = Files.createTempDirectory("profile-plans")
+    val q = Registry.specs.find(_.name == "q_stream_xmatch").get
+    val rec = new Profile.Recorder(spark)
+    val reps =
+      try Profile.profile(spark, sfDir, q, rec, Some((out, "t")))
+      finally rec.close()
+    assert(reps.forall(_.batches.nonEmpty))
+    val file = out.resolve("q_stream_xmatch_t.txt")
+    val plan = Files.readString(file)
+    assert(plan.contains("MicroBatchWrite") && plan.contains("Join") &&
+      plan.contains(graft.spatial.CrossMatch.CellB), plan.take(3000))
+    Files.delete(file)
+    Files.delete(out)
+  }
+
   test("a failing query is returned by name") {
     val boom = QuerySpec.smoke("q_boom")((_, _) => sys.error("boom"))
     assert(Profile.profileAll(spark, sfDir, Seq(boom), None) == Seq("q_boom"))
