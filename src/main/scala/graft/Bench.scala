@@ -52,7 +52,7 @@ object Bench {
     * (sorted-name) order of `results`. A name→seconds map of every
     * query is ~5 KB and did not fit the ~2 KB stdout tail the driver
     * keeps (PERF_r22.per_query came back empty); the full map is in
-    * bench_queries.json. */
+    * bench_queries_c<cpus>.json. */
   def perQueryBestLine(results: Seq[(String, Double, Double)]): String = {
     val arr = results.map { case (_, _, b) => f"$b%.2f" }
       .mkString("[", ",", "]")
@@ -177,7 +177,9 @@ object Bench {
     //           headline so the retained stdout tail keeps it;
     //   line 5  the short always-parseable headline, LAST.
     // The full-precision name:value map + errors also lands in
-    // bench_queries.json on disk (repo artifact).
+    // bench_queries_c<cpus>.json on disk, one file per core count.
+    val artifact =
+      s"bench_queries_c${spark.sparkContext.defaultParallelism}.json"
     try {
       val errs = errors.sorted.map(e => s""""$e"""").mkString("[", ",", "]")
       val qs = results.map { case (k, c, b) =>
@@ -186,12 +188,10 @@ object Bench {
       val rq = rechecked.map { case (k, (orig, healed)) =>
         f""""$k":{"orig":$orig%.3f,"best":$healed%.3f}"""
       }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench_queries.json"),
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact),
         s"""{"sf":"$sfDir","cold_total":${results.map(_._2).sum},"best_total":${results.map(_._3).sum},"queries":$qs,"rechecked":$rq,"errors":$errs}""")
     } catch { case NonFatal(e) => // read-only cwd: stdout still has it
-      System.err.println(
-        s"[bench] bench_queries.json not written: ${e.getMessage}")
+      System.err.println(s"[bench] $artifact not written: ${e.getMessage}")
     }
     val arrCold = results.map { case (_, c, _) => f"$c%.3f" }
       .mkString("[", ",", "]")

@@ -46,28 +46,17 @@ final case class LsdDb(spark: SparkSession, root: String) {
   /** Columns with zone-map stats recorded in the table's commit log
     * (empty for non-snapshot tables) — what [[table]]'s `prune`
     * argument can act on. */
-  def statsCols(name: String): Set[String] = {
-    val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS")))
-      Set.empty
-    else Snapshots.entries(spark, path).flatMap(_.stats.keys).toSet
-  }
+  def statsCols(name: String): Set[String] =
+    Snapshots.entries(spark, s"$root/$name.parquet")
+      .flatMap(_.stats.keys).toSet
 
   /** Columns with ANY pruning metadata in the commit log — zone-map
     * stats OR Bloom filters. A range on a bloom-only column prunes
     * nothing (conservative), but an EQUALITY on it prunes through
     * [[Snapshots.readPrunedEq]]'s membership channel. */
-  def prunableCols(name: String): Set[String] = {
-    val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS")))
-      Set.empty
-    else Snapshots.entries(spark, path)
+  def prunableCols(name: String): Set[String] =
+    Snapshots.entries(spark, s"$root/$name.parquet")
       .flatMap(e => e.stats.keys ++ e.blooms.keys).toSet
-  }
 
   /** [[table]] with snapshot time travel AND zone-map pruning:
     * `prune = Some((col, lo, hi))` drops snapshot directories whose
@@ -144,10 +133,6 @@ final case class LsdDb(spark: SparkSession, root: String) {
   def marginCacheFor(name: String, asOf: Option[Long] = None)
       : Either[String, MarginCacheRef] = {
     val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val isSnapshot =
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS"))
     def spatialOf(p: String, what: String)
         : Either[String, (String, String)] =
       graft.sources.SpatialWriter.spatialMeta(spark, p) match {
@@ -155,7 +140,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
         case None => Left(s"$what lacks the _SPATIAL sidecar — " +
           "rebuild it with SpatialWriter (which records it)")
       }
-    if (!isSnapshot) {
+    if (!Snapshots.isSnapshot(spark, path)) {
       // a pinned read on a plain table does not exist (the table API
       // refuses it); returning a "usable" cache for it would attribute
       // current rows to a snapshot view (review r20)
@@ -274,11 +259,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
   private def tableResolved(name: String, asOf: Option[Long],
                             snapRead: String => DataFrame): DataFrame = {
     val path = s"$root/$name.parquet"
-    val isSnapshotTable = {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS"))
-    }
+    val isSnapshotTable = Snapshots.isSnapshot(spark, path)
     require(asOf.isEmpty || isSnapshotTable,
       s"table '$name' is not a snapshot table; AS OF / @id requires one")
     val raw =

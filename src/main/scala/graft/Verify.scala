@@ -25,12 +25,14 @@ object Verify {
     }
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // Preflight: fail the WHOLE run loud on testdata schema drift
+    // Preflight, then every write-once layout, so a layout that fails
+    // is named once on stderr rather than inside whichever query
+    // builds it first. A schema drift fails the WHOLE run loud
     // (round-10 postmortem: 7 queries died silently to a regenerated
     // events.ts). No dumps are written, so the driver compare records
     // every query as missing — unambiguous — and errors.json carries
     // the printed diff for triage.
-    try Preflight.check(spark, sfDir)
+    try Bench.prepare(spark, sfDir)
     catch { case e: Preflight.SchemaDriftException =>
       System.err.println(s"[verify] PREFLIGHT FAILED\n${e.getMessage}")
       Files.writeString(Paths.get(s"$outDir/errors.json"),

@@ -1,5 +1,7 @@
 package graft.ql
 
+import graft.sources.MetaFile
+import graft.sources.MetaFile.{jsonLine, num, str}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -17,16 +19,14 @@ import org.apache.spark.sql.SparkSession
   * xmatch with a new radius replaces the relation instead of
   * shadowing it.
   *
-  * Concurrency: the swap is the commit-log idiom (write `.tmp`, then
-  * POSIX/FileContext ATOMIC rename-with-overwrite), so a reader never
+  * Concurrency: saves are [[MetaFile.replace]]s, so a reader never
   * sees a torn file. Declares SERIALIZE through a briefly-held
-  * create-exclusive lock file (`_JOINS.lock`, the [[graft.sources
-  * .Snapshots]] writer-lock primitive) so two concurrent declares of
-  * DIFFERENT relations both land — without the lock the unsynchronized
-  * load-modify-save cycle could drop an unrelated relation entirely,
-  * which is stronger breakage than the documented last-writer-wins on
-  * the SAME key (review r19, ADVICE). Stale locks from a crashed
-  * declarer are broken after [[LockStaleMs]].
+  * [[MetaFile.tryCreate]] lock file (`_JOINS.lock`) so two concurrent
+  * declares of DIFFERENT relations both land — without the lock the
+  * unsynchronized load-modify-save cycle could drop an unrelated
+  * relation entirely, which is stronger breakage than the documented
+  * last-writer-wins on the SAME key (review r19, ADVICE). Stale locks
+  * from a crashed declarer are broken after [[LockStaleMs]].
   */
 object JoinRegistry {
   private val RegistryFile = "_JOINS"
@@ -45,34 +45,17 @@ object JoinRegistry {
     FileSystem.get(new java.net.URI(root),
       spark.sparkContext.hadoopConfiguration)
 
-  private def requireName(s: String): String = {
-    require(s.nonEmpty && !s.exists(c => c == '"' || c == '\\' ||
-      c == '\n' || c == '\r'),
-      s"registry names must be plain identifiers, got '$s'")
-    s
-  }
-
   private def equiLine(j: JoinDef): String =
-    s"""{"kind":"equi","left":"${requireName(j.left)}"""" +
-      s""","leftKey":"${requireName(j.leftKey)}"""" +
-      s""","right":"${requireName(j.right)}"""" +
-      s""","rightKey":"${requireName(j.rightKey)}"}"""
+    jsonLine("kind" -> "equi", "left" -> j.left, "leftKey" -> j.leftKey,
+      "right" -> j.right, "rightKey" -> j.rightKey)
 
   private def spatialLine(j: SpatialJoinDef): String =
-    s"""{"kind":"spatial","left":"${requireName(j.left)}"""" +
-      s""","leftKey":"${requireName(j.leftKey)}"""" +
-      s""","lonL":"${requireName(j.lonL)}","latL":"${requireName(j.latL)}"""" +
-      s""","right":"${requireName(j.right)}"""" +
-      s""","rightKey":"${requireName(j.rightKey)}"""" +
-      s""","lonR":"${requireName(j.lonR)}","latR":"${requireName(j.latR)}"""" +
-      s""","radiusDeg":${j.radiusDeg},"nmax":${j.nmax}""" +
-      j.hotThreshold.map(h => s""","hotThreshold":$h""").getOrElse("") +
-      s""","salts":${j.salts},"snapD6":${j.snapD6}}"""
-
-  private def str(field: String, line: String): Option[String] =
-    (s""""$field":"([^"]+)"""").r.findFirstMatchIn(line).map(_.group(1))
-  private def num(field: String, line: String): Option[String] =
-    (s""""$field":([-0-9.eE]+)""").r.findFirstMatchIn(line).map(_.group(1))
+    jsonLine(Seq("kind" -> "spatial", "left" -> j.left,
+      "leftKey" -> j.leftKey, "lonL" -> j.lonL, "latL" -> j.latL,
+      "right" -> j.right, "rightKey" -> j.rightKey, "lonR" -> j.lonR,
+      "latR" -> j.latR, "radiusDeg" -> j.radiusDeg, "nmax" -> j.nmax) ++
+      j.hotThreshold.map("hotThreshold" -> _) ++
+      Seq("salts" -> j.salts, "snapD6" -> j.snapD6): _*)
 
   private def parse(line: String): Option[Either[JoinDef, SpatialJoinDef]] =
     str("kind", line) match {
@@ -121,79 +104,33 @@ object JoinRegistry {
   /** All declared relations at `root` (empty when no `_JOINS` file). */
   def load(spark: SparkSession,
            root: String): (Seq[JoinDef], Seq[SpatialJoinDef]) = {
-    val f = fs(spark, root)
-    val p = new Path(root, RegistryFile)
-    if (!f.exists(p)) (Nil, Nil)
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val defs = text.linesIterator.filter(_.trim.nonEmpty)
-        .flatMap(parse).toSeq
-      (defs.collect { case Left(j) => j },
-        defs.collect { case Right(j) => j })
-    }
+    val defs = MetaFile.read(spark, root, RegistryFile).toSeq
+      .flatMap(_.linesIterator.filter(_.trim.nonEmpty).flatMap(parse))
+    (defs.collect { case Left(j) => j }, defs.collect { case Right(j) => j })
   }
 
-  /** Replace the full registry (atomic swap — readers never see a
-    * torn file). */
+  /** Replace the full registry. */
   def save(spark: SparkSession, root: String, joins: Seq[JoinDef],
-           spatialJoins: Seq[SpatialJoinDef]): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(root))
-    val tmp = new Path(root, s"$RegistryFile.tmp")
-    val o = f.create(tmp, true)
-    try o.write((joins.map(equiLine) ++ spatialJoins.map(spatialLine))
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally o.close()
-    val dst = new Path(root, RegistryFile)
-    // branch on the RESOLVED filesystem, not the raw URI: a schemeless
-    // root resolves to fs.defaultFS, which on a cluster is NOT the
-    // local filesystem a java.nio move could reach (review r18)
-    if (f.getScheme == "file")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        f.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
+           spatialJoins: Seq[SpatialJoinDef]): Unit =
+    MetaFile.replace(spark, root, RegistryFile,
+      (joins.map(equiLine) ++ spatialJoins.map(spatialLine))
+        .mkString("", "\n", "\n"))
 
-  /** Serialize a load-modify-save cycle: create-exclusive lock file
-    * (atomic on local FS and HDFS; object stores need an external
-    * lock service, same documented limitation as Snapshots), bounded
-    * retry with backoff, stale-lock break after [[LockStaleMs]]. */
+  /** Serialize a load-modify-save cycle: an exclusive lock file,
+    * bounded retry with backoff, stale-lock break after
+    * [[LockStaleMs]]. */
   private[ql] def withDeclareLock[T](spark: SparkSession, root: String,
                                      staleMs: Long = LockStaleMs)
                                     (body: => T): T = {
     val f = fs(spark, root)
     f.mkdirs(new Path(root))
     val lock = new Path(root, LockFile)
-    // scheme branch mirrors save()'s rename: Hadoop's LOCAL filesystem
-    // create(overwrite=false) is exists-check-then-create (NOT atomic
-    // — two same-ms declarers both pass the check; seen in the
-    // concurrency spec), so local goes through java.nio createFile
-    // (O_CREAT|O_EXCL). HDFS create(false) IS atomic at the namenode.
-    def tryAcquire(): Boolean =
-      if (f.getScheme == "file")
-        try {
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(
-            f.makeQualified(lock).toUri.getPath))
-          true
-        } catch { case _: java.io.IOException => false }
-      else
-        try { f.create(lock, false).close(); true }
-        catch { case _: java.io.IOException => false }
     var attempts = 0
     // retry budget exceeds the stale window: a crashed holder's lock
     // ages past LockStaleMs DURING the wait and self-heals, instead of
     // failing spuriously at 5 s against a 30 s threshold (review r19)
     val maxAttempts = (staleMs / 200 + 50).toInt
-    while (!tryAcquire()) {
+    while (!MetaFile.tryCreate(spark, root, LockFile)) {
       attempts += 1
       // a crashed declarer's lock must not brick the registry forever.
       // Break protocol (review r19): judge staleness on the path,

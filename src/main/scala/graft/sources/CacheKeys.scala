@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.io.File
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.security.MessageDigest
 
 /** Write-once derived layouts (cell tablets, margin caches, snapshot
@@ -13,7 +15,12 @@ import java.security.MessageDigest
   *     regenerated source gets a fresh root, so stale contents are
   *     never reused.
   *   - **Lock.** Builds run under one reentrant JVM lock, so a builder
-  *     may build another layout inside its own build.
+  *     may build another layout inside its own build. Inside it, each
+  *     root's build also holds an OS file lock on the sibling
+  *     `<root>.lock`, so JVMs that share `java.io.tmpdir` build a root
+  *     once: a second process waits for the first and then finds the
+  *     marker. The OS drops the lock when its process dies, so a crash
+  *     never leaves it held.
   *   - **Marker written last.** A layout is complete when its root
   *     holds the [[Marker]] file, created only after `build` returns.
   *     Sidecars, commit logs and join declarations are written inside
@@ -58,12 +65,19 @@ object CacheKeys {
   def writeOnceAt(root: String)(build: String => Unit): String = {
     val marker = new File(root, Marker)
     if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        delete(new File(root))
-        build(root)
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
+      val lockFile = Paths.get(s"$root.lock")
+      Files.createDirectories(lockFile.toAbsolutePath.getParent)
+      val lock = FileChannel.open(lockFile,
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        lock.lock()
+        if (!marker.exists()) {
+          delete(new File(root))
+          build(root)
+          marker.getParentFile.mkdirs()
+          marker.createNewFile()
+        }
+      } finally lock.close()
     }
     root
   }

@@ -364,10 +364,7 @@ object Fits {
     }.count() // materialize the write
     // part-count manifest: read() validates the directory holds
     // exactly this many parts, so a torn/stale directory fails loudly
-    val mOut = driverFs.create(new Path(path, ManifestFile), true)
-    try mOut.write(nParts.toString.getBytes(StandardCharsets.US_ASCII))
-    finally mOut.close()
-    ()
+    MetaFile.replace(df.sparkSession, path, ManifestFile, nParts.toString)
   }
 
   private val ManifestFile = "_FITS_PARTS"
@@ -562,13 +559,8 @@ object Fits {
     val fs = FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val nFound = fs.globStatus(new Path(path, "part-*.fits")).length
-    val manifest = new Path(path, ManifestFile)
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      val expected = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim.toInt
-      finally in.close()
-      require(nFound == expected,
+    MetaFile.read(spark, path, ManifestFile).map(_.trim.toInt).foreach {
+      expected => require(nFound == expected,
         s"FITS import: $path holds $nFound part files but the write " +
           s"manifest says $expected — torn or stale export; re-run " +
           "Fits.write")

@@ -69,7 +69,7 @@ object MarginCache {
       c == '_' || c == '-'), s"table must be a plain name: '$table'")
     val path = s"$root/$table.parquet"
     val f = fsFor(spark, path)
-    val isSnapshot = f.exists(new Path(path, "_COMMITS"))
+    val isSnapshot = Snapshots.isSnapshot(spark, path)
 
     def writeLayout(df: DataFrame, out: String): Unit =
       if (clustered)

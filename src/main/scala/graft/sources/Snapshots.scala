@@ -16,8 +16,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     snap=2/…parquet
   *     _COMMITS            append-only id log; LAST line = head
   *
-  * - A writer stages `snap=N` fully, then commits by REWRITING
-  *   `_COMMITS` via temp-file + atomic rename. A torn write leaves a
+  * - A writer stages `snap=N` fully, then commits by replacing
+  *   `_COMMITS` ([[MetaFile.replace]]). A torn write leaves a
   *   `snap=` directory that no reader ever lists (readers trust only
   *   the log), so a killed job can never surface partial data — the
   *   same reader-trusts-log discipline as Delta/Iceberg, reduced to
@@ -26,10 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   on the driver), then scan exactly the committed directories:
   *   time travel (`asOf`) is directory selection, not data filtering,
   *   so a historical read touches only the bytes that existed then.
-  * - Single-writer is enforced with an atomic `_LOCK` create (local
-  *   FS / HDFS atomic-create semantics; object stores need an
-  *   external lock service — documented limitation, same as the
-  *   reference's flock-based locking).
+  * - Single-writer is enforced with an exclusive `_LOCK` create
+  *   ([[MetaFile.tryCreate]]; like the reference's flock-based
+  *   locking, it needs a file system that can create exclusively).
   * - MULTI-writer is available through the optimistic API
   *   ([[appendOptimistic]]/[[deleteOptimistic]]): heavy data writes
   *   stage unlocked into `_staging/`, commits serialize through a
@@ -124,15 +123,13 @@ object Snapshots {
     }
   }
 
+  /** True when `path` holds a snapshot table (it has a commit log). */
+  def isSnapshot(spark: SparkSession, path: String): Boolean =
+    fs(spark, path).exists(new Path(path, CommitLog))
+
   /** Committed entries, oldest first (empty if table absent). */
-  def entries(spark: SparkSession, path: String): Seq[Entry] = {
-    val f = fs(spark, path)
-    val log = new Path(path, CommitLog)
-    if (!f.exists(log)) Seq.empty
-    else {
-      val in = f.open(log)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  def entries(spark: SparkSession, path: String): Seq[Entry] =
+    MetaFile.read(spark, path, CommitLog).fold(Seq.empty[Entry]) { text =>
       // S:/F: metadata fields are ADVISORY: a malformed or corrupt
       // field (hand-edited log, future format) drops silently and the
       // directory just isn't pruned — only the id itself is load-
@@ -182,7 +179,6 @@ object Snapshots {
           raw = Some(l))
       }.toSeq
     }
-  }
 
   /** Committed snapshot ids, oldest first (empty if table absent). */
   def committed(spark: SparkSession, path: String): Seq[Long] =
@@ -192,46 +188,27 @@ object Snapshots {
   def head(spark: SparkSession, path: String): Option[Long] =
     committed(spark, path).lastOption
 
-  /** Atomic lock acquisition attempt (create-exclusive). Hadoop's
-    * LOCAL filesystem create(overwrite=false) is exists-check-then-
-    * create — NOT atomic (two same-ms writers both pass the check;
-    * caught by JoinRegistry's concurrency spec, review r19) — so the
-    * `file` scheme goes through java.nio createFile (O_CREAT|O_EXCL).
-    * HDFS create(false) IS atomic at the namenode. Object stores need
-    * an external lock service, as [[withLock]] documents. */
-  private def tryAcquire(f: FileSystem, path: String): Boolean = {
-    val lock = new Path(path, Lock)
-    if (f.getScheme == "file")
-      try {
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(
-          f.makeQualified(lock).toUri.getPath))
-        true
-      } catch { case _: java.io.IOException => false }
-    else
-      try { f.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-  }
-
   private def withLock[T](spark: SparkSession, path: String)(body: => T): T = {
     val f = fs(spark, path)
     f.mkdirs(new Path(path))
-    // single-writer: atomic create fails if another writer holds it
-    if (!tryAcquire(f, path)) throw new IllegalStateException(
-      s"snapshot table $path is locked by another writer ($Lock " +
-        "exists); the reference is single-writer multi-reader, " +
-        "and so is this layout")
+    if (!MetaFile.tryCreate(spark, path, Lock))
+      throw new IllegalStateException(s"snapshot table $path is locked " +
+        s"by another writer ($Lock exists); the reference is " +
+        "single-writer multi-reader, and so is this layout")
     try body finally f.delete(new Path(path, Lock), false)
   }
 
+  /** Replace the log with `all`. It is read unlocked by every reader
+    * and by deleteOptimistic's phase-1 validation, so it must never be
+    * absent mid-commit: a concurrent entries() would see an empty table
+    * (review r18: a valid delete could spuriously fail 'basedOn was
+    * never committed'). */
   private def commit(spark: SparkSession, path: String,
-                     all: Seq[Entry]): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(path, s"$CommitLog.tmp")
-    val o = f.create(tmp, true)
+                     all: Seq[Entry]): Unit =
     // carried-over entries re-emit their ORIGINAL line verbatim:
     // rendering from the parsed Entry would erase any field a newer
     // writer recorded and this version ignores (review r20)
-    try o.write(all.map { e =>
+    MetaFile.replace(spark, path, CommitLog, all.map { e =>
       e.raw.getOrElse(
         s"${e.id}" + (if (e.isBase) " B" else "") +
           e.tag.map(t => s" T:$t").getOrElse("") +
@@ -244,33 +221,7 @@ object Snapshots {
             val tg = b.tag.map(t => s"$t:").getOrElse("")
             s" F:$c:${b.m}:${b.k}:$tg${b.hex}"
           }.mkString)
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally o.close()
-    // ATOMIC replace, not delete-then-rename: the log is read
-    // UNLOCKED by every reader and by deleteOptimistic's phase-1
-    // validation, so a window where _COMMITS does not exist would
-    // make a concurrent entries() see an empty table mid-commit
-    // (review r18: a valid delete could spuriously fail 'basedOn was
-    // never committed'). Local paths go through POSIX rename(2)
-    // (java.nio ATOMIC_MOVE — Hadoop's local FileSystem/FileContext
-    // refuse to overwrite); remote filesystems through FileContext's
-    // OVERWRITE rename (HDFS implements it atomically).
-    val dst = new Path(path, CommitLog)
-    // branch on the RESOLVED filesystem, not the raw URI: a schemeless
-    // path resolves to fs.defaultFS, which on a cluster is NOT the
-    // local filesystem a java.nio move could reach (review r18)
-    if (f.getScheme == "file")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        f.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
+    }.mkString("", "\n", "\n"))
 
   /** Per-column [min, max] of the WRITTEN snapshot directory — the
     * zone map [[readPruned]] consumes. Computed by reading the staged
@@ -715,28 +666,8 @@ object Snapshots {
 
   /** Table-lifetime optimistic-commit counters: (lock retries,
     * conflict aborts). (0,0) when no optimistic writer ever ran. */
-  def ocStats(spark: SparkSession, path: String): (Long, Long) = {
-    val f = fs(spark, path)
-    val p = new Path(path, OcStats)
-    // lock-free monitoring read racing bumpOcStats' delete+rename:
-    // exists() can pass and open() still miss the file — retry once
-    // (the swap is microseconds), then report zeros rather than crash
-    // a status command over a counter file
-    for (_ <- 0 until 2) {
-      try {
-        return readOcStats(f, p)
-      } catch { case _: java.io.IOException => Thread.sleep(20) }
-    }
-    (0L, 0L)
-  }
-
-  /** (retries, aborts) of the counter file `p`; (0, 0) when absent. */
-  private def readOcStats(f: FileSystem, p: Path): (Long, Long) =
-    if (!f.exists(p)) (0L, 0L)
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  def ocStats(spark: SparkSession, path: String): (Long, Long) =
+    MetaFile.read(spark, path, OcStats).fold((0L, 0L)) { text =>
       def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
         .map(_.group(1).toLong).getOrElse(0L)
       (n("retries"), n("aborts"))
@@ -744,27 +675,21 @@ object Snapshots {
 
   /** Accumulate counters; caller MUST hold the writer lock (the
     * read-modify-write below is only safe serialized). */
-  private def bumpOcStats(f: FileSystem, path: String,
+  private def bumpOcStats(spark: SparkSession, path: String,
                           retries: Long, aborts: Long): Unit = {
-    val p = new Path(path, OcStats)
-    val (r0, a0) = readOcStats(f, p)
-    val tmp = new Path(path, s"$OcStats.tmp")
-    val o = f.create(tmp, true)
-    try o.write(s"retries:${r0 + retries}\naborts:${a0 + aborts}\n"
-      .getBytes("UTF-8"))
-    finally o.close()
-    if (f.exists(p)) f.delete(p, false)
-    require(f.rename(tmp, p), "_OC_STATS rename failed")
+    val (r0, a0) = ocStats(spark, path)
+    MetaFile.replace(spark, path, OcStats,
+      s"retries:${r0 + retries}\naborts:${a0 + aborts}\n")
   }
 
   /** Acquire the writer lock with bounded retry (the optimistic
     * writers' acquisition mode — their critical sections are
     * milliseconds, so contention resolves by waiting, not failing).
     * Returns the number of retries eaten. */
-  private def acquireRetrying(f: FileSystem, path: String,
+  private def acquireRetrying(spark: SparkSession, path: String,
                               maxRetries: Int, backoffMs: Long): Int = {
     var waits = 0
-    while (!tryAcquire(f, path)) {
+    while (!MetaFile.tryCreate(spark, path, Lock)) {
       waits += 1
       if (waits > maxRetries) throw new IllegalStateException(
         s"could not acquire writer lock at $path after $maxRetries " +
@@ -796,14 +721,14 @@ object Snapshots {
     df.write.mode("overwrite").parquet(stage) // heavy write: UNLOCKED
     // same bytes after rename
     val (st, bl) = dirMeta(spark, stage, statsCols, bloomCols)
-    val waits = acquireRetrying(f, path, maxRetries, backoffMs)
+    val waits = acquireRetrying(spark, path, maxRetries, backoffMs)
     try {
       val prior = entries(spark, path)
       val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
       promoteStaging(f, path, stage, id)
       commit(spark, path, prior :+
         Entry(id, isBase = false, stats = st, blooms = bl))
-      bumpStatsAfterCommit(f, path, waits)
+      bumpStatsAfterCommit(spark, path, waits)
       OptimisticCommit(id, waits)
     } finally f.delete(new Path(path, Lock), false)
   }
@@ -925,8 +850,8 @@ object Snapshots {
       // counter IO (review r18) — a short lock budget, everything
       // swallowed (counters are monitoring, undercounting is fine)
       try {
-        val w = acquireRetrying(f, path, maxRetries = 100, backoffMs)
-        try bumpOcStats(f, path, retries = w.toLong, aborts = 1L)
+        val w = acquireRetrying(spark, path, maxRetries = 100, backoffMs)
+        try bumpOcStats(spark, path, retries = w.toLong, aborts = 1L)
         finally f.delete(new Path(path, Lock), false)
       } catch {
         case scala.util.control.NonFatal(e) => System.err.println(
@@ -936,7 +861,7 @@ object Snapshots {
     }
     val preChecked = pre.map(_.id).toSet
     // phase 2, LOCKED: only commits that landed since the pre-check
-    val waits = acquireRetrying(f, path, maxRetries, backoffMs)
+    val waits = acquireRetrying(spark, path, maxRetries, backoffMs)
     try {
       val prior = entries(spark, path)
       // the full-range completeness re-check matters here: a compact +
@@ -947,7 +872,7 @@ object Snapshots {
       val overlap = overlapIn(fresh)
       if (overlap.nonEmpty) {
         // same masking rule: counter IO must not replace the abort
-        try bumpOcStats(f, path, retries = waits.toLong, aborts = 1L)
+        try bumpOcStats(spark, path, retries = waits.toLong, aborts = 1L)
         catch {
           case scala.util.control.NonFatal(e) => System.err.println(
             s"[snapshots] WARN: abort-counter bump skipped at $path: $e")
@@ -957,7 +882,7 @@ object Snapshots {
       val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
       promoteStaging(f, path, stage, id)
       commit(spark, path, prior :+ Entry(id, isBase = false))
-      bumpStatsAfterCommit(f, path, waits)
+      bumpStatsAfterCommit(spark, path, waits)
       OptimisticCommit(id, waits)
     } finally f.delete(new Path(path, Lock), false)
   }
@@ -965,9 +890,9 @@ object Snapshots {
   /** Post-commit counter bump: the commit has already succeeded, so a
     * counter IO failure must NEVER surface as a commit error (the
     * caller would retry and double-append). Log and swallow. */
-  private def bumpStatsAfterCommit(f: FileSystem, path: String,
+  private def bumpStatsAfterCommit(spark: SparkSession, path: String,
                                    waits: Int): Unit =
-    try bumpOcStats(f, path, retries = waits.toLong, aborts = 0L)
+    try bumpOcStats(spark, path, retries = waits.toLong, aborts = 0L)
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(

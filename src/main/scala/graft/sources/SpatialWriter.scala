@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.MetaFile.{jsonLine, num, str}
 import graft.spatial.SkyPix
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -23,18 +24,6 @@ object SpatialWriter {
     * consumers must be able to verify the contract at read time
     * instead of silently dropping pairs on a mismatched radius. */
   private val MarginMetaFile = "_MARGIN"
-
-  private def writeMarginMeta(spark: org.apache.spark.sql.SparkSession,
-                              path: String, marginDeg: Double,
-                              level: Int): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, MarginMetaFile), true)
-    try out.write(s"""{"marginDeg":$marginDeg,"level":$level}"""
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Sidecar recording a layout's coordinate columns + cell level —
     * what a BOUNDED read needs to enumerate prunable cells and build
@@ -77,56 +66,31 @@ object SpatialWriter {
           "every row; rewrite the layout instead")
     }
 
-  private def writeSpatialMeta(spark: org.apache.spark.sql.SparkSession,
-                               path: String, lonCol: String, latCol: String,
-                               level: Int): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, SpatialMetaFile), true)
-    try out.write(
-      s"""{"lonCol":"$lonCol","latCol":"$latCol","level":$level}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The sidecars a layout write ends with, as (file, text). They are
+    * built before any data lands, so a column name a sidecar cannot
+    * hold ([[MetaFile.plain]]) is refused first. */
+  private def sidecars(lonCol: String, latCol: String, level: Int,
+                       margin: Option[Double]): Seq[(String, String)] =
+    (SpatialMetaFile ->
+      jsonLine("lonCol" -> lonCol, "latCol" -> latCol, "level" -> level)) +:
+      margin.toSeq.map(m =>
+        MarginMetaFile -> jsonLine("marginDeg" -> m, "level" -> level))
 
   /** (lonCol, latCol, level) of the layout at `path`, when it was
     * written by a sidecar-aware SpatialWriter. */
   def spatialMeta(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Option[(String, String, Int)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path, SpatialMetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val lon = """"lonCol":"([^"]+)"""".r.findFirstMatchIn(text)
-      val lat = """"latCol":"([^"]+)"""".r.findFirstMatchIn(text)
-      val lvl = """"level":([0-9]+)""".r.findFirstMatchIn(text)
-      for (lo <- lon; la <- lat; lv <- lvl)
-        yield (lo.group(1), la.group(1), lv.group(1).toInt)
-    }
-  }
+                  path: String): Option[(String, String, Int)] =
+    MetaFile.read(spark, path, SpatialMetaFile).flatMap(t =>
+      for (lo <- str("lonCol", t); la <- str("latCol", t);
+           lv <- num("level", t)) yield (lo, la, lv.toInt))
 
   /** (marginDeg, level) the layout at `path` was written with, if it
     * carries margin replicas. */
   def marginMeta(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Option[(Double, Int)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path, MarginMetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val m = """"marginDeg":([-0-9.eE]+)""".r.findFirstMatchIn(text)
-      val l = """"level":([0-9]+)""".r.findFirstMatchIn(text)
-      for (mm <- m; ll <- l) yield (mm.group(1).toDouble, ll.group(1).toInt)
-    }
-  }
+                 path: String): Option[(Double, Int)] =
+    MetaFile.read(spark, path, MarginMetaFile).flatMap(t =>
+      for (m <- num("marginDeg", t); l <- num("level", t))
+        yield (m.toDouble, l.toInt))
 
   /** Re-write the `_MARGIN` sidecar at `path` with the SOURCE SNAPSHOT
     * id the cache was built from (`AdminCli make-cache
@@ -140,33 +104,17 @@ object SpatialWriter {
       throw new IllegalStateException(
         s"no $MarginMetaFile sidecar at $path to stamp — the margin " +
           "layout write must complete first"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, MarginMetaFile), true)
-    try out.write(
-      s"""{"marginDeg":$m,"level":$l,"sourceSnap":$snapId}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+    MetaFile.replace(spark, path, MarginMetaFile,
+      jsonLine("marginDeg" -> m, "level" -> l, "sourceSnap" -> snapId))
   }
 
   /** The source snapshot id stamped into the `_MARGIN` sidecar, when
     * the layout is a `--from-snapshot` cache (None for plain-table
     * margin layouts, which are the table itself). */
   def marginSourceSnap(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Option[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path, MarginMetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      """"sourceSnap":([0-9]+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-    }
-  }
+                       path: String): Option[Long] =
+    MetaFile.read(spark, path, MarginMetaFile)
+      .flatMap(num("sourceSnap", _)).map(_.toLong)
 
   /** Assert the margin layout at `path` is closure-complete for a
     * radius-`radiusDeg` join: strip replication only copies rows whose
@@ -253,6 +201,7 @@ object SpatialWriter {
             mode: SaveMode = SaveMode.Overwrite): Unit = {
     requireAppendCompatible(df.sparkSession, path, lonCol, latCol, level,
       mode, margin)
+    val meta = sidecars(lonCol, latCol, level, margin)
     // the sort LEADS with the partition key: a planned write needs
     // its input ordered by `cell`, and when the child's order does not
     // start with it Spark inserts Sort(cell) on top and drops a bare
@@ -263,8 +212,8 @@ object SpatialWriter {
       .write.mode(mode)
       .partitionBy("cell")
       .parquet(path)
-    writeSpatialMeta(df.sparkSession, path, lonCol, latCol, level)
-    margin.foreach(m => writeMarginMeta(df.sparkSession, path, m, level))
+    meta.foreach { case (file, text) =>
+      MetaFile.replace(df.sparkSession, path, file, text) }
   }
 
   /** Write `df` as PLAIN parquet clustered by cell (`cell` stays a
@@ -284,13 +233,14 @@ object SpatialWriter {
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
     requireAppendCompatible(df.sparkSession, path, lonCol, latCol, level,
       mode, margin)
+    val meta = sidecars(lonCol, latCol, level, margin)
     withCellColumns(df, lonCol, latCol, level, margin)
       .repartitionByRange(col("cell"))
       .sortWithinPartitions(col("cell"), col(latCol), col(lonCol))
       .write.mode(mode)
       .parquet(path)
-    writeSpatialMeta(df.sparkSession, path, lonCol, latCol, level)
-    margin.foreach(m => writeMarginMeta(df.sparkSession, path, m, level))
+    meta.foreach { case (file, text) =>
+      MetaFile.replace(df.sparkSession, path, file, text) }
   }
 
   /** Footprint read of a [[write]] layout: only the `cell=`

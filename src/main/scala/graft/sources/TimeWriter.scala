@@ -26,20 +26,10 @@ object TimeWriter {
   /** (tsCol, granularity) of the layout at `path`, when written by a
     * sidecar-aware TimeWriter. */
   def temporalMeta(spark: SparkSession,
-                   path: String): Option[(String, String)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path, TemporalMetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val ts = """"tsCol":"([^"]+)"""".r.findFirstMatchIn(text)
-      val g = """"granularity":"([^"]+)"""".r.findFirstMatchIn(text)
-      for (t <- ts; gg <- g) yield (t.group(1), gg.group(1))
-    }
-  }
+                   path: String): Option[(String, String)] =
+    MetaFile.read(spark, path, TemporalMetaFile).flatMap(t =>
+      for (ts <- MetaFile.str("tsCol", t);
+           g <- MetaFile.str("granularity", t)) yield (ts, g))
 
   def write(df: DataFrame, tsCol: String, granularity: String, path: String,
             mode: SaveMode = SaveMode.Overwrite): Unit = {
@@ -54,6 +44,9 @@ object TimeWriter {
         s"appending to $path with temporal layout ($tsCol, $granularity)" +
           s" but it was written with ($t, $g) — mixed bucket keys would" +
           " make bounded reads silently drop rows; rewrite the layout") }
+    // built first, so a column name the sidecar cannot hold is refused
+    // before any data lands
+    val meta = MetaFile.jsonLine("tsCol" -> tsCol, "granularity" -> granularity)
     // explicit task count and a key-first sort: the SpatialWriter.write
     // rules (an AQE-coalesced one-task write; a planned write that
     // drops a sort not led by the partition key)
@@ -64,15 +57,7 @@ object TimeWriter {
       .write.mode(mode)
       .partitionBy("t_bucket")
       .parquet(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), df.sparkSession.sparkContext
-        .hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, TemporalMetaFile), true)
-    try out.write(
-      s"""{"tsCol":"$tsCol","granularity":"$granularity"}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+    MetaFile.replace(df.sparkSession, path, TemporalMetaFile, meta)
   }
 
   /** Time-bounded read: the bucket predicate prunes directories, the

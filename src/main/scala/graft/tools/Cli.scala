@@ -253,6 +253,7 @@ object AdminCli {
 
   private[tools] def describe(root: String): Seq[(String, String, Long, Long)] = {
     val fs = fsFor(root)
+    lazy val spark = GraftSession.local()
     val kids = Option(fs.listStatus(new Path(root))).getOrElse(Array.empty)
     kids.toSeq.filterNot(_.getPath.getName.startsWith("_")).map { st =>
       val name = st.getPath.getName
@@ -261,7 +262,7 @@ object AdminCli {
         else {
           val sum = fs.getContentSummary(st.getPath)
           val k =
-            if (fs.exists(new Path(st.getPath, "_COMMITS"))) "snapshot"
+            if (Snapshots.isSnapshot(spark, st.getPath.toString)) "snapshot"
             else if (Option(fs.globStatus(new Path(st.getPath, "cell=*")))
               .exists(_.nonEmpty)) "spatial"
             else "plain"

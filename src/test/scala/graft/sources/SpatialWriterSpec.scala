@@ -175,6 +175,17 @@ class SpatialWriterSpec extends SpecBase {
       SkyPix.cell(col("lon"), col("lat"), 6) =!= col("cell")).count()
     assert(misplaced == 0)
   }
+
+  test("a coordinate column name the sidecar cannot hold is refused first") {
+    // the _SPATIAL reader stops at the first quote, so ra"x would read
+    // back as ra: the write must refuse it before any data lands
+    val path = Files.createTempDirectory("graft_sw_name").toString + "/cat"
+    val quoted = cat.withColumnRenamed("lon", "ra\"x")
+    intercept[IllegalArgumentException] {
+      SpatialWriter.write(quoted, "ra\"x", "lat", level = 3, path = path)
+    }
+    assert(!new java.io.File(path).exists(), "nothing may be written")
+  }
 }
 
 /** Data files of a parquet layout whose rows, in file order, are not

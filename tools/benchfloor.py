@@ -5,7 +5,7 @@ The round-level gate (BASELINE.md) only bounds the TOTAL; at ~193
 queries x ~1 s/query of allowance, a single line can regress 10x and
 hide in the sum. This tool catches regressions BY LINE:
 
-  # after a trusted local bench run (writes bench_queries.json):
+  # after a trusted local bench run (writes bench_queries_c<cpus>.json):
   python3 tools/benchfloor.py gen      # -> docs/BENCH_FLOORS.json
 
   # after any later bench run:
@@ -19,15 +19,19 @@ sibling-load variance on ~1-2 s lines inside the full-bench JVM, so
 treat single-line flags as "run a graft.tools.Profile A/B", not
 "guilty").
 
+The bench file read is the one for SPARK_GRAFT_CPUS cores (default 4,
+the core count graft.Bench runs with), so set it as for the bench run.
+
 Dev-side only (python, no Spark); not part of the shipped library.
 """
 import json
+import os
 import sys
 
 FLAG_RATIO = 1.5
 ABS_SLACK = 0.3  # seconds
 
-BENCH = "bench_queries.json"
+BENCH = f"bench_queries_c{os.environ.get('SPARK_GRAFT_CPUS', '4').strip()}.json"
 FLOORS = "docs/BENCH_FLOORS.json"
 
 
